@@ -225,8 +225,12 @@ object Bench {
     // SPARK_GRAFT_STREAM_PARTS is a dev-only measurement knob (round 16,
     // verdict #6: quantify the SS stateful-agg exchange framing vs replay
     // parallelism); the driver never sets it, so artifacts keep 8.
-    val streamParts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt).getOrElse(8)
+    val streamParts = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse {
+        System.err.println(s"[bench] SPARK_GRAFT_STREAM_PARTS=$v is not a positive integer; using 8")
+        8
+      }
+    }.getOrElse(8)
     val rw = GraftEngine.open(
       ConnOptions(streamShufflePartitions = Some(streamParts)), Some(spark))
     try {

@@ -23,6 +23,23 @@ final class GraftEngine(val spark: SparkSession,
   private val mvs = mutable.LinkedHashMap[(String, String), MaterializedView]()
   private val subscriptionSources = mutable.LinkedHashMap[String, (String, String)]()
 
+  /** Driver threads FLUSH refreshes MVs on: one per driver core, daemon,
+    * started on demand and retired when idle; shut down by [[close]]. */
+  private val refreshPool = {
+    val n = Runtime.getRuntime.availableProcessors()
+    val ids = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = new java.util.concurrent.ThreadPoolExecutor(n, n,
+      30L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-refresh-${ids.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
   /** Persistent changelog location for one MV (None = ephemeral). */
   private[engine] def changelogDirFor(viewName: String): Option[String] =
     options.dataDir.map(d => s"$d/changelog/$viewName")
@@ -397,17 +414,81 @@ final class GraftEngine(val spark: SparkSession,
   }
 
   /** K5 — the FLUSH consistency barrier: buffered rows become micro-batches,
-    * then every MV maintainer drains (streaming) or re-evaluates (batch), in
-    * creation order so MV-on-MV chains see their upstream first. */
+    * then every MV maintainer drains (streaming) or re-evaluates (batch).
+    *
+    * MVs refresh in dependency order, not one after another: an MV starts
+    * as soon as every MV it reads ([[MaterializedView.flushUpstreams]]) has
+    * refreshed, so MV-on-MV chains see their upstream's epoch first, while
+    * MVs that do not read each other refresh concurrently on the engine's
+    * driver pool. Each refresh runs with this thread's active session and
+    * Spark local properties (job group, `graft.phase`, caller tags).
+    *
+    * Returns only after every started refresh has settled. A failed MV's
+    * dependents do not refresh this barrier (the next one catches them
+    * up); MVs independent of it do, and the first failure in creation
+    * order is rethrown. An interrupt of this thread is forwarded to the
+    * running refreshes, skips those not yet started, and surfaces as an
+    * InterruptedException once the running ones have settled. */
   def flush(): Unit = {
     liveTables.values.foreach(_.flushBuffer())
     // table changelogs emit BEFORE any maintainer runs: a cascade MV's
     // epoch consumes exactly the ops this barrier makes visible
     liveTables.values.foreach(_.emitChangelog())
-    mvs.values.foreach(_.refresh())
+    refreshMvs()
     // PK version-history compaction (threshold + doubling gated) runs
     // last: physically invisible, so maintainers never see it
     liveTables.values.foreach(_.maybeCompact())
+  }
+
+  /** The FLUSH refresh scheduler (see [[flush]]). Bookkeeping stays on
+    * the calling thread: workers only run refreshes and report back, and
+    * every submission captures this thread's session and local
+    * properties. Edges come from a word-boundary name match
+    * ([[MaterializedView.flushUpstreams]]), which can over-match, so they
+    * point only to EARLIER-created MVs — the order the serial barrier
+    * used — and the graph stays acyclic. */
+  private def refreshMvs(): Unit = {
+    val order = mvs.values.toIndexedSeq
+    val pos = order.zipWithIndex.toMap
+    val ups = order.indices.map(i =>
+      order(i).flushUpstreams.flatMap(pos.get).filter(_ < i).distinct)
+    val downs = order.indices.map(u => order.indices.filter(ups(_).contains(u)))
+    val waiting = ups.map(_.size).toArray
+    val failed = new Array[Throwable](order.length)
+    val settled = new java.util.concurrent.LinkedBlockingQueue[(Int, Throwable)]()
+    val live = mutable.LinkedHashMap[Int, RefreshTask]()
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    def launch(i: Int): Unit = {
+      val task = new RefreshTask(order(i), err => settled.put((i, err)))
+      live(i) = task
+      try org.apache.spark.sql.execution.SQLExecution
+        .withThreadLocalCaptured(session, refreshPool)(task.run())
+        // an escape from the capture wrapper itself still settles the task
+        .whenComplete((_, err) => if (err != null) task.settle(err))
+      catch { case t: Throwable => task.settle(t) }
+    }
+    order.indices.filter(waiting(_) == 0).foreach(launch)
+    var interrupted = false
+    while (live.nonEmpty) {
+      try {
+        val (i, err) = settled.take()
+        live -= i
+        if (err != null) failed(i) = err
+        else if (!interrupted) downs(i).foreach { d =>
+          waiting(d) -= 1
+          if (waiting(d) == 0) launch(d)
+        }
+      } catch { case _: InterruptedException =>
+        interrupted = true
+        live.toSeq.foreach { case (i, task) => if (task.cancel()) live -= i }
+      }
+    }
+    if (interrupted) {
+      val e = new InterruptedException("FLUSH interrupted")
+      failed.filter(_ != null).foreach(e.addSuppressed)
+      throw e
+    }
+    failed.find(_ != null).foreach(t => throw t)
   }
 
   // ---- MVs + subscriptions (D4–D8, C9/C10) --------------------------------
@@ -503,29 +584,47 @@ final class GraftEngine(val spark: SparkSession,
     * same-named columns/strings, which is harmless for demotion decisions
     * (worst case: batch re-run) but NOT for reader-stream binding, where a
     * spurious match would buffer a snapshot copy + every future delta for a
-    * reader that never consumes them. */
-  private def statementRelations(stmt: String): Option[Set[String]] =
-    try Some(spark.sessionState.sqlParser.parsePlan(rewrite(stmt)).collect {
-      case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-        r.multipartIdentifier.mkString(".").toLowerCase
-    }.toSet)
+    * reader that never consumes them. `deep` also collects relations read
+    * inside subquery expressions and CTE bodies, which `collect` skips
+    * (Spark keeps CTE definitions as inner children of `UnresolvedWith`). */
+  private def statementRelations(stmt: String, deep: Boolean = false): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+    def relations(p: LogicalPlan): Seq[String] =
+      if (!deep) p.collect { case r: UnresolvedRelation => r.multipartIdentifier.mkString(".") }
+      else p.collectWithSubqueries {
+        case r: UnresolvedRelation => Seq(r.multipartIdentifier.mkString("."))
+        case w: UnresolvedWith => w.cteRelations.flatMap(c => relations(c._2))
+      }.flatten
+    try Some(relations(spark.sessionState.sqlParser.parsePlan(rewrite(stmt)))
+      .map(_.toLowerCase).toSet)
     catch { case _: Throwable => None }
-
-  /** MVs the statement reads (parsed-plan relation references; word-boundary
-    * fallback for unparsable text), excluding the asking MV itself. Used by
-    * the changelog-cascade admission check. */
-  private[engine] def referencedMvs(stmt: String,
-                                    excluding: (String, String)): Seq[MaterializedView] = {
-    val rels = statementRelations(stmt)
-    mvs.collect { case ((sn, vn), m) if (sn, vn) != excluding &&
-      (rels match {
-        case Some(rs) =>
-          Seq(m.viewName, s"$sn.$vn", vn).exists(s => rs.contains(s.toLowerCase))
-        case None =>
-          Seq(m.viewName, s"$sn.$vn", vn).exists(n => referencesName(stmt, n))
-      }) => m
-    }.toSeq
   }
+
+  /** MVs the statement reads (parsed-plan relation references, subqueries
+    * and CTE bodies included; word-boundary fallback for unparsable text),
+    * excluding the asking MV itself. Used by the changelog-cascade
+    * admission check and the per-mode maintainers. */
+  private[engine] def referencedMvs(stmt: String,
+                                    excluding: (String, String)): Seq[MaterializedView] =
+    statementRelations(stmt, deep = true) match {
+      case Some(rs) => mvs.collect { case ((sn, vn), m) if (sn, vn) != excluding &&
+        Seq(m.viewName, s"$sn.$vn", vn).exists(s => rs.contains(s.toLowerCase)) => m
+      }.toSeq
+      case None => mentionedMvs(stmt, excluding)
+    }
+
+  /** MVs whose (mangled, qualified or bare) name appears in `stmt` as a
+    * whole word, excluding the asking MV itself. Over-matches on purpose:
+    * a mention anywhere counts — subqueries and CTE bodies included — and
+    * so do same-named columns or strings. That is the side FLUSH ordering
+    * needs: a spurious edge only serializes two refreshes, a missing one
+    * lets a consumer read its upstream's previous epoch. */
+  private[engine] def mentionedMvs(stmt: String,
+                                   excluding: (String, String)): Seq[MaterializedView] =
+    mvs.collect { case ((sn, vn), m) if (sn, vn) != excluding &&
+      Seq(m.viewName, s"$sn.$vn", vn).exists(n => referencesName(stmt, n)) => m
+    }.toSeq
 
   /** Temporarily rebind live-table views — and the streaming faces of
     * append-only streaming MVs (MV-on-MV chains) — to their streaming
@@ -654,6 +753,44 @@ final class GraftEngine(val spark: SparkSession,
     }
     liveTables.values.foreach(_.cleanup())
     mvs.clear()
+    refreshPool.shutdown()
+  }
+}
+
+/** One MV's refresh within a FLUSH ([[GraftEngine.flush]]). [[settle]]
+  * reports the outcome (null = success) to the scheduler exactly once;
+  * [[cancel]] skips the refresh if it has not started and interrupts it
+  * while it runs. */
+private[engine] final class RefreshTask(m: MaterializedView, report: Throwable => Unit) {
+  private var started = false
+  private var runner: Thread = null
+  private var reported = false
+
+  def run(): Unit = {
+    val go = synchronized {
+      if (started) false else { started = true; runner = Thread.currentThread(); true }
+    }
+    if (go) {
+      var err: Throwable = null
+      try m.refresh() catch { case t: Throwable => err = t }
+      finally synchronized {
+        runner = null
+        // a forwarded interrupt belongs to this refresh alone: clear it
+        // before the pool thread moves on
+        Thread.interrupted()
+      }
+      settle(err)
+    }
+  }
+
+  def settle(err: Throwable): Unit =
+    if (synchronized { val first = !reported; reported = true; first }) report(err)
+
+  /** True when the refresh had not started: it never will, and counts as
+    * settled without a report. */
+  def cancel(): Boolean = synchronized {
+    if (!started) { started = true; reported = true; true }
+    else { if (runner != null) runner.interrupt(); false }
   }
 }
 

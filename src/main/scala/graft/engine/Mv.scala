@@ -510,7 +510,15 @@ final class MaterializedView private[engine](
     } finally sc.setLocalProperty("graft.phase", prev)
   }
 
+  /** MVs this statement may read, taken once at start: a FLUSH refreshes
+    * this MV only after all of them have settled. A word-boundary name
+    * match ([[GraftEngine.mentionedMvs]]) rather than the parsed plan's
+    * relations, so an MV read only inside a subquery or a CTE body is
+    * still an upstream. */
+  @volatile private[graft] var flushUpstreams: Seq[MaterializedView] = Nil
+
   private[engine] def start(): Unit = {
+    flushUpstreams = engine.mentionedMvs(stmt, excluding = (schemaName, name))
     recovering = changeLog.latestOffset > 0
     try startModes() finally recovering = false
   }
@@ -1052,10 +1060,10 @@ final class MaterializedView private[engine](
         (u, adds, dels, opsLocal)
       }
       parts.foreach { case (u, adds, dels, _) =>
-        adds.createOrReplaceTempView(s"__da_add_${u.viewName}")
-        tempViews += s"__da_add_${u.viewName}"
-        dels.createOrReplaceTempView(s"__da_del_${u.viewName}")
-        tempViews += s"__da_del_${u.viewName}"
+        adds.createOrReplaceTempView(epochView("da_add", u.viewName))
+        tempViews += epochView("da_add", u.viewName)
+        dels.createOrReplaceTempView(epochView("da_del", u.viewName))
+        tempViews += epochView("da_del", u.viewName)
         if (parts.size > 1 || nonLin(u)) {
           val cols = adds.columns.toIndexedSeq.map(col)
           // net the window per distinct row BEFORE reconstructing: exceptAll
@@ -1069,14 +1077,14 @@ final class MaterializedView private[engine](
           val addsNet = adds.exceptAll(dels)
           val delsNet = dels.exceptAll(adds)
           u.snap().select(cols: _*).exceptAll(addsNet).union(delsNet)
-            .createOrReplaceTempView(s"__da_old_${u.viewName}")
-          tempViews += s"__da_old_${u.viewName}"
+            .createOrReplaceTempView(epochView("da_old", u.viewName))
+          tempViews += epochView("da_old", u.viewName)
         }
       }
       val partials = parts.zipWithIndex.map { case ((u, adds, dels, _), i) =>
         def laterOld(sql: String): String =
           parts.drop(i + 1).foldLeft(sql) { case (s, (o, _, _, _)) =>
-            retarget(s, o.viewName, s"__da_old_${o.viewName}")
+            retarget(s, o.viewName, epochView("da_old", o.viewName))
           }
         if (nonLin(u)) {
           // aux-partial DIFFERENCE pair (round 11): the aggregate's child
@@ -1090,8 +1098,8 @@ final class MaterializedView private[engine](
           // node to restrict — ~one batch-shaped aux per SUBQUERY-side
           // epoch, while the fact side keeps its delta terms).
           val sqlNew = laterOld(cascadeStmt)
-          val sqlOld = retarget(sqlNew, u.viewName, s"__da_old_${u.viewName}")
-          if (!sqlOld.contains(s"__da_old_${u.viewName}"))
+          val sqlOld = retarget(sqlNew, u.viewName, epochView("da_old", u.viewName))
+          if (!sqlOld.contains(epochView("da_old", u.viewName)))
             throw new IllegalStateException(s"rebinding missed ${u.viewName}")
           def eval(sql: String, src: String): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
             if (aggOuterNonLinear.contains(u.viewName.toLowerCase)) {
@@ -1101,7 +1109,7 @@ final class MaterializedView private[engine](
             } else spark.sql(sql).queryExecution.analyzed
           val addAux = DeltaAgg.aux(spark, spec, eval(sqlNew, u.viewName))
           val delAux = DeltaAgg.aux(spark, spec,
-            eval(sqlOld, s"__da_old_${u.viewName}"))
+            eval(sqlOld, epochView("da_old", u.viewName)))
           (addAux, delAux)
         } else {
           def termSql(deltaView: String): String = {
@@ -1123,8 +1131,8 @@ final class MaterializedView private[engine](
               spec, spark.sql(termSql(view)).queryExecution.analyzed))
             else DeltaAgg.aux(spark, spec,
               spark.sql(termSql(view)).queryExecution.analyzed)
-          val addAux = buildTerm(s"__da_add_${u.viewName}", adds)
-          val delAux = buildTerm(s"__da_del_${u.viewName}", dels)
+          val addAux = buildTerm(epochView("da_add", u.viewName), adds)
+          val delAux = buildTerm(epochView("da_del", u.viewName), dels)
           (addAux, delAux)
         }
       }
@@ -1618,24 +1626,33 @@ final class MaterializedView private[engine](
   private[engine] def retarget(sql: String, from: String, to: String): String =
     sql.replaceAll(s"(?i)\\b${java.util.regex.Pattern.quote(from)}\\b", to)
 
+  /** Name of a private per-epoch view (`kind`: delta, cover, old, add/del
+    * sign slice) over `upstream`, scoped to THIS consumer: MVs over one
+    * source refresh concurrently within a FLUSH, and an upstream-only name
+    * would let one consumer rebind — or drop — another's view mid-epoch.
+    * The `_` joints leave no word boundary inside the name, so a later
+    * [[retarget]] pass never re-aims part of it. */
+  private[engine] def epochView(kind: String, upstream: String): String =
+    s"__${kind}_${viewName}__$upstream"
+
   private[engine] def cascadeTouchedKeys(
       changed: Seq[(MaterializedView.CascadeSrc, DataFrame)]): DataFrame = {
     import org.apache.spark.sql.functions.col
     val tempViews = scala.collection.mutable.ArrayBuffer[String]()
     timed("touched-keys")(try {
       changed.foreach { case (u, p) =>
-        val dv = s"__cascade_delta_${u.viewName}"
+        val dv = epochView("cascade_delta", u.viewName)
         p.createOrReplaceTempView(dv); tempViews += dv
         if (changed.size > 1) {
-          val cv = s"__cascade_cover_${u.viewName}"
+          val cv = epochView("cascade_cover", u.viewName)
           u.snap().unionByName(p).createOrReplaceTempView(cv); tempViews += cv
         }
       }
       boundedLocal(changed.map { case (u, _) =>
         val sql = changed.foldLeft(cascadeStmt) { case (s, (o, _)) =>
           if (o.viewName == u.viewName)
-            retarget(s, o.viewName, s"__cascade_delta_${o.viewName}")
-          else retarget(s, o.viewName, s"__cascade_cover_${o.viewName}")
+            retarget(s, o.viewName, epochView("cascade_delta", o.viewName))
+          else retarget(s, o.viewName, epochView("cascade_cover", o.viewName))
         }
         spark.sql(sql).select(keyCols.map(col): _*)
       }.reduce(_ union _).distinct())
@@ -2168,10 +2185,10 @@ final class MaterializedView private[engine](
       // current term position, OLD-snapshot views (current ⊖ Δ⁺ ⊎ Δ⁻)
       parts.foreach { case (u, adds, dels) =>
         def hinted(d: DataFrame) = if (joinHasJoin) broadcast(d) else d
-        hinted(adds).createOrReplaceTempView(s"__jc_add_${u.viewName}")
-        tempViews += s"__jc_add_${u.viewName}"
-        hinted(dels).createOrReplaceTempView(s"__jc_del_${u.viewName}")
-        tempViews += s"__jc_del_${u.viewName}"
+        hinted(adds).createOrReplaceTempView(epochView("jc_add", u.viewName))
+        tempViews += epochView("jc_add", u.viewName)
+        hinted(dels).createOrReplaceTempView(epochView("jc_del", u.viewName))
+        tempViews += epochView("jc_del", u.viewName)
         // OLD snapshots serve later terms (multi-source epochs) and the
         // restricted/plain difference term of a nonlinear-side source itself
         if (parts.size > 1 ||
@@ -2184,14 +2201,14 @@ final class MaterializedView private[engine](
           val addsNet = adds.exceptAll(dels)
           val delsNet = dels.exceptAll(adds)
           u.snap().select(cols: _*).exceptAll(addsNet).union(delsNet)
-            .createOrReplaceTempView(s"__jc_old_${u.viewName}")
-          tempViews += s"__jc_old_${u.viewName}"
+            .createOrReplaceTempView(epochView("jc_old", u.viewName))
+          tempViews += epochView("jc_old", u.viewName)
         }
       }
       val termFrames = parts.zipWithIndex.flatMap { case ((u, adds, dels), i) =>
         def laterOld(sql: String): String =
           parts.drop(i + 1).foldLeft(sql) { case (s, (o, _, _)) =>
-            retarget(s, o.viewName, s"__jc_old_${o.viewName}")
+            retarget(s, o.viewName, epochView("jc_old", o.viewName))
           }
         if (joinOuterNonLinear.contains(u.viewName.toLowerCase)) {
           // restricted-difference term for the outer join's null-padded
@@ -2204,15 +2221,15 @@ final class MaterializedView private[engine](
           // [[restrictOuterToDelta]] drops them up front, keeping the term
           // delta-proportional instead of a full re-evaluation.
           val sqlNew = laterOld(cascadeStmt)
-          val sqlOld = retarget(sqlNew, u.viewName, s"__jc_old_${u.viewName}")
-          if (!sqlOld.contains(s"__jc_old_${u.viewName}"))
+          val sqlOld = retarget(sqlNew, u.viewName, epochView("jc_old", u.viewName))
+          if (!sqlOld.contains(epochView("jc_old", u.viewName)))
             throw new IllegalStateException(s"rebinding missed ${u.viewName}")
           val payload = adds.unionByName(dels)
           val plus = restrictOuterToDelta(spark.sql(sqlNew), u.viewName, payload)
             .select(outCols.map(col): _*).withColumn("__d", lit(1L))
           lastOuterTermPlan = Some(plus.queryExecution.optimizedPlan.toString)
           val minus = restrictOuterToDelta(spark.sql(sqlOld),
-              s"__jc_old_${u.viewName}", payload)
+              epochView("jc_old", u.viewName), payload)
             .select(outCols.map(col): _*).withColumn("__d", lit(-1L))
           Seq(plus, minus)
         } else if (joinSubqNonLinear.contains(u.viewName.toLowerCase)) {
@@ -2225,8 +2242,8 @@ final class MaterializedView private[engine](
           // SUBQUERY-side epoch, while the outer source keeps its
           // delta-proportional terms.
           val sqlNew = laterOld(cascadeStmt)
-          val sqlOld = retarget(sqlNew, u.viewName, s"__jc_old_${u.viewName}")
-          if (!sqlOld.contains(s"__jc_old_${u.viewName}"))
+          val sqlOld = retarget(sqlNew, u.viewName, epochView("jc_old", u.viewName))
+          if (!sqlOld.contains(epochView("jc_old", u.viewName)))
             throw new IllegalStateException(s"rebinding missed ${u.viewName}")
           val plus = spark.sql(sqlNew)
             .select(outCols.map(col): _*).withColumn("__d", lit(1L))
@@ -2242,11 +2259,11 @@ final class MaterializedView private[engine](
               throw new IllegalStateException(s"rebinding missed ${u.viewName}")
             laterOld(reaimed)
           }
-          val plus  = spark.sql(termSql(s"__jc_add_${u.viewName}"))
+          val plus  = spark.sql(termSql(epochView("jc_add", u.viewName)))
             .select(outCols.map(col): _*).withColumn("__d", lit(1L))
           if (i == 0 && joinHasJoin)
             lastJoinEpochPlan = Some(plus.queryExecution.optimizedPlan.toString)
-          val minus = spark.sql(termSql(s"__jc_del_${u.viewName}"))
+          val minus = spark.sql(termSql(epochView("jc_del", u.viewName)))
             .select(outCols.map(col): _*).withColumn("__d", lit(-1L))
           Seq(plus, minus)
         }
@@ -2645,8 +2662,13 @@ final class MaterializedView private[engine](
 
   /** FLUSH barrier hook: drain the stream (streaming mode), fold the
     * upstream changelog (cascade mode), or re-evaluate and diff (batch
-    * mode) — the diff shape follows [[keyMode]]. Creation-order iteration
-    * in [[GraftEngine.flush]] guarantees the upstream refreshed first. */
+    * mode) — the diff shape follows [[keyMode]]. [[GraftEngine.flush]]
+    * runs it on a driver pool thread once every MV in [[flushUpstreams]]
+    * has refreshed, concurrently with MVs that neither read nor are read
+    * by this one; it runs at most once per barrier and never concurrently
+    * with itself. An interrupt means the FLUSH was interrupted: the epoch
+    * keeps its own commit discipline (offsets restored while nothing was
+    * emitted), so the next barrier catches up. */
   private[engine] def refresh(): Unit = {
     if (streamingMode) timed("stream-drain")(query.foreach(_.processAllAvailable()))
     else if (cascadeMode) timed("cascade-epoch")(

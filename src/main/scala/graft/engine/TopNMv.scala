@@ -385,7 +385,7 @@ private[engine] trait TopNMvSupport { self: MaterializedView =>
     *    under upserts. */
   private[engine] def rawTopNFold(src: MaterializedView.CascadeSrc, opsDf: DataFrame): Unit = {
     import org.apache.spark.sql.functions.col
-    val dv = s"__cascade_delta_${src.viewName}"
+    val dv = epochView("cascade_delta", src.viewName)
     def mapThrough(p: DataFrame): DataFrame = {
       p.createOrReplaceTempView(dv)
       try spark.sql(retarget(cascadeStmt, src.viewName, dv)).localCheckpoint(true)

@@ -663,11 +663,12 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
         if (l > after) Some(u -> u.log.dfAfter(after)) else None
       }
     if (changed.isEmpty) return
-    // the changelog append is atomic (staging dir → commit), so `emitted`
-    // cleanly splits the failure window: before emitOps completes the
-    // repair must emit this epoch's delta itself; after, it must NOT —
-    // re-diffing against the pre-epoch state would emit the delta twice
-    var emitted = false
+    // the changelog append is atomic (staging dir → commit), so
+    // [[epochEmitted]] cleanly splits the failure window: before emitOps
+    // completes the repair must emit this epoch's delta itself; after, it
+    // must NOT — re-diffing against the pre-epoch state would emit the
+    // delta twice
+    epochEmitted = false
     var settled = false
     try {
       tryLocalizeWindowState()
@@ -750,7 +751,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
               if (opsRows.nonEmpty)
                 timed("emitOps")(emitOps(localDf(opsRows.toIndexedSeq,
                   schema.add("op", org.apache.spark.sql.types.StringType))))
-              emitted = true
+              epochEmitted = true
               // point writes AFTER the emit (same atomic-append split as
               // the distributed branch below): vanished partitions drop,
               // the rest replace their slice
@@ -806,7 +807,6 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       // wcReturned identity check.
       if (windowStateOversize && touchedRows.length <= cascadeLocalMax &&
           windowOverlayEpoch(recompute, touchedRows, touched)) {
-        emitted = true
         settled = true
         return
       }
@@ -840,7 +840,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
           m
         })
       emitOps(epochOps)
-      emitted = true
+      epochEmitted = true
       cascadeInner = Some(merged)
       val vis = expandCounts(merged)
       snapshot = Some(vis)
@@ -861,12 +861,12 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       statementEvals += 1
       val grouped = groupedCounts(spark.sql(cascadeStmt)).localCheckpoint(true)
       val vis = expandCounts(grouped)
-      if (!emitted) {
+      if (!epochEmitted) {
         // pre-epoch state: the local map is unmutated before the emit, so
         // its lazy grouped spelling in cascadeInner is still the truth
         val prevVis = expandCounts(cascadeInner.get)
         emitOps(Changelog.multisetDiff(Some(prevVis), vis))
-        emitted = true
+        epochEmitted = true
       }
       // transient drop — NOT a disable: the tier re-localizes next epoch
       windowLocalState = None
@@ -885,8 +885,13 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       // After a commit the state is already consistent — the local-tier
       // branch mutates its map and syncs BEFORE the only post-emit job
       // (the oversize unlocalize checkpoint), and the distributed branch
-      // merges state before emitting — so the offsets must stand.
-      if (!settled && !emitted) restoreOffsets(prevOffsets)
+      // merges state before emitting — so the offsets must stand. The
+      // overlay epoch mutates its maps BEFORE its emit, so an escape there
+      // also re-bases the next overlay epoch on the unchanged cascadeInner.
+      if (!settled && !epochEmitted) {
+        restoreOffsets(prevOffsets)
+        wcReturned = None
+      }
     }
   }
 
@@ -1016,6 +1021,10 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     if (opsRows.nonEmpty)
       timed("emitOps")(emitOps(localDf(opsRows.toIndexedSeq,
         outSchema.add("op", org.apache.spark.sql.types.StringType))))
+    // committed: mark it before the frame/view bindings below, so an
+    // interrupt landing in them cannot restore the consumed offsets and
+    // re-fold a delta the overlay maps already hold
+    epochEmitted = true
     windowOverlayEpochs += 1
     wcReturned = Some(carried)
     cascadeInner = Some(carried)
@@ -1365,8 +1374,8 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
         val addsNet = adds.exceptAll(dels)
         val delsNet = dels.exceptAll(adds)
         u.snap().select(cols: _*).exceptAll(addsNet).union(delsNet)
-          .createOrReplaceTempView(s"__gw_old_${u.viewName}")
-        tempViews += s"__gw_old_${u.viewName}"
+          .createOrReplaceTempView(epochView("gw_old", u.viewName))
+        tempViews += epochView("gw_old", u.viewName)
       }
       // prefix delta terms: the statement retargeted at the signed
       // payload views, cut below the bottom nonlinear node — prefix
@@ -1378,7 +1387,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
         if (!sql0.contains(view))
           throw new IllegalStateException(s"rebinding missed ${u.viewName}")
         val sql = parts.drop(i + 1).foldLeft(sql0) { case (s, (o, _, _)) =>
-          retarget(s, o.viewName, s"__gw_old_${o.viewName}")
+          retarget(s, o.viewName, epochView("gw_old", o.viewName))
         }
         val a = spark.sql(sql).queryExecution.analyzed
         val (c, _) = globalWindowCut(a, Set(view.toLowerCase)).getOrElse(
@@ -1391,8 +1400,8 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       // analysis time, so the two framings cannot diverge.
       val rawTerms: Seq[(DataFrame, Long)] =
         parts.zipWithIndex.flatMap { case ((u, adds, dels), i) =>
-          Seq((term(u, i, s"__gw_add_${u.viewName}", adds), 1L),
-            (term(u, i, s"__gw_del_${u.viewName}", dels), -1L))
+          Seq((term(u, i, epochView("gw_add", u.viewName), adds), 1L),
+            (term(u, i, epochView("gw_del", u.viewName), dels), -1L))
         }
       val termFrames = rawTerms.map { case (df, sign) =>
         val g = groupedCounts(df)
