@@ -396,8 +396,8 @@ object Bench {
     }
 
     // dev-only knob: SPARK_GRAFT_BENCH_STREAM=name1,name2 runs ONLY those
-    // streaming entries (skipping the batch set and warmups) — pairs with
-    // -Dgraft.epochTiming=true for per-phase epoch profiling. The driver
+    // streaming entries (skipping the batch set and warmups); for per-phase
+    // epoch timing use `python3 e2ebench/run.py --trace 1`. The driver
     // never sets it, so artifact runs are unaffected.
     val streamOnly = sys.env.get("SPARK_GRAFT_BENCH_STREAM")
       .map(_.split(",").map(_.trim).toSet)

@@ -822,6 +822,17 @@ final class Connection private[engine](engine: GraftEngine) extends AutoCloseabl
 }
 
 object GraftEngine {
+  /** Run `f` with its Spark jobs tagged `view:phase` in the `graft.phase`
+    * local property. AQE's thread-local capture carries the tag to every
+    * query stage `f` submits, so profilers, the Spark UI and e2ebench's
+    * traced run can split job time and shuffle bytes by phase. */
+  private[engine] def timed[T](spark: SparkSession, view: String, phase: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("graft.phase")
+    sc.setLocalProperty("graft.phase", s"$view:$phase")
+    try f finally sc.setLocalProperty("graft.phase", prev)
+  }
+
   /** Embedded bootstrap (C1/C2): options accepted for API parity; the
     * session is the engine. */
   def open(options: ConnOptions = ConnOptions(),

@@ -182,7 +182,7 @@ final class LiveTable(
         memoryInsertOps().getOrElse(
           delta.orderBy("__seq").drop("__seq")
             .withColumn("op", lit(graft.streaming.Changelog.OpInsert)))
-      else timedCl("tbl-changelog-diff") {
+      else GraftEngine.timed(spark, viewName, "tbl-changelog-diff") {
         // fastest path (round 10): while the whole raw history lives in the
         // driver memory tail (nothing spilled), the diff needs ZERO Spark
         // jobs — the delta rows, their touched keys, and those keys' prior
@@ -205,24 +205,8 @@ final class LiveTable(
           }
         })
       }
-    timedCl("tbl-changelog-append")(changeLog.appendDF(ops))
+    GraftEngine.timed(spark, viewName, "tbl-changelog-append")(changeLog.appendDF(ops))
     clSeq = seq
-  }
-
-  private val clTiming = java.lang.Boolean.getBoolean("graft.epochTiming")
-  private def timedCl[T](phase: String)(f: => T): T = {
-    // phase tag on the job's local properties — see MaterializedView.timed
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("graft.phase")
-    sc.setLocalProperty("graft.phase", s"$viewName:$phase")
-    try {
-      if (!clTiming) f
-      else {
-        val t0 = System.nanoTime()
-        try f finally System.err.println(
-          s"[epoch-timing] $viewName $phase ${(System.nanoTime() - t0) / 1000000} ms")
-      }
-    } finally sc.setLocalProperty("graft.phase", prev)
   }
 
   /** Driver-side changelog diff for a flush whose touched keys' raw
@@ -1012,7 +996,7 @@ final class LiveTable(
     }.getOrElse(return)
     val (minA, _, pathA, _) = segments(idx)
     val (_, maxB, pathB, _) = segments(idx + 1)
-    val rows = timedCl("tbl-compact-merge")(
+    val rows = GraftEngine.timed(spark, viewName, "tbl-compact-merge")(
       spark.read.parquet(pathA, pathB).collect())
     val keyIdx = primaryKey.map(withSeq.fieldIndex)
     val ord = winnerOrdering.get

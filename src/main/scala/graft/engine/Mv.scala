@@ -488,27 +488,9 @@ final class MaterializedView private[engine](
         try f finally spark.conf.set(key, prev)
     }
 
-  /** Per-phase epoch timing (`-Dgraft.epochTiming=true`): prints one
-    * `[epoch-timing] view phase ms` line per phase to stderr. Diagnostic
-    * only — the throughput numbers live in the bench's streaming entries. */
-  private val epochTiming = java.lang.Boolean.getBoolean("graft.epochTiming")
-  private[engine] def timed[T](phase: String)(f: => T): T = {
-    // phase tag rides the job's local properties (AQE's thread-local
-    // capture propagates it to every query stage it submits) — per-phase
-    // shuffle attribution for profilers and the Spark UI; a thread-local
-    // map put, negligible when unread
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("graft.phase")
-    sc.setLocalProperty("graft.phase", s"$viewName:$phase")
-    try {
-      if (!epochTiming) f
-      else {
-        val t0 = System.nanoTime()
-        try f finally System.err.println(
-          s"[epoch-timing] $viewName $phase ${(System.nanoTime() - t0) / 1000000} ms")
-      }
-    } finally sc.setLocalProperty("graft.phase", prev)
-  }
+  /** Run `f` under this MV's `view:phase` tag ([[GraftEngine.timed]]). */
+  private[engine] def timed[T](phase: String)(f: => T): T =
+    GraftEngine.timed(spark, viewName, phase)(f)
 
   /** MVs this statement may read, taken once at start: a FLUSH refreshes
     * this MV only after all of them have settled. A word-boundary name
@@ -1311,7 +1293,6 @@ final class MaterializedView private[engine](
     * [[windowStateOversize]]) and epochs switch to delta-segment
     * persistence below. */
   private var auxOversize = false
-  private var auxSegmentDepth = 0
   /** Touched-slice pair (old state rows, folded new rows) of the LAST
     * over-bound epoch merge, both driver-resident — set by
     * [[overboundLocalMerge]] and consumed by [[deltaAggEpoch]]'s visible
@@ -1321,11 +1302,13 @@ final class MaterializedView private[engine](
     * Cleared at every merge entry; None = diff keeps the state-scan
     * spelling. */
   private var overboundSlices: Option[(DataFrame, DataFrame)] = None
-  /** Full-compaction cadence of the segment stack: each epoch adds one
-    * broadcast anti join + a LocalRelation union layer over the base
-    * checkpoint, so reads stay cheap at small depths; every Nth epoch the
-    * stack checkpoints flat (the LiveTable.maybeCompact shape). */
-  private[graft] var auxCompactEvery = 8
+  /** Flat-checkpoint cadence of the over-bound carried state, in plan
+    * layers above the last flat checkpoint ([[CarriedOverlay]]'s depth
+    * bound). The delta-agg overlay, its mergeParts slice stack and the
+    * window-cascade overlay all read it. */
+  private[graft] var compactEvery = 8
+  /** Successful over-bound overlay epochs of either mode (spec probe). */
+  private[graft] def overlayEpochs: Long = auxOverlay.epochs + windowOverlay.epochs
 
   /** Driver-local aux-state map tier (round 13): for pure-signed specs
     * (every slot folds by signed addition — no extremum/float/sketch)
@@ -1402,83 +1385,61 @@ final class MaterializedView private[engine](
     }
   }
 
-  private def auxMapToDf(spec: DeltaAgg.Spec): DataFrame = {
-    val m = auxLocalMap.get
-    val rows = m.iterator.map { case (k, aux) =>
-      Row.fromSeq(k.toSeq ++ aux) }.toIndexedSeq
-    localDf(rows, auxLocalSchema.get)
-  }
+  private def auxMapToDf(spec: DeltaAgg.Spec): DataFrame =
+    localDf(auxRows(auxLocalMap.get.iterator), auxLocalSchema.get)
+  /** Aux-frame rows (state keys first, aux slots after) of `key → aux`
+    * entries, and the split back. */
+  private def auxRows(m: Iterator[(Row, Array[Any])]): IndexedSeq[Row] =
+    m.map { case (k, aux) => Row.fromSeq(k.toSeq ++ aux) }.toIndexedSeq
+  private def splitAux(r: Row, nKeys: Int): (Row, Array[Any]) =
+    Row.fromSeq((0 until nKeys).map(r.get)) ->
+      Array.tabulate[Any](r.length - nKeys)(j => r.get(nKeys + j))
   private var auxLocalSchema: Option[org.apache.spark.sql.types.StructType] = None
+
+  /** Aux slot types the point arithmetic ([[addSigned]]) covers. */
+  private def pointFoldable(schema: org.apache.spark.sql.types.StructType, nKeys: Int): Boolean = {
+    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+    schema.fields.drop(nKeys).forall(_.dataType match {
+      case LongType | DoubleType | _: DecimalType => true
+      case _ => false
+    })
+  }
 
   /** Seed the map from a collected full state; false = a column type the
     * point arithmetic doesn't cover (stay on the LocalRelation tier). */
   private def seedAuxMap(rows: IndexedSeq[Row],
       schema: org.apache.spark.sql.types.StructType,
       spec: DeltaAgg.Spec): Boolean = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
     val nKeys = spec.stateKeys.length
-    val auxOk = schema.fields.drop(nKeys).forall(_.dataType match {
-      case LongType | DoubleType | _: DecimalType => true
-      case _ => false
-    })
-    if (!auxOk || spec.stateKeys.isEmpty) return false
+    if (!pointFoldable(schema, nKeys) || spec.stateKeys.isEmpty) return false
     val m = new scala.collection.mutable.LinkedHashMap[Row, Array[Any]]()
-    rows.foreach { r =>
-      m.update(Row.fromSeq((0 until nKeys).map(r.get)),
-        Array.tabulate[Any](schema.length - nKeys)(j => r.get(nKeys + j)))
-    }
+    rows.foreach(m += splitAux(_, nKeys))
     auxLocalSchema = Some(schema)
     auxLocalMap = Some(m)
     true
   }
 
-  /** Materialize the epoch's folded aux state, cheapest tier first:
-    * (0) driver map point-merge — zero jobs (pure-signed specs, local
-    * partials, state ≤ [[auxStateLocalMax]]); (1) distributed merge
-    * probed down to a LocalRelation / map seed while the state fits;
-    * (2) past the bound (latched — the probe re-executes the full merge
-    * plan, so re-probing every epoch would pay O(state) twice): the keyed
-    * fast path persists ONLY the touched slice (delta-proportional) and
-    * stacks it over the carried frame with a broadcast anti join,
-    * checkpointing flat every [[auxCompactEvery]] epochs; join-merge
-    * (extremum/float) specs checkpoint directly. */
-  /** Over-bound driver-overlay state (round 16): the spilled-regime fast
-    * path previously re-executed a GROWING anti-join stack over the
-    * checkpointed state several times per epoch — the touched-slice
-    * re-sum's semi-join collect, the visible diff's two broadcast-semi
-    * collects, and one AQE broadcast build per stacked layer per
-    * execution (10.875 jobs/epoch, 841 KB shuffle at the bench). The
-    * overlay keeps the plan depth CONSTANT instead: `obBase` is the last
-    * flat checkpoint, `obOverlay` holds the current rows of every state
-    * key touched since then (driver-resident, delta-proportional), and
-    * `obTouched` the touched-key set including vanished keys, so the
-    * carried state is always `base ANTI-JOIN touched ∪ overlay` — one
-    * anti join, however many epochs have passed. */
-  private var obBase: Option[DataFrame] = None
-  private val obOverlay = new scala.collection.mutable.LinkedHashMap[Row, Array[Any]]()
-  private val obTouched = new scala.collection.mutable.LinkedHashSet[Row]()
-  /** The frame handed back to [[deltaAggEpoch]] last epoch — identity
-    * check that auxState was not replaced behind the overlay's back
-    * (durable restore, demote/recover); any mismatch re-bases. */
-  private var obReturned: Option[DataFrame] = None
+  /** Over-bound aux state (round 16) as a [[CarriedOverlay]] keyed by the
+    * state-key tuple, valued by the aux slots: constant plan depth, where
+    * a growing anti-join stack re-executed several times per epoch cost
+    * 10.875 jobs/epoch and 841 KB of shuffle at the bench. */
+  private lazy val auxOverlay = new CarriedOverlay[Array[Any]](spark,
+    compactEvery, cascadeLocalMax, auxRows, _.localCheckpoint(true))
 
   /** Over-bound epoch merge for pure-signed specs with driver-resident
-    * partials: probe the BASE checkpoint once for the epoch's
+    * partials: probe the overlay's base once for the epoch's
     * NEWLY-touched keys (the only cluster work — previously-touched keys'
     * rows are already in the overlay), fold the partials by the aux-map
     * tier's point arithmetic (overflow raises exactly like checkedCast →
-    * the caller's demote-to-recompute), and stash the (old, new) touched
-    * slices for [[deltaAggEpoch]]'s diff, which then runs entirely
-    * driver-side. Every [[auxCompactEvery]] epochs — or when the overlay
-    * outgrows [[cascadeLocalMax]] — the constant-depth plan checkpoints
-    * flat and becomes the next base. None = not admissible (join-merge
-    * spec, distributed partials, non-signed aux types) → the existing
+    * the caller's demote-to-recompute), commit them to the overlay, and
+    * stash the (old, new) touched slices for [[deltaAggEpoch]]'s diff,
+    * which then runs entirely driver-side. None = not admissible
+    * (join-merge spec, distributed partials, non-signed aux types) → the
     * mergeParts spelling. */
   private def overboundLocalMerge(spec: DeltaAgg.Spec,
       touchedLocal: Option[DataFrame],
       localParts: Option[(IndexedSeq[Row], IndexedSeq[Row])]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+    import org.apache.spark.sql.functions.col
     if (!spec.isPureSigned || spec.stateKeys.isEmpty) return None
     val (addRows, delRows) = localParts.getOrElse(return None)
     val touched = touchedLocal.getOrElse(return None)
@@ -1488,70 +1449,45 @@ final class MaterializedView private[engine](
     val sch = state.schema
     // positional layout check (state keys first, aux after — the aux-map
     // tier's contract) + point-arithmetic type admission
-    if (sch.fields.take(nKeys).map(_.name).toSeq != keys) return None
+    if (sch.fields.take(nKeys).map(_.name).toSeq != keys ||
+        !pointFoldable(sch, nKeys)) return None
     val auxTypes = sch.fields.drop(nKeys).map(_.dataType).toIndexedSeq
-    if (!auxTypes.forall {
-      case LongType | DoubleType | _: DecimalType => true
-      case _ => false
-    }) return None
-    if (!obReturned.exists(_ eq state)) {
-      // first over-bound epoch, or auxState replaced externally: re-base
-      obOverlay.clear(); obTouched.clear()
-      obBase = Some(state)
-    }
-    val base = obBase.get
-    def keyRow(r: Row): Row = Row.fromSeq((0 until nKeys).map(r.get))
-    def withAux(k: Row, aux: Array[Any]): Row = Row.fromSeq(k.toSeq ++ aux)
+    auxOverlay.begin(state, org.apache.spark.sql.types.StructType(
+      touched.schema.fields.zip(keys).map { case (f, k) => f.copy(name = s"__k_$k") }),
+      keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _))
     // zero-job collect: the touched frame is a LocalRelation
     val epochKeys = touched.collect().toIndexedSeq
-    val newKeys = epochKeys.filterNot(obTouched.contains)
+    val newKeys = auxOverlay.fresh(epochKeys)
     // ONE bounded probe against the FLAT base for keys this overlay window
     // has not seen (plain collect — the result is ≤ one state row per
     // probed key; executeTake's scale-up rounds cost extra jobs)
-    val probed: IndexedSeq[Row] =
-      if (newKeys.isEmpty) IndexedSeq.empty
-      else {
-        val kr = localDf(newKeys, touched.schema)
-          .toDF(keys.map(k => s"__k_$k"): _*)
-        val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-        timed("state-touched")(
-          base.join(broadcast(kr), cond, "left_semi").collect()).toIndexedSeq
-      }
-    probed.foreach { r =>
-      obOverlay.update(keyRow(r),
-        Array.tabulate[Any](sch.length - nKeys)(j => r.get(nKeys + j)))
-    }
-    // old diff side: the epoch keys' pre-fold current rows (overlay rows
-    // for keys touched earlier, probed base rows for fresh ones; a key
-    // vanished in an earlier epoch correctly surfaces no row)
-    val oldRows = epochKeys.flatMap(k => obOverlay.get(k).map(withAux(k, _)))
-    foldIntoAuxMap(obOverlay, addRows, 1, nKeys, auxTypes)
-    foldIntoAuxMap(obOverlay, delRows, -1, nKeys, auxTypes)
-    epochKeys.foreach(obTouched.add)
-    val newRows = epochKeys.flatMap(k => obOverlay.get(k).map(withAux(k, _)))
-    overboundSlices = Some((localDf(oldRows, sch), localDf(newRows, sch)))
-    // carried state at CONSTANT plan depth: base minus every key the
-    // overlay window touched, plus the overlay's live rows
-    val tk = localDf(obTouched.toIndexedSeq, touched.schema)
-      .toDF(keys.map(k => s"__k_$k"): _*)
-    val antiCond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-    val overlayDf = localDf(
-      obOverlay.iterator.map { case (k, aux) => withAux(k, aux) }.toIndexedSeq, sch)
-    val stacked = base.join(broadcast(tk), antiCond, "left_anti")
-      .unionByName(overlayDf)
-    auxSegmentDepth += 1
-    val out =
-      if (auxSegmentDepth >= auxCompactEvery || obOverlay.size > cascadeLocalMax) {
-        auxSegmentDepth = 0
-        val ck = timed("state-merge")(stacked.localCheckpoint(true))
-        obBase = Some(ck)
-        obOverlay.clear(); obTouched.clear()
-        ck
-      } else stacked
-    obReturned = Some(out)
-    Some(out)
+    val probed: Map[Row, Array[Any]] =
+      if (newKeys.isEmpty) Map.empty
+      else timed("state-touched")(auxOverlay.probe(newKeys).collect())
+        .map(splitAux(_, nKeys)).toMap
+    // the epoch keys' pre-fold current rows (a key that vanished earlier in
+    // the overlay window, or a new group, surfaces no row), folded by point
+    // writes into an epoch-local map — the overlay changes only in carry
+    val folded = new scala.collection.mutable.LinkedHashMap[Row, Array[Any]]()
+    epochKeys.foreach(k => auxOverlay.current(k, probed).foreach(folded.update(k, _)))
+    def touchedRows = auxRows(epochKeys.iterator.flatMap(k => folded.get(k).map(k -> _)))
+    val oldRows = touchedRows
+    foldIntoAuxMap(folded, addRows, 1, nKeys, auxTypes)
+    foldIntoAuxMap(folded, delRows, -1, nKeys, auxTypes)
+    overboundSlices = Some((localDf(oldRows, sch), localDf(touchedRows, sch)))
+    Some(auxOverlay.carry(epochKeys.map(k => k -> folded.get(k))))
   }
 
+  /** Materialize the epoch's folded aux state, cheapest tier first:
+    * (0) driver map point-merge — zero jobs (pure-signed specs, local
+    * partials, state ≤ [[auxStateLocalMax]]); (1) distributed merge
+    * probed down to a LocalRelation / map seed while the state fits;
+    * (2) past the bound (latched — the probe re-executes the full merge
+    * plan, so re-probing every epoch would pay O(state) twice): the
+    * [[auxOverlay]] epoch, else the keyed mergeParts path, which persists
+    * ONLY the touched slice (delta-proportional) and stacks it over the
+    * carried frame with a broadcast anti join under the overlay's depth
+    * bound; join-merge (extremum/float) specs checkpoint directly. */
   private def mergeAuxState(spec: DeltaAgg.Spec, addAux: DataFrame,
       delAux: DataFrame, refetch: DataFrame => DataFrame,
       touchedLocal: Option[DataFrame],
@@ -1571,7 +1507,6 @@ final class MaterializedView private[engine](
         val full = auxMapToDf(spec)
         auxLocalMap = None
         auxOversize = true
-        auxSegmentDepth = 0
         return full.localCheckpoint(true)
       case _ =>
         // distributed backfill-class epoch: the map content IS auxState's
@@ -1592,7 +1527,6 @@ final class MaterializedView private[engine](
         local
       } else {
         auxOversize = true
-        auxSegmentDepth = 0
         merged.localCheckpoint(true)
       }
     } else overboundLocalMerge(spec, touchedLocal, localParts).getOrElse(
@@ -1601,13 +1535,7 @@ final class MaterializedView private[engine](
       case Some((untouched, resummed)) =>
         // touched slice is delta-sized — lands driver-side in the usual
         // epoch; the untouched rows never re-persist
-        val slice = boundedLocal(resummed)
-        val stacked = untouched.unionByName(slice)
-        auxSegmentDepth += 1
-        if (auxSegmentDepth >= auxCompactEvery) {
-          auxSegmentDepth = 0
-          stacked.localCheckpoint(true)
-        } else stacked
+        auxOverlay.stack(auxState.get, untouched.unionByName(boundedLocal(resummed)))
       case None =>
         DeltaAgg.merge(auxState.get, addAux, delAux, spec, refetch,
           touchedLocal).localCheckpoint(true)

@@ -555,7 +555,6 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     * local ordering (the driver-side diff could not reproduce the
     * distributed emission order). */
   private[engine] def tryLocalizeWindowState(): Unit = {
-    import org.apache.spark.sql.functions.col
     if (windowLocalState.nonEmpty || windowLocalDisabled || cascadeInner.isEmpty)
       return
     val vis = expandCounts(cascadeInner.get)
@@ -564,15 +563,22 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       windowLocalDisabled = true; return
     }
     val n = schema.length
-    val withKeys = vis.select(vis.columns.toIndexedSeq.map(col) ++
-      windowStateKeys.indices.map(i => windowStateKeyCol(i).as(s"__sk_$i")): _*)
-    val rows = withKeys.limit(windowLocalStateMax + 1).collect()
+    val rows = collectWithStateKeys(vis, vis.columns.toIndexedSeq)
     if (rows.length > windowLocalStateMax) { windowLocalDisabled = true; return }
     val m = new scala.collection.mutable.LinkedHashMap[Row, IndexedSeq[Row]]()
     groupSliceByKey(rows, n).foreach { case (k, b) => m.update(k, b) }
     windowLocalSchema = Some(schema)
     windowLocalState = Some(m)
     syncWindowLocalState()
+  }
+
+  /** `df`'s `cols` and the state keys (as `__sk_<i>`), collected up to one
+    * row past [[windowLocalStateMax]]. */
+  private def collectWithStateKeys(df: DataFrame, cols: Seq[String]): Array[Row] = {
+    import org.apache.spark.sql.functions.col
+    df.select(cols.map(col) ++
+      windowStateKeys.indices.map(i => windowStateKeyCol(i).as(s"__sk_$i")): _*)
+      .limit(windowLocalStateMax + 1).collect()
   }
 
   /** Split collected (output ++ __sk_*) rows into key → expanded-rows
@@ -736,11 +742,8 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
         if (state.size >= 8 && touchedRows.length >= 0.9 * state.size)
           windowDegenerateEpochs += 1
         else windowDegenerateEpochs = 0
-        val withKeys = recompute.select(
-          recompute.columns.toIndexedSeq.map(col) ++
-            windowStateKeys.indices.map(i => windowStateKeyCol(i).as(s"__sk_$i")): _*)
         val sliceRows = timed("group-recompute")(
-          withKeys.limit(windowLocalStateMax + 1).collect())
+          collectWithStateKeys(recompute, recompute.columns.toIndexedSeq))
         if (sliceRows.length <= windowLocalStateMax) {
           val newByKey = groupSliceByKey(sliceRows, n)
           val newSlice = newByKey.valuesIterator.flatten.toIndexedSeq
@@ -787,24 +790,17 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
         unlocalizeWindowState(disable = false)
       }
 
-      // ---- over-bound overlay epoch (round 16, the pkagg driver-overlay
-      // discipline applied to the window-cascade grouped state): in the
-      // windowStateOversize regime the distributed tail below paid two
-      // full-state executions per epoch — the diff's semi-restricted scan
-      // and the state-merge's flat localCheckpoint — so epoch cost was
-      // O(state), not O(delta) (ScaleProbe window mode: ~14 jobs/epoch at
-      // 1M rows). The overlay keeps the carried frame at CONSTANT plan
-      // depth instead: wcBase is the last flat checkpoint, wcOverlay holds
-      // the current expanded rows of every partition key touched since it
-      // (driver-resident, delta-proportional), and the carried state plans
-      // as `base ANTI-JOIN touched ∪ overlay`. Only newly-touched keys
-      // probe the base (one bounded job); the diff runs driver-side with
-      // the SAME localMultisetDiff the local tier emits through. Flat
-      // checkpoints amortize to once per [[wcCompactEvery]] epochs. Any
-      // bound/orderability refusal falls through to the distributed tail
-      // below (state untouched — the overlay mutates only after its emit),
-      // whose flat checkpoint then re-bases the next overlay epoch via the
-      // wcReturned identity check.
+      // ---- over-bound overlay epoch (round 16): in the windowStateOversize
+      // regime the distributed tail below pays two full-state executions
+      // per epoch — the diff's semi-restricted scan and the state-merge's
+      // flat localCheckpoint — so its epoch cost is O(state), not O(delta)
+      // (ScaleProbe window mode: ~14 jobs/epoch at 1M rows).
+      // [[windowOverlay]] carries the grouped state at constant
+      // plan depth instead; only newly-touched keys probe its base, and
+      // the diff runs driver-side with the SAME localMultisetDiff the
+      // local tier emits through. Any bound/orderability refusal falls
+      // through to the distributed tail below with the overlay untouched;
+      // that tail's flat checkpoint re-bases the next overlay epoch.
       if (windowStateOversize && touchedRows.length <= cascadeLocalMax &&
           windowOverlayEpoch(recompute, touchedRows, touched)) {
         settled = true
@@ -886,147 +882,86 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       // branch mutates its map and syncs BEFORE the only post-emit job
       // (the oversize unlocalize checkpoint), and the distributed branch
       // merges state before emitting — so the offsets must stand. The
-      // overlay epoch mutates its maps BEFORE its emit, so an escape there
-      // also re-bases the next overlay epoch on the unchanged cascadeInner.
+      // overlay commits BEFORE its emit, so an escape there also re-bases
+      // the next overlay epoch on the unchanged cascadeInner.
       if (!settled && !epochEmitted) {
         restoreOffsets(prevOffsets)
-        wcReturned = None
+        windowOverlay.invalidate()
       }
     }
   }
 
-  /** Over-bound overlay state for the window cascade (round 16; the
-    * delta-agg [[Mv]] overlay's discipline on the grouped multiset state).
-    * `wcBase` is the last flat checkpoint of the grouped state;
-    * `wcOverlay` holds the current EXPANDED output rows of every partition
-    * key touched since it (the local tier's representation, so the diff
-    * reuses [[Changelog.localMultisetDiff]] verbatim); `wcTouched` the
-    * touched-key set including vanished keys. The carried frame is always
-    * `base ANTI-JOIN touched ∪ overlay` — one anti join deep, however many
-    * epochs have passed. `wcReturned` is the identity of the frame last
-    * handed to `cascadeInner`: any mismatch (durable restore, repair path,
-    * distributed-tail epoch) re-bases. */
-  private var wcBase: Option[DataFrame] = None
-  private val wcOverlay =
-    new scala.collection.mutable.LinkedHashMap[Row, IndexedSeq[Row]]()
-  private val wcTouched = new scala.collection.mutable.LinkedHashSet[Row]()
-  private var wcReturned: Option[DataFrame] = None
-  private var wcEpochs = 0
-  private val wcCompactEvery = 8
-  /** Successful overlay epochs — spec probe that the over-bound fast path
-    * actually engaged (a silent refusal would fall back to the O(state)
-    * distributed tail and the test would still pass on values). */
-  private[graft] var windowOverlayEpochs = 0L
+  /** Over-bound grouped state of the window cascade (round 16) as a
+    * [[CarriedOverlay]] keyed by the partition state key, valued by the
+    * key's current EXPANDED output rows (the local tier's representation,
+    * so the diff reuses [[Changelog.localMultisetDiff]] verbatim); the
+    * render counts them back into the grouped layout. */
+  private[engine] lazy val windowOverlay = new CarriedOverlay[IndexedSeq[Row]](spark,
+    compactEvery, cascadeLocalMax,
+    { values =>
+      val counts = new scala.collection.mutable.LinkedHashMap[Row, Long]()
+      values.foreach(_._2.foreach(r => counts.update(r, counts.getOrElse(r, 0L) + 1L)))
+      counts.iterator.map { case (r, c) => Row.fromSeq(r.toSeq :+ c) }.toIndexedSeq
+    },
+    df => timed("state-merge")(df.localCheckpoint(true)))
 
-  /** One over-bound overlay epoch. Computes everything up to the emit
+  /** One over-bound overlay epoch. Computes everything up to the commit
     * PURELY (a refusal returns false with no state mutated; the caller
-    * falls through to the distributed tail), emits the driver-side diff,
-    * then installs the constant-depth carried frame — flat-checkpointing
-    * it only every [[wcCompactEvery]] epochs (or when the overlay outgrows
-    * the driver budget). Epoch jobs in steady state: the touched-slice
-    * recompute collect, plus one bounded base probe when the delta names
-    * keys this overlay window has not seen. */
+    * falls through to the distributed tail), commits the epoch to the
+    * overlay, then emits the driver-side diff. Epoch jobs in steady state:
+    * the touched-slice recompute collect, plus one bounded base probe when
+    * the delta names keys this overlay window has not seen. */
   private def windowOverlayEpoch(recompute: DataFrame, touchedRows: Array[Row],
       touched: DataFrame): Boolean = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val state = cascadeInner.get
     val gSchema = state.schema // output cols + CntCol (groupedCounts layout)
     val outSchema = org.apache.spark.sql.types.StructType(gSchema.fields.dropRight(1))
     val n = outSchema.length
     if (gSchema.fields.last.name != MaterializedView.CntCol) return false
-    if (!wcReturned.exists(_ eq state)) {
-      // first overlay epoch, or cascadeInner replaced externally: re-base
-      wcOverlay.clear(); wcTouched.clear(); wcEpochs = 0
-      wcBase = Some(state)
-    }
-    val base = wcBase.get
+    windowOverlay.begin(state, touched.schema, windowStateKeys.indices
+      .map(i => windowStateKeyCol(i) <=> col(s"__k_$i")).reduce(_ && _))
     // 1. recomputed touched slice, state keys evaluated alongside (the
     // local tier's spelling — ONE job, driver-bounded)
-    val withKeys = recompute.select(
-      outSchema.fieldNames.toIndexedSeq.map(col) ++
-        windowStateKeys.indices.map(i => windowStateKeyCol(i).as(s"__sk_$i")): _*)
     val sliceRows = timed("group-recompute")(
-      withKeys.limit(windowLocalStateMax + 1).collect())
+      collectWithStateKeys(recompute, outSchema.fieldNames.toIndexedSeq))
     if (sliceRows.length > windowLocalStateMax) return false
     val newByKey = groupSliceByKey(sliceRows, n)
-    // 2. the touched keys' OLD rows: overlay for keys this window has seen
-    // (a vanished key correctly surfaces no rows), one bounded grouped
+    // 2. the touched keys' OLD rows: the overlay's for keys this window has
+    // seen (a vanished key correctly surfaces no rows), one bounded grouped
     // probe against the flat base for the fresh ones
     val keyRows = touchedRows.toIndexedSeq
-    val fresh = keyRows.filterNot(wcTouched.contains)
-    val oldFresh = new scala.collection.mutable.LinkedHashMap[
-      Row, scala.collection.mutable.ArrayBuffer[Row]]()
-    if (fresh.nonEmpty) {
-      val kr = localDf(fresh, touched.schema)
-      val cond = windowStateKeys.indices
-        .map(i => windowStateKeyCol(i) <=> col(s"__k_$i")).reduce(_ && _)
-      val probe = base.join(broadcast(kr), cond, "left_semi").select(
-        gSchema.fieldNames.toIndexedSeq.map(col) ++
-          windowStateKeys.indices.map(i => windowStateKeyCol(i).as(s"__sk_$i")): _*)
-      val probed = timed("state-touched")(
-        probe.limit(windowLocalStateMax + 1).collect())
-      if (probed.length > windowLocalStateMax) return false
-      var expanded = 0L
-      probed.foreach { r =>
-        val key = Row.fromSeq((gSchema.length until r.length).map(r.get))
-        val out = Row.fromSeq((0 until n).map(r.get))
-        val cnt = r.getLong(n)
-        expanded += cnt
-        if (expanded > windowLocalStateMax) return false
-        val buf = oldFresh.getOrElseUpdate(key,
-          new scala.collection.mutable.ArrayBuffer[Row]())
-        var i = 0L
-        while (i < cnt) { buf += out; i += 1 }
+    val fresh = windowOverlay.fresh(keyRows)
+    val probedOld =
+      if (fresh.isEmpty) Map.empty[Row, IndexedSeq[Row]]
+      else {
+        val probed = timed("state-touched")(collectWithStateKeys(
+          windowOverlay.probe(fresh), gSchema.fieldNames.toIndexedSeq))
+        if (probed.length > windowLocalStateMax ||
+            probed.map(_.getLong(n)).sum > windowLocalStateMax) return false
+        groupSliceByKey(probed, n + 1).map { case (k, grouped) =>
+          k -> grouped.flatMap(g => IndexedSeq.fill(g.getLong(n).toInt)(
+            Row.fromSeq((0 until n).map(g.get))))
+        }
       }
-    }
-    val oldSlice = keyRows.flatMap { k =>
-      if (wcTouched.contains(k)) wcOverlay.getOrElse(k, IndexedSeq.empty[Row])
-      else oldFresh.get(k).map(_.toIndexedSeq).getOrElse(IndexedSeq.empty[Row])
-    }
+    val oldSlice = keyRows.flatMap(k =>
+      windowOverlay.current(k, probedOld).getOrElse(IndexedSeq.empty[Row]))
     val newSlice = newByKey.valuesIterator.flatten.toIndexedSeq
     val opsRows = Changelog.localMultisetDiff(Some(oldSlice), newSlice, outSchema)
       .getOrElse(return false) // unorderable output type: distributed tail
-    // ---- commit sequence. State (maps + any flat checkpoint, the only
+    // ---- commit sequence. State (overlay + any flat checkpoint, the only
     // post-refusal Spark job) comes BEFORE the emit — the distributed
     // tail's own discipline — so a checkpoint failure reaches the repair
     // path with `emitted` still false and nothing is emitted twice; after
     // the emit only assignments and lazy plan/view bindings remain. ----
-    keyRows.foreach { k =>
-      wcTouched.add(k)
-      newByKey.get(k) match {
-        case Some(rs) => wcOverlay.update(k, rs)
-        case None => wcOverlay.remove(k)
-      }
-    }
-    wcEpochs += 1
-    val touchedAll = localDf(wcTouched.toIndexedSeq, touched.schema)
-    val antiCond = windowStateKeys.indices
-      .map(i => windowStateKeyCol(i) <=> col(s"__k_$i")).reduce(_ && _)
-    // overlay rows back to the grouped representation (driver-side count)
-    val gCounts = new scala.collection.mutable.LinkedHashMap[Row, Long]()
-    wcOverlay.valuesIterator.foreach(_.foreach { r =>
-      gCounts.update(r, gCounts.getOrElse(r, 0L) + 1L)
-    })
-    val overlayDf = localDf(gCounts.iterator
-      .map { case (r, c) => Row.fromSeq(r.toSeq :+ c) }.toIndexedSeq, gSchema)
-    val carriedPlan = base.join(broadcast(touchedAll), antiCond, "left_anti")
-      .unionByName(overlayDf)
-    val carried =
-      if (wcEpochs >= wcCompactEvery ||
-          gCounts.size > cascadeLocalMax || wcTouched.size > cascadeLocalMax) {
-        val flat = timed("state-merge")(carriedPlan.localCheckpoint(true))
-        wcBase = Some(flat); wcOverlay.clear(); wcTouched.clear(); wcEpochs = 0
-        flat
-      } else carriedPlan
+    val carried = windowOverlay.carry(keyRows.map(k => k -> newByKey.get(k)))
     if (opsRows.nonEmpty)
       timed("emitOps")(emitOps(localDf(opsRows.toIndexedSeq,
         outSchema.add("op", org.apache.spark.sql.types.StringType))))
     // committed: mark it before the frame/view bindings below, so an
     // interrupt landing in them cannot restore the consumed offsets and
-    // re-fold a delta the overlay maps already hold
+    // re-fold a delta the overlay already holds
     epochEmitted = true
-    windowOverlayEpochs += 1
-    wcReturned = Some(carried)
     cascadeInner = Some(carried)
     val vis = expandCounts(carried)
     snapshot = Some(vis)

@@ -21,8 +21,11 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/sf1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
-    // the embedding perturbation rotates by the copy index; 64-dim fixture
-    require(copies <= 64, "copies must be <= the embedding dimension (64)")
+    // copy k Caesar-shifts document text by k % 26, so copy 26 would repeat
+    // copy 0's text verbatim (the 64-dim embedding rotation is the looser
+    // bound); sf1 uses 10 copies
+    require(copies <= 26,
+      s"copies must be <= 26 (the document text shift aliases past it), got $copies")
     val srcDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

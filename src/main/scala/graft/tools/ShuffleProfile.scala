@@ -8,9 +8,9 @@ import scala.collection.mutable
 
 /** Diagnostic: replay one streaming bench entry and attribute its shuffle
   * bytes to engine phases. The maintainers tag every phase on the job's
-  * local properties (`graft.phase`, set by `MaterializedView.timed` /
-  * `LiveTable.timedCl`); AQE's thread-local capture propagates the tag to
-  * the query stages it submits from its own pool, so the attribution holds
+  * local properties (`graft.phase`, set by `GraftEngine.timed`); AQE's
+  * thread-local capture propagates the tag to the query stages it submits
+  * from its own pool, so the attribution holds
   * under adaptive execution — where plain stage callsites all collapse to
   * `CompletableFuture.java` (round-14 finding).
   *

@@ -1310,38 +1310,58 @@ class DeltaAggSpec extends SparkSpec {
     assert(mv.isDeltaAggMode)
     // shrink the driver-map bound below the group count so the FIRST fold
     // epoch latches oversize, and compact every 2 epochs so one test run
-    // exercises slice-stacking AND the flat checkpoint
+    // exercises the overlay AND the flat checkpoint
     mv.auxStateLocalMax = 4
-    mv.auxCompactEvery = 2
+    mv.compactEvery = 2
     val t = rw.table("seg_t").get
     def state: Map[String, (Long, Long)] =
       mv.df.collect().map(r =>
         r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    def batchParity(tag: String): Unit = {
+      val batch = rw.fetch("SELECT grp, count(*) AS n, sum(v) AS sv FROM seg_t GROUP BY grp")
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(state == batch, s"$tag: maintained state must equal batch")
+    }
     t.insert((1L to 6L).map(i => Row(i, s"g$i", i * 10)))
     rw.flush()
     val evals = mv.statementEvals
     assert(state == (1L to 6L).map(i => s"g$i" -> ((1L, i * 10))).toMap)
     assert(!mv.auxStateIsLocal,
       "six state rows over a bound of four must refuse the map tier")
-    // epoch 2: slice-only persistence over the stacked frame
+    // epoch 2: the first over-bound epoch carries through the overlay
     t.insert(Seq(Row(7L, "g1", 5L), Row(8L, "g7", 70L)))
     rw.flush()
     assert(state("g1") == ((2L, 15L)) && state("g7") == ((1L, 70L)))
-    // epoch 3 triggers the periodic compaction (auxCompactEvery = 2);
-    // retraction + vanish still fold correctly through the stack
+    assert(mv.overlayEpochs > 0,
+      "the over-bound epoch must run through the overlay, not the mergeParts stack")
+    batchParity("epoch 2")
+    // epoch 3 triggers the periodic compaction (compactEvery = 2);
+    // retraction + vanish still fold correctly through the overlay
     rw.execute("DELETE FROM seg_t WHERE grp = 'g2'")
     rw.flush()
     assert(!state.contains("g2"))
-    // epoch 4: fold continues over the compacted checkpoint
-    t.insert(Seq(Row(2L, "g3", 3L)))
+    batchParity("epoch 3")
+    // epochs 4-5, one overlay window over the compacted checkpoint: g4
+    // vanishes, then comes back as a new group, so the touched-but-vanished
+    // key must fold from nothing; epoch 5 compacts again
+    rw.execute("DELETE FROM seg_t WHERE grp = 'g4'")
     rw.flush()
-    assert(state("g3") == ((2L, 33L)))
+    assert(!state.contains("g4"))
+    batchParity("epoch 4")
+    t.insert(Seq(Row(2L, "g3", 3L), Row(9L, "g4", 7L), Row(10L, "g4", 8L)))
+    rw.flush()
+    assert(state("g3") == ((2L, 33L)) && state("g4") == ((2L, 15L)))
+    batchParity("epoch 5")
+    // epoch 6: g4 and g1 revisited after the flat re-base, so their old
+    // rows come from the new base, not the cleared overlay
+    t.insert(Seq(Row(11L, "g4", 1L), Row(12L, "g1", 2L)))
+    rw.flush()
+    assert(state("g4") == ((3L, 16L)) && state("g1") == ((3L, 17L)))
+    batchParity("epoch 6")
+    assert(mv.overlayEpochs == 5, s"epochs 2-6 must all carry, ran ${mv.overlayEpochs}")
     assert(mv.statementEvals == evals,
-      "segment-stack epochs must not re-evaluate the statement")
+      "over-bound epochs must not re-evaluate the statement")
     assert(mv.isDeltaAggMode)
-    val batch = rw.fetch("SELECT grp, count(*) AS n, sum(v) AS sv FROM seg_t GROUP BY grp")
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(state == batch, "stacked state must equal batch")
     rw.close()
   }
 }

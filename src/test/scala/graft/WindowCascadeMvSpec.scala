@@ -624,7 +624,7 @@ class WindowCascadeMvSpec extends SparkSpec {
     }
     // 8 epochs of 3 rows in fresh partitions: state grows to 24 rows,
     // far past both bounds — epochs past the latch must run through the
-    // overlay (constant-depth carried frame), including one wcCompactEvery
+    // overlay (constant-depth carried frame), including one compactEvery
     // flat re-base at epoch 8
     for (e <- 0L until 8L) {
       t.insert(Seq(Row(e * 10 + 1, s"g$e", 10L + e), Row(e * 10 + 2, s"g$e", 20L + e),
@@ -633,8 +633,8 @@ class WindowCascadeMvSpec extends SparkSpec {
       batchParity(s"epoch $e")
     }
     assert(mv.windowStateOversize, "the grouped state must have latched oversize")
-    assert(mv.windowOverlayEpochs >= 4,
-      s"the overlay must carry the over-bound epochs, ran ${mv.windowOverlayEpochs}")
+    assert(mv.overlayEpochs >= 4,
+      s"the overlay must carry the over-bound epochs, ran ${mv.overlayEpochs}")
     // revisit an OLD partition (keys the overlay window has not seen since
     // its last re-base): the base probe supplies the old slice, the rank
     // shifts inside g0 only
