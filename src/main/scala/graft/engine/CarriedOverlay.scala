@@ -6,27 +6,32 @@ import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
-/** Over-bound carried state at constant plan depth, shared by the
-  * maintainer modes whose keyed state outgrew the driver tier (the
-  * delta-agg aux state and the window cascade's grouped state). The state
-  * is `base` (the last flat checkpoint, or a mode's own layer over it, see
-  * [[stack]]) plus a driver-resident `key → V` overlay holding the current
-  * value of every key touched since; the touched set also keeps keys whose
-  * value vanished. The carried frame is always
+/** Keyed carried state at constant plan depth, shared by the delta-agg
+  * aux state and the window cascade's grouped state past their driver
+  * tiers, and by the streaming update-mode aggregate in both tiers. The
+  * state is `base` (the last flat checkpoint, or a mode's own layer over
+  * it, see [[stack]]) plus a driver-resident `key → V` overlay holding the
+  * current value of every key touched since; the touched set also keeps
+  * keys whose value vanished. The carried frame is always
   * {{{
   *   base ANTI JOIN broadcast(touched) ∪ render(overlay)
   * }}}
-  * one anti join deep however many epochs have passed. Each mode keeps its
-  * value type, its key condition, the render of values back to state rows
-  * (`render`, in the base's schema), how fresh keys' base rows are
-  * collected, and the fold itself.
+  * one anti join deep however many epochs have passed. With no base (a
+  * mode starting from no state) the frame is `render(overlay)` as a
+  * LocalRelation and nothing is probed, until it outgrows `limit` and
+  * checkpoints flat into the first base. Each mode keeps its value type,
+  * key condition, render (to state rows), base-probe collect and fold.
   *
   * Invariants:
+  *  - Value-hashable keys: `Row.hashCode` hashes a byte array by identity,
+  *    so [[begin]] refuses key schemas holding a binary
+  *    ([[CarriedOverlay.valueHashable]]) and the mode takes its fallback.
   *  - Identity re-base: the overlay describes only the frame it returned
   *    last. An epoch over any other state frame (a durable restore, a
-  *    repair, an epoch another path took) drops the overlay and re-bases on
-  *    that frame, which every such path leaves flat. [[invalidate]] forces
-  *    this after an epoch escaped without installing the frame it got.
+  *    repair, an epoch another path took or whose emit failed) or over no
+  *    state drops the overlay and re-bases on that frame, which every such
+  *    path leaves flat. [[invalidate]] forces this after an epoch escaped
+  *    without installing the frame it got.
   *  - Commit before emit: everything before [[carry]] is pure, so a mode
   *    may refuse the epoch there. [[carry]] applies the epoch's changes and
   *    builds (and, when due, checkpoints) the next frame; the caller emits
@@ -42,7 +47,8 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
     every: => Int, limit: => Int,
     render: Iterator[(Row, V)] => IndexedSeq[Row],
     flatten: DataFrame => DataFrame) {
-  private var base: DataFrame = _
+  private var base: Option[DataFrame] = None
+  private var schema: StructType = _
   private var keySchema: StructType = _
   private var keyCond: Column = _
   private val overlay = mutable.LinkedHashMap[Row, V]()
@@ -50,26 +56,35 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
   private var returned: Option[DataFrame] = None
   private var depth = 0
   private var carried = 0L
-  /** Epochs the overlay carried: a probe that the fast path engaged, since
-    * a silent refusal falls to a slower path that is still correct. */
+  /** Epochs the overlay carried over a base: a probe that the over-bound
+    * fast path engaged, since a silent refusal falls to a slower path that
+    * is still correct. */
   def epochs: Long = carried
 
-  def invalidate(): Unit = returned = None
+  /** Drop the state; the next epoch re-bases on the frame it is given. */
+  def invalidate(): Unit = { returned = None; reset(None) }
 
-  /** Open an epoch over `state`. Keys are rows of `keys`, whose column
-    * names differ from the state's; `cond` matches them to state rows. */
-  def begin(state: DataFrame, keys: StructType, cond: Column): Unit = {
+  /** Open an epoch over `state` (None: no state yet) of `stateSchema`
+    * rows. Keys are rows of `keys`, whose column names differ from the
+    * state's; `cond` matches them to state rows. False = refused keys. */
+  def begin(state: Option[DataFrame], stateSchema: StructType, keys: StructType,
+      cond: Column): Boolean = {
+    if (!CarriedOverlay.valueHashable(keys)) return false
     rebase(state)
+    schema = stateSchema
     keySchema = keys
     keyCond = cond
+    true
   }
 
-  /** The keys of `keys` this overlay window has not touched yet. */
-  def fresh(keys: IndexedSeq[Row]): IndexedSeq[Row] = keys.filterNot(touched.contains)
-
-  /** The base rows of fresh `keys`, as a plan the mode collects. */
-  def probe(keys: IndexedSeq[Row]): DataFrame =
-    base.join(broadcast(localDf(keys, keySchema)), keyCond, "left_semi")
+  /** The base rows of the `keys` this overlay window has not touched yet,
+    * as a plan the mode collects; None (no job) when there are none, as
+    * always with no base. */
+  def probe(keys: IndexedSeq[Row]): Option[DataFrame] = base.flatMap { b =>
+    val fresh = keys.filterNot(touched.contains)
+    if (fresh.isEmpty) None
+    else Some(b.join(broadcast(localDf(fresh, keySchema)), keyCond, "left_semi"))
+  }
 
   /** Value of `k` before this epoch: the overlay's for a touched key (None
     * once it vanished), else the mode's probe of the base. */
@@ -86,40 +101,63 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
         case None => overlay.remove(k)
       }
     }
-    val rows = render(overlay.iterator)
-    val plan = base
-      .join(broadcast(localDf(touched.toIndexedSeq, keySchema)), keyCond, "left_anti")
-      .unionByName(localDf(rows, base.schema))
-    carried += 1
-    val out = layer(plan, rows.length > limit || touched.size > limit)
-    if (depth == 0) reset(out)
+    val rendered = render(overlay.iterator)
+    val oversize = rendered.length > limit || touched.size > limit
+    val rows = localDf(rendered, schema)
+    val out = base match {
+      case None if !oversize => rows
+      case None => layer(rows, oversize = true)
+      case Some(b) =>
+        carried += 1
+        layer(b.join(broadcast(localDf(touched.toIndexedSeq, keySchema)), keyCond, "left_anti")
+          .unionByName(rows), oversize)
+    }
+    returned = Some(out)
     out
   }
 
   /** A mode's own layer `plan` over `state`: it becomes the next base. */
   def stack(state: DataFrame, plan: DataFrame): DataFrame = {
-    rebase(state)
-    val out = layer(plan, oversize = false)
-    reset(out)
-    out
+    rebase(Some(state))
+    returned = Some(layer(plan, oversize = false))
+    reset(returned)
+    returned.get
   }
 
   private def layer(plan: DataFrame, oversize: Boolean): DataFrame = {
     depth += 1
-    val out =
-      if (depth >= every || oversize) { depth = 0; flatten(plan) }
-      else plan
-    returned = Some(out)
-    out
+    if (depth < every && !oversize) plan
+    else {
+      depth = 0
+      val flat = flatten(plan)
+      reset(Some(flat))
+      flat
+    }
   }
 
-  private def rebase(state: DataFrame): Unit =
-    if (!returned.exists(_ eq state)) { reset(state); depth = 0 }
+  private def rebase(state: Option[DataFrame]): Unit =
+    if (state.isEmpty || !returned.exists(_ eq state.get)) { reset(state); depth = 0 }
 
-  private def reset(b: DataFrame): Unit = {
+  private def reset(b: Option[DataFrame]): Unit = {
     overlay.clear(); touched.clear(); base = b
   }
 
   private def localDf(rows: IndexedSeq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+}
+
+private[engine] object CarriedOverlay {
+  /** False when a binary anywhere in `schema` would make Row-keyed map
+    * lookups miss equal keys (duplicated keys, not wrong values). */
+  def valueHashable(schema: StructType): Boolean = {
+    import org.apache.spark.sql.types._
+    def ok(dt: DataType): Boolean = dt match {
+      case BinaryType => false
+      case s: StructType => s.fields.forall(f => ok(f.dataType))
+      case a: ArrayType => ok(a.elementType)
+      case m: MapType => ok(m.keyType) && ok(m.valueType)
+      case _ => true
+    }
+    schema.fields.forall(f => ok(f.dataType))
+  }
 }

@@ -1302,13 +1302,13 @@ final class MaterializedView private[engine](
     * Cleared at every merge entry; None = diff keeps the state-scan
     * spelling. */
   private var overboundSlices: Option[(DataFrame, DataFrame)] = None
-  /** Flat-checkpoint cadence of the over-bound carried state, in plan
-    * layers above the last flat checkpoint ([[CarriedOverlay]]'s depth
-    * bound). The delta-agg overlay, its mergeParts slice stack and the
-    * window-cascade overlay all read it. */
+  /** Flat-checkpoint cadence, in plan layers above the last flat
+    * checkpoint, of every [[CarriedOverlay]] of this MV and of the
+    * delta-agg mergeParts slice stack. */
   private[graft] var compactEvery = 8
-  /** Successful over-bound overlay epochs of either mode (spec probe). */
-  private[graft] def overlayEpochs: Long = auxOverlay.epochs + windowOverlay.epochs
+  /** Over-bound overlay epochs of any mode (spec and bench probe). */
+  private[graft] def overlayEpochs: Long =
+    auxOverlay.epochs + windowOverlay.epochs + streamOverlay.epochs
 
   /** Driver-local aux-state map tier (round 13): for pure-signed specs
     * (every slot folds by signed addition — no extremum/float/sketch)
@@ -1406,12 +1406,15 @@ final class MaterializedView private[engine](
   }
 
   /** Seed the map from a collected full state; false = a column type the
-    * point arithmetic doesn't cover (stay on the LocalRelation tier). */
+    * point arithmetic doesn't cover, or keys that are not value-hashable
+    * ([[CarriedOverlay.valueHashable]]): stay on the LocalRelation tier. */
   private def seedAuxMap(rows: IndexedSeq[Row],
       schema: org.apache.spark.sql.types.StructType,
       spec: DeltaAgg.Spec): Boolean = {
     val nKeys = spec.stateKeys.length
-    if (!pointFoldable(schema, nKeys) || spec.stateKeys.isEmpty) return false
+    if (!pointFoldable(schema, nKeys) || spec.stateKeys.isEmpty ||
+        !CarriedOverlay.valueHashable(
+          org.apache.spark.sql.types.StructType(schema.fields.take(nKeys)))) return false
     val m = new scala.collection.mutable.LinkedHashMap[Row, Array[Any]]()
     rows.foreach(m += splitAux(_, nKeys))
     auxLocalSchema = Some(schema)
@@ -1452,19 +1455,16 @@ final class MaterializedView private[engine](
     if (sch.fields.take(nKeys).map(_.name).toSeq != keys ||
         !pointFoldable(sch, nKeys)) return None
     val auxTypes = sch.fields.drop(nKeys).map(_.dataType).toIndexedSeq
-    auxOverlay.begin(state, org.apache.spark.sql.types.StructType(
+    if (!auxOverlay.begin(Some(state), sch, org.apache.spark.sql.types.StructType(
       touched.schema.fields.zip(keys).map { case (f, k) => f.copy(name = s"__k_$k") }),
-      keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _))
+      keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _))) return None
     // zero-job collect: the touched frame is a LocalRelation
     val epochKeys = touched.collect().toIndexedSeq
-    val newKeys = auxOverlay.fresh(epochKeys)
     // ONE bounded probe against the FLAT base for keys this overlay window
     // has not seen (plain collect — the result is ≤ one state row per
     // probed key; executeTake's scale-up rounds cost extra jobs)
-    val probed: Map[Row, Array[Any]] =
-      if (newKeys.isEmpty) Map.empty
-      else timed("state-touched")(auxOverlay.probe(newKeys).collect())
-        .map(splitAux(_, nKeys)).toMap
+    val probed = auxOverlay.probe(epochKeys).fold(Map.empty[Row, Array[Any]])(p =>
+      timed("state-touched")(p.collect()).map(splitAux(_, nKeys)).toMap)
     // the epoch keys' pre-fold current rows (a key that vanished earlier in
     // the overlay window, or a new group, surfaces no row), folded by point
     // writes into an epoch-local map — the overlay changes only in carry
@@ -1986,22 +1986,6 @@ final class MaterializedView private[engine](
   /** True while the grouped join state is maintained by the driver map. */
   private[graft] def joinStateIsLocal: Boolean = joinLocalMap.nonEmpty
 
-  /** Value-based Row hashing requirement: Array[Byte] hashes by identity
-    * inside Row.hashCode, so a binary anywhere in the schema would make
-    * map lookups miss (equality would still hold — the bug would be
-    * duplicated keys, not wrong values; reject up front). */
-  private[engine] def joinKeyable(schema: org.apache.spark.sql.types.StructType): Boolean = {
-    import org.apache.spark.sql.types._
-    def ok(dt: DataType): Boolean = dt match {
-      case BinaryType => false
-      case s: StructType => s.fields.forall(f => ok(f.dataType))
-      case a: ArrayType => ok(a.elementType)
-      case m: MapType => ok(m.keyType) && ok(m.valueType)
-      case _ => true
-    }
-    schema.fields.forall(f => ok(f.dataType))
-  }
-
   private def joinMapToDf(): DataFrame = {
     val rows = joinLocalMap.get.iterator.map { case (k, c) =>
       Row.fromSeq(k.toSeq :+ c) }.toIndexedSeq
@@ -2018,7 +2002,7 @@ final class MaterializedView private[engine](
     * distributed). */
   private def probeJoinState(grouped: DataFrame): DataFrame = {
     joinLocalMap = None
-    if (!joinOversize && joinKeyable(grouped.schema)) {
+    if (!joinOversize && CarriedOverlay.valueHashable(grouped.schema)) {
       val rows = grouped.limit(joinStateLocalMax + 1).collect()
       if (rows.length <= joinStateLocalMax) {
         val n = grouped.schema.length - 1 // CntCol last (groupedCounts layout)
@@ -2441,24 +2425,19 @@ final class MaterializedView private[engine](
     * views — the delta is rebound to the engine's session via its
     * checkpointed RDD so snapshot views land in the user-visible catalog. */
   private def handleDelta(delta: DataFrame, isAgg: Boolean): Unit = synchronized {
-    // Driver-resident keyed tail (round 9): update-mode aggregates whose
-    // state fits under [[streamLocalMax]] rows mirror the keyed state on
-    // the driver — the epoch's ops derive from a per-key map lookup
-    // ([[Changelog.localUpdateDiff]], zero jobs; emission order identical
-    // to the distributed updateDiff) and the snapshot publishes as a
-    // LocalRelation, replacing the per-epoch state scan + broadcast join
-    // (emit) AND the keyJoin-anti + union + checkpoint (merge). The delta
-    // collects ONCE, directly — the old localCheckpoint-then-collect
-    // sequence materialized every epoch's delta twice. Key count only
-    // grows in update mode, so the size latch is monotone; outgrowing it
-    // falls back to the distributed path (this epoch runs from the
-    // already-collected rows as a LocalRelation).
-    if (isAgg && !streamLocalDisabled && keyMode.isInstanceOf[MaterializedView.Keyed]) {
-      val schema = delta.schema
-      val rows = timed("delta-collect")(delta.collect())
+    // Keyed update-mode aggregates carry their state in [[streamOverlay]]:
+    // the delta collects ONCE and the ops derive driver-side from each
+    // key's previous row ([[Changelog.localUpdateDiff]], the distributed
+    // updateDiff's order). Under [[cascadeLocalMax]] state rows the epoch
+    // runs no other job. Key types with no local ordering (binary, struct,
+    // array) take the distributed updateDiff below.
+    val schema = delta.schema
+    if (isAgg && keyMode.isInstanceOf[MaterializedView.Keyed] &&
+        keyCols.forall(k => Changelog.localOrdering(schema(k).dataType).nonEmpty)) {
+      val rows = timed("delta-collect")(delta.collect()).toIndexedSeq
       if (rows.isEmpty) return
-      if (streamLocalTail(rows.toIndexedSeq, schema)) return
-      handleDeltaDistributed(localDf(rows.toIndexedSeq, schema), isAgg)
+      if (!streamOverlayEpoch(rows, schema))
+        handleDeltaDistributed(localDf(rows, schema), isAgg)
       return
     }
     val clone = timed("delta-checkpoint")(delta.localCheckpoint(true))
@@ -2499,51 +2478,34 @@ final class MaterializedView private[engine](
     snapshot.get.createOrReplaceTempView(viewName)
   }
 
-  /** Previous keyed state, driver-resident for the streaming aggregate's
-    * local epoch tail (key → current row). None when the snapshot came
-    * from elsewhere (restore/fallback) — re-seeded by a bounded probe. */
-  private var streamMirror:
-    Option[scala.collection.mutable.LinkedHashMap[List[Any], Row]] = None
-  private var streamLocalDisabled = false
-  // private[graft]: specs shrink it to force the distributed fallback
-  private[graft] var streamLocalMax = 50000
+  /** Keyed streaming state, key tuple → current row, from no base. */
+  private lazy val streamOverlay = new CarriedOverlay[Row](spark,
+    compactEvery, cascadeLocalMax, _.map(_._2).toIndexedSeq,
+    df => timed("state-merge")(df.localCheckpoint(true)))
 
-  /** Attempt the driver-resident keyed epoch: true = epoch fully handled
-    * (ops emitted, mirror + snapshot updated); false = caller runs the
-    * distributed path (and the latch is set, so it keeps doing so). */
-  private def streamLocalTail(deltaRows: IndexedSeq[Row],
+  /** One keyed streaming epoch over locally ordered keys; false = the
+    * overlay refused them. The snapshot installs after the emit: if the
+    * emit fails, the next epoch's identity re-base drops the overlay. */
+  private def streamOverlayEpoch(rows: IndexedSeq[Row],
       schema: org.apache.spark.sql.types.StructType): Boolean = {
+    import org.apache.spark.sql.functions.col
     val keyIdx = keyCols.map(schema.fieldIndex).toArray
-    if (streamMirror.isEmpty) {
-      if (snapshot.isEmpty)
-        streamMirror = Some(scala.collection.mutable.LinkedHashMap.empty)
-      else {
-        // re-seed from an existing snapshot (recovery, late enablement),
-        // bounded: an over-large state disables the tail permanently
-        val probe = snapshot.get.limit(streamLocalMax + 1).collect()
-        if (probe.length > streamLocalMax) { streamLocalDisabled = true; return false }
-        val m = scala.collection.mutable.LinkedHashMap.empty[List[Any], Row]
-        probe.foreach(r => m.update(keyIdx.map(r.get).toList, r))
-        streamMirror = Some(m)
-      }
-    }
-    val mirror = streamMirror.get
-    if (mirror.size + deltaRows.length > streamLocalMax) {
-      streamLocalDisabled = true; streamMirror = None; return false
-    }
-    val pairs: Seq[(Option[Row], Row)] =
-      deltaRows.toIndexedSeq.map(r => (mirror.get(keyIdx.map(r.get).toList), r))
-    Changelog.localUpdateDiff(pairs, keyIdx, schema) match {
-      case None => streamLocalDisabled = true; streamMirror = None; false
-      case Some(ops) =>
-        if (ops.nonEmpty) timed("emitOps")(emitOps(localDf(ops.toIndexedSeq,
-          schema.add("op", org.apache.spark.sql.types.StringType))))
-        deltaRows.foreach(r => mirror.update(keyIdx.map(r.get).toList, r))
-        val nextVisible = localDf(mirror.values.toIndexedSeq, schema)
-        snapshot = Some(nextVisible)
-        nextVisible.createOrReplaceTempView(viewName)
-        true
-    }
+    val keySchema = org.apache.spark.sql.types.StructType(
+      keyIdx.map(i => schema(i).copy(name = s"__k_${schema(i).name}")))
+    if (!streamOverlay.begin(snapshot, schema, keySchema,
+        keyCols.map(c => col(c) <=> col(s"__k_$c")).reduce(_ && _))) return false
+    def key(r: Row): Row = Row.fromSeq(keyIdx.toSeq.map(r.get))
+    val keyed = rows.map(r => key(r) -> r)
+    val probed = streamOverlay.probe(keyed.map(_._1)).fold(Map.empty[Row, Row])(p =>
+      timed("state-touched")(p.collect()).map(r => key(r) -> r).toMap)
+    val ops = Changelog.localUpdateDiff(
+      keyed.map { case (k, r) => (streamOverlay.current(k, probed), r) }, keyIdx, schema).get
+    val next = streamOverlay.carry(keyed.map { case (k, r) => k -> Some(r) })
+    if (ops.nonEmpty) timed("emitOps")(emitOps(localDf(ops.toIndexedSeq,
+      schema.add("op", org.apache.spark.sql.types.StringType))))
+    snapshot = Some(next)
+    next.createOrReplaceTempView(viewName)
+    true
   }
 
   /** Merge a micro-batch delta into a carried state: plain append for
@@ -2667,7 +2629,7 @@ final class MaterializedView private[engine](
         frozen = None
         topNVisibleRows = None
         sessionVisibleRows = None
-        streamMirror = None
+        streamOverlay.invalidate()
         engine.releaseStreamReaders(viewName)
         faceStreams.clear() // faces die with streaming mode (engine cascades)
         val df = spark.sql(engine.rewrite(stmt))

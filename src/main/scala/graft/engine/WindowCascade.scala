@@ -919,8 +919,8 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     val outSchema = org.apache.spark.sql.types.StructType(gSchema.fields.dropRight(1))
     val n = outSchema.length
     if (gSchema.fields.last.name != MaterializedView.CntCol) return false
-    windowOverlay.begin(state, touched.schema, windowStateKeys.indices
-      .map(i => windowStateKeyCol(i) <=> col(s"__k_$i")).reduce(_ && _))
+    if (!windowOverlay.begin(Some(state), gSchema, touched.schema, windowStateKeys.indices
+      .map(i => windowStateKeyCol(i) <=> col(s"__k_$i")).reduce(_ && _))) return false
     // 1. recomputed touched slice, state keys evaluated alongside (the
     // local tier's spelling — ONE job, driver-bounded)
     val sliceRows = timed("group-recompute")(
@@ -931,19 +931,18 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     // seen (a vanished key correctly surfaces no rows), one bounded grouped
     // probe against the flat base for the fresh ones
     val keyRows = touchedRows.toIndexedSeq
-    val fresh = windowOverlay.fresh(keyRows)
-    val probedOld =
-      if (fresh.isEmpty) Map.empty[Row, IndexedSeq[Row]]
-      else {
+    val probedOld = windowOverlay.probe(keyRows) match {
+      case None => Map.empty[Row, IndexedSeq[Row]]
+      case Some(p) =>
         val probed = timed("state-touched")(collectWithStateKeys(
-          windowOverlay.probe(fresh), gSchema.fieldNames.toIndexedSeq))
+          p, gSchema.fieldNames.toIndexedSeq))
         if (probed.length > windowLocalStateMax ||
             probed.map(_.getLong(n)).sum > windowLocalStateMax) return false
         groupSliceByKey(probed, n + 1).map { case (k, grouped) =>
           k -> grouped.flatMap(g => IndexedSeq.fill(g.getLong(n).toInt)(
             Row.fromSeq((0 until n).map(g.get))))
         }
-      }
+    }
     val oldSlice = keyRows.flatMap(k =>
       windowOverlay.current(k, probedOld).getOrElse(IndexedSeq.empty[Row]))
     val newSlice = newByKey.valuesIterator.flatten.toIndexedSeq
@@ -1358,7 +1357,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       // misaligned layout) falls through to the distributed fold, which
       // stays the 100 TB path.
       val stateLocalRows: Option[Array[Row]] =
-        if (windowInputOversize || !joinKeyable(windowInputState.get.schema) ||
+        if (windowInputOversize || !CarriedOverlay.valueHashable(windowInputState.get.schema) ||
             windowInputState.get.columns.lastOption
               .forall(_ != MaterializedView.CntCol)) None
         else windowInputState.get.queryExecution.logical match {

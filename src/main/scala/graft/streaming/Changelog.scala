@@ -224,8 +224,8 @@ object Changelog {
   }
 
   /** Driver-side equivalent of [[updateDiff]] for a keyed update-mode
-    * delta whose previous per-key values are already known (a state
-    * mirror): Insert for brand-new keys, UpdateDelete/UpdateInsert for
+    * delta whose previous per-key values are already known (a carried
+    * keyed state): Insert for brand-new keys, UpdateDelete/UpdateInsert for
     * changed ones, nothing for value-identical rows — sorted by the key
     * columns (ascending NULLS FIRST, Spark's binary string order) then op
     * rank, byte-identical to [[updateDiff]]'s emission order. Zero Spark

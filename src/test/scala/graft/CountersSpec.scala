@@ -61,6 +61,11 @@ class CountersSpec extends SparkSpec {
     // slice-reused visible diff — steady-state epochs are delta-aux only
     // (the residual jobs/bytes are the every-8-epochs flat checkpoint)
     "s_mv_pkagg_fold_overbound" -> (2.25, 15628L),
+    // the streaming tumble aggregate past its keyed-state bound: one flat
+    // checkpoint when the state first outgrows it, then base-probe jobs for
+    // each epoch's new keys and a checkpoint whenever the touched set
+    // outgrows the bound; the shuffle is the tumble entry's own
+    "s_mv_tumble_maintain_overbound" -> (2.625, 171094L),
   )
 
   for (d <- Bench.streamDefs) {
