@@ -8,7 +8,8 @@ import scala.collection.mutable
 
 /** Keyed carried state at constant plan depth, shared by the delta-agg
   * aux state and the window cascade's grouped state past their driver
-  * tiers, and by the streaming update-mode aggregate in both tiers. The
+  * tiers, and in both tiers by the streaming update-mode aggregate and
+  * the delta-join cascade's grouped state (output row → multiplicity). The
   * state is `base` (the last flat checkpoint, or a mode's own layer over
   * it, see [[stack]]) plus a driver-resident `key → V` overlay holding the
   * current value of every key touched since; the touched set also keeps
@@ -16,10 +17,13 @@ import scala.collection.mutable
   * {{{
   *   base ANTI JOIN broadcast(touched) ∪ render(overlay)
   * }}}
-  * one anti join deep however many epochs have passed. With no base (a
-  * mode starting from no state) the frame is `render(overlay)` as a
-  * LocalRelation and nothing is probed, until it outgrows `limit` and
-  * checkpoints flat into the first base. Each mode keeps its value type,
+  * one anti join deep however many epochs have passed. The anti join
+  * names only the touched keys that may have a base row: a key the last
+  * [[probe]] asked for and the mode's collect did not return is left
+  * out, and with no such key the frame is `base ∪ render(overlay)`. With
+  * no base (a mode starting from no state) the frame is `render(overlay)`
+  * as a LocalRelation and nothing is probed, until it outgrows `limit`
+  * and checkpoints flat into the first base. Each mode keeps its value type,
   * key condition, render (to state rows), base-probe collect and fold.
   *
   * Invariants:
@@ -32,11 +36,12 @@ import scala.collection.mutable
   *    state drops the overlay and re-bases on that frame, which every such
   *    path leaves flat. [[invalidate]] forces this after an epoch escaped
   *    without installing the frame it got.
-  *  - Commit before emit: everything before [[carry]] is pure, so a mode
-  *    may refuse the epoch there. [[carry]] applies the epoch's changes and
-  *    builds (and, when due, checkpoints) the next frame; the caller emits
-  *    the epoch's changelog ops only after it returns, so a failure in it
-  *    has emitted nothing.
+  *  - Commit before emit: everything before [[carry]] is pure (beyond
+  *    [[current]] noting keys the base lacks), so a mode may refuse the
+  *    epoch there. [[carry]] applies the epoch's changes and builds (and,
+  *    when due, checkpoints) the next frame; the caller emits the epoch's
+  *    changelog ops only after it returns, so a failure in it has emitted
+  *    nothing.
   *  - Depth bound: `depth` counts plan layers above the last flat
   *    checkpoint, whether [[carry]] or a mode's own slice stack ([[stack]])
   *    added them. At `every` layers, or when the rendered overlay or the
@@ -53,6 +58,9 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
   private var keyCond: Column = _
   private val overlay = mutable.LinkedHashMap[Row, V]()
   private val touched = mutable.LinkedHashSet[Row]()
+  /** Touched keys a probe found no base row for: the anti join skips them. */
+  private val absent = mutable.HashSet[Row]()
+  private var probed: collection.Set[Row] = Set.empty
   private var returned: Option[DataFrame] = None
   private var depth = 0
   private var carried = 0L
@@ -61,8 +69,12 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
     * is still correct. */
   def epochs: Long = carried
 
+  /** Whether `state` is the frame this overlay returned last, held whole
+    * in the overlay (no base). */
+  def holdsAll(state: DataFrame): Boolean = base.isEmpty && returned.exists(_ eq state)
+
   /** Drop the state; the next epoch re-bases on the frame it is given. */
-  def invalidate(): Unit = { returned = None; reset(None) }
+  def invalidate(): Unit = rebase(None)
 
   /** Open an epoch over `state` (None: no state yet) of `stateSchema`
     * rows. Keys are rows of `keys`, whose column names differ from the
@@ -82,18 +94,27 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
     * always with no base. */
   def probe(keys: IndexedSeq[Row]): Option[DataFrame] = base.flatMap { b =>
     val fresh = keys.filterNot(touched.contains)
+    probed = fresh.toSet
     if (fresh.isEmpty) None
     else Some(b.join(broadcast(localDf(fresh, keySchema)), keyCond, "left_semi"))
   }
 
   /** Value of `k` before this epoch: the overlay's for a touched key (None
-    * once it vanished), else the mode's probe of the base. */
-  def current(k: Row, probed: collection.Map[Row, V]): Option[V] =
-    if (touched.contains(k)) overlay.get(k) else probed.get(k)
+    * once it vanished), else the mode's collect of the last [[probe]]. */
+  def current(k: Row, found: collection.Map[Row, V]): Option[V] =
+    if (touched.contains(k)) overlay.get(k)
+    else {
+      val v = found.get(k)
+      if (v.isEmpty && probed.contains(k)) absent += k
+      v
+    }
 
   /** Commit the epoch's new values (None = the key vanished) and return
     * the next carried frame. */
   def carry(changes: Iterable[(Row, Option[V])]): DataFrame = {
+    // an escape before the new frame is returned (a flatten job) must not
+    // leave the applied changes matched to the old frame
+    returned = None
     changes.foreach { case (k, v) =>
       touched += k
       v match {
@@ -109,8 +130,10 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
       case None => layer(rows, oversize = true)
       case Some(b) =>
         carried += 1
-        layer(b.join(broadcast(localDf(touched.toIndexedSeq, keySchema)), keyCond, "left_anti")
-          .unionByName(rows), oversize)
+        val shadowed = touched.filterNot(absent).toIndexedSeq
+        val kept = if (shadowed.isEmpty) b
+          else b.join(broadcast(localDf(shadowed, keySchema)), keyCond, "left_anti")
+        layer(kept.unionByName(rows), oversize)
     }
     returned = Some(out)
     out
@@ -136,10 +159,12 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
   }
 
   private def rebase(state: Option[DataFrame]): Unit =
-    if (state.isEmpty || !returned.exists(_ eq state.get)) { reset(state); depth = 0 }
+    if (state.isEmpty || !returned.exists(_ eq state.get)) {
+      returned = None; reset(state); depth = 0
+    }
 
   private def reset(b: Option[DataFrame]): Unit = {
-    overlay.clear(); touched.clear(); base = b
+    overlay.clear(); touched.clear(); absent.clear(); probed = Set.empty; base = b
   }
 
   private def localDf(rows: IndexedSeq[Row], schema: StructType): DataFrame =

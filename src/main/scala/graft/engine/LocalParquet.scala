@@ -108,10 +108,9 @@ private[engine] object LocalParquet {
       true
     } catch {
       case t: Throwable =>
-        if (java.lang.Boolean.getBoolean("graft.debugLocalParquet"))
-          t.printStackTrace()
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"driver-side parquet write failed, falling back to Spark: $t")
+        val log = org.slf4j.LoggerFactory.getLogger(getClass)
+        log.warn(s"driver-side parquet write failed, falling back to Spark: $t")
+        log.debug("driver-side parquet write failure", t)
         false
     }
   }

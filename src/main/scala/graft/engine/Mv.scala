@@ -909,9 +909,7 @@ final class MaterializedView private[engine](
     * LEFT dim GROUP BY dim col), previously recompute-mode, now folds. */
   private[engine] def admitDeltaAgg(df: DataFrame, ups: Seq[MaterializedView],
                             tbls: Seq[LiveTable]): Option[DeltaAgg.Spec] = {
-    if ((ups.isEmpty && tbls.isEmpty) ||
-        // ops escape hatch + A/B measurement flag
-        java.lang.Boolean.getBoolean("graft.disableDeltaAgg")) return None
+    if (ups.isEmpty && tbls.isEmpty) return None
     // upstream MVs admit exactly like tables (round 12): their changelogs
     // carry the same 4-op contract, CascadeSrc already exposes snap() for
     // the OLD reconstruction and the extremum re-fetch, and the textual
@@ -1308,7 +1306,7 @@ final class MaterializedView private[engine](
   private[graft] var compactEvery = 8
   /** Over-bound overlay epochs of any mode (spec and bench probe). */
   private[graft] def overlayEpochs: Long =
-    auxOverlay.epochs + windowOverlay.epochs + streamOverlay.epochs
+    auxOverlay.epochs + windowOverlay.epochs + streamOverlay.epochs + joinOverlay.epochs
 
   /** Driver-local aux-state map tier (round 13): for pure-signed specs
     * (every slot folds by signed addition — no extremum/float/sketch)
@@ -1776,8 +1774,7 @@ final class MaterializedView private[engine](
           if (!new java.io.File(s"$d/inner").isDirectory ||
               !cascadeUpstreams.forall(u =>
                 offsets.get(u.viewName).exists(_ <= u.log.latestOffset))) None
-          else Some((offsets,
-            spark.read.parquet(s"$d/inner").localCheckpoint(true)))
+          else Some((offsets, probeJoinState(spark.read.parquet(s"$d/inner"))))
         } catch { case _: Throwable => None }
       }
       restored match {
@@ -1791,7 +1788,7 @@ final class MaterializedView private[engine](
       }
       true
     } catch { case t: Throwable =>
-      if (java.lang.Boolean.getBoolean("graft.debugJoinCascade")) t.printStackTrace()
+      MaterializedView.log.debug(s"delta-join cascade refused for $viewName", t)
       joinMode = false
       cascadeMode = false
       cascadeUpstreams = Nil
@@ -1967,55 +1964,42 @@ final class MaterializedView private[engine](
       .select(cols.map(col): _*)
   }
 
-  /** Driver-local grouped-state map tier for the delta-join cascade
-    * (round 14, verdict #5): the carried state is (row → multiplicity),
-    * exactly a map keyed by the output row — while it fits
-    * [[joinStateLocalMax]] rows (and the schema is binary-free, so Row
-    * hashing is value-based), each epoch's already-netted delta folds by
-    * point arithmetic instead of the distributed (state ∪ net) hash
-    * aggregation that re-shuffled the FULL state every epoch (the largest
-    * per-epoch shuffle among the fold modes for three rounds). Same
-    * bound / monotone-latch / demote-on-overflow discipline as
-    * [[auxLocalMap]]; outgrowing the bound hands a consistent checkpoint
-    * to the distributed merge for good — the 100 TB path. */
-  private var joinLocalMap: Option[scala.collection.mutable.LinkedHashMap[
-    Row, Long]] = None
-  private var joinLocalSchema: Option[org.apache.spark.sql.types.StructType] = None
-  private[graft] var joinStateLocalMax = 200000
-  private var joinOversize = false
-  /** True while the grouped join state is maintained by the driver map. */
-  private[graft] def joinStateIsLocal: Boolean = joinLocalMap.nonEmpty
+  /** Grouped join state (output row → multiplicity) as a
+    * [[CarriedOverlay]] keyed by the output row, null-safely (LEFT-join
+    * rows are NULL-padded): no base while the state fits
+    * [[cascadeLocalMax]] rows, else `base ANTI JOIN touched ∪ overlay` at
+    * constant depth. A count ≤ 0 leaves the overlay as a vanished key. */
+  private lazy val joinOverlay = new CarriedOverlay[Long](spark,
+    compactEvery, cascadeLocalMax,
+    _.map { case (k, c) => Row.fromSeq(k.toSeq :+ c) }.toIndexedSeq,
+    df => timed("state-merge")(df.localCheckpoint(true)))
+  /** True while the whole grouped join state is the overlay's, with no base. */
+  private[graft] def joinStateIsLocal: Boolean = cascadeInner.exists(joinOverlay.holdsAll)
 
-  private def joinMapToDf(): DataFrame = {
-    val rows = joinLocalMap.get.iterator.map { case (k, c) =>
-      Row.fromSeq(k.toSeq :+ c) }.toIndexedSeq
-    localDf(rows, joinLocalSchema.get)
+  /** Open a [[joinOverlay]] epoch over `state` (None: seed) of grouped
+    * rows (output columns, then [[MaterializedView.CntCol]]); false = a
+    * binary output column. */
+  private def beginJoinOverlay(state: Option[DataFrame],
+      schema: org.apache.spark.sql.types.StructType): Boolean = {
+    import org.apache.spark.sql.functions.col
+    val out = schema.fields.dropRight(1)
+    joinOverlay.begin(state, schema, org.apache.spark.sql.types.StructType(
+      out.map(f => f.copy(name = s"__k_${f.name}", nullable = true))),
+      out.map(f => col(f.name) <=> col(s"__k_${f.name}")).reduce(_ && _))
   }
 
-  /** Probe a distributed grouped state down to the driver map (and a
-    * LocalRelation frame) while it fits; past the bound, latch oversize
-    * (monotone — the probe re-executes the full merge plan, so re-probing
-    * every epoch would pay O(state) twice) and checkpoint. Called on every
-    * distributed grouped-state materialization: initial backfill, the
-    * recompute fallback, and distributed-merge epochs (incl. the first
-    * epoch after a durable reopen, whose restored state arrives
-    * distributed). */
+  private def joinKey(r: Row, n: Int): Row = Row.fromSeq((0 until n).map(r.get))
+
+  /** Re-localize a distributed grouped state (initial backfill, the
+    * recompute fallback, a durable restore): while it fits, it seeds the
+    * overlay's no-base tier; past the bound (or over binary columns) it
+    * checkpoints flat and the next epoch carries over it as the base. */
   private def probeJoinState(grouped: DataFrame): DataFrame = {
-    joinLocalMap = None
-    if (!joinOversize && CarriedOverlay.valueHashable(grouped.schema)) {
-      val rows = grouped.limit(joinStateLocalMax + 1).collect()
-      if (rows.length <= joinStateLocalMax) {
-        val n = grouped.schema.length - 1 // CntCol last (groupedCounts layout)
-        val m = new scala.collection.mutable.LinkedHashMap[Row, Long]()
-        rows.foreach(r => m.update(Row.fromSeq((0 until n).map(r.get)), r.getLong(n)))
-        joinLocalSchema = Some(grouped.schema)
-        joinLocalMap = Some(m)
-        return localDf(rows.toIndexedSeq, grouped.schema)
-      }
-      // oversized: probe rows discarded, the plan runs again into the
-      // checkpoint — boundedLocal's documented cost asymmetry (a one-off
-      // backfill-class epoch; the steady state never pays it)
-      joinOversize = true
+    val n = grouped.schema.length - 1 // CntCol last (groupedCounts layout)
+    if (beginJoinOverlay(None, grouped.schema)) {
+      val rows = grouped.limit(cascadeLocalMax + 1).collect()
+      if (rows.length <= cascadeLocalMax)
+        return joinOverlay.carry(rows.map(r => joinKey(r, n) -> Some(r.getLong(n))))
     }
     grouped.localCheckpoint(true)
   }
@@ -2035,10 +2019,14 @@ final class MaterializedView private[engine](
     *
     * 100 TB shape: each term is the statement's own Catalyst join plan
     * with the delta side explicitly broadcast — the big sides (source
-    * snapshots) are never shuffled; the state merge is one hash
-    * aggregation over (grouped state ∪ net delta). Any term that fails to
-    * rebind (pathological aliasing) falls back to a full recompute +
-    * multiset diff — correct, just not delta-proportional. */
+    * snapshots) are never shuffled. The net lands on the driver and folds
+    * into [[joinOverlay]]: past its bound the state is probed only for
+    * the net's keys new to the overlay window (one broadcast semi join)
+    * and checkpointed flat every [[compactEvery]] epochs, never
+    * re-aggregated whole. Binary output columns and oversized nets take
+    * the hash aggregation over (grouped state ∪ net delta). Any term that
+    * fails to rebind (pathological aliasing) falls back to a full
+    * recompute + multiset diff — correct, just not delta-proportional. */
   private def joinCascadeEpoch(): Unit = synchronized {
     import org.apache.spark.sql.functions.{abs, broadcast, col, lit, sum}
     if (cascadeUpstreams.isEmpty) return
@@ -2187,14 +2175,13 @@ final class MaterializedView private[engine](
       val netPlan = pinLocal1(termFrames.reduce(_ union _))
         .groupBy(outCols.map(col): _*).agg(sum(col("__d")).as("__d"))
         .filter(col("__d") =!= 0)
-      // map tier engaged → land the (delta-proportional) net driver-side:
-      // the keyed probe and the ops derivation below then plan over a
-      // LocalRelation (zero extra jobs) and the state merge is pure point
-      // arithmetic. An oversized net is a backfill-class epoch — fall to
-      // the distributed spellings for this epoch (the merge probe below
-      // re-localizes when the state still fits).
+      // land the (delta-proportional) net driver-side: the keyed probe
+      // and the ops derivation below then plan over a LocalRelation (zero
+      // extra jobs) and the state folds into the overlay. Binary columns
+      // or an oversized net (a backfill-class epoch) fall to the
+      // distributed spellings for this epoch.
       val netRows: Option[IndexedSeq[Row]] =
-        if (joinLocalMap.isEmpty) None
+        if (!CarriedOverlay.valueHashable(netPlan.schema)) None
         else {
           val rows = timed("delta-terms")(netPlan.limit(cascadeLocalMax + 1).collect())
           if (rows.length <= cascadeLocalMax) Some(rows.toIndexedSeq) else None
@@ -2214,7 +2201,7 @@ final class MaterializedView private[engine](
             case Some(rows) =>
               // driver-side probe — same (__p > 1 || __m > 1) per key as
               // the distributed spelling below (keys are binary-free here:
-              // the map tier admitted the full output schema)
+              // only value-hashable nets land)
               val keyIdx = keyCols.map(outCols.indexOf).toArray
               val n = outCols.length
               val pm = scala.collection.mutable.HashMap[Row, (Long, Long)]()
@@ -2247,35 +2234,28 @@ final class MaterializedView private[engine](
       // with NOTHING emitted this epoch — the fallback's diff against the
       // pre-epoch cascadeInner then emits the epoch's delta exactly once
       // (emit-then-merge could double-emit: the fallback would re-diff
-      // rows whose ops were already appended). A partial map fold that
-      // throws mid-epoch is repaired the same way: the fallback recompute
-      // re-seeds the map from scratch via probeJoinState.
-      val merged = timed("state-merge")((joinLocalMap, netRows) match {
-        case (Some(m), Some(rows)) =>
-          // point-merge: zero jobs, no state shuffle. ≤ 0 leaves the map —
-          // the distributed merge's `CntCol > 0` filter.
+      // rows whose ops were already appended). The overlay commits in
+      // carry; an epoch that escapes after it leaves cascadeInner on the
+      // pre-epoch frame, so the next epoch's identity re-base drops it.
+      val merged = timed("state-merge")(netRows match {
+        case Some(rows) if beginJoinOverlay(cascadeInner, cascadeInner.get.schema) =>
+          // point fold: the base is probed only for keys new to the
+          // overlay window (no job with no base); ≤ 0 leaves the overlay —
+          // the distributed merge's `CntCol > 0` filter
           val n = outCols.length
-          rows.foreach { r =>
-            val key = Row.fromSeq((0 until n).map(r.get))
-            val next = Math.addExact(m.getOrElse(key, 0L), r.getLong(n))
-            if (next <= 0L) m.remove(key) else m.update(key, next)
-          }
-          if (m.size <= joinStateLocalMax) joinMapToDf()
-          else {
-            // outgrew the bound: hand a consistent frame to the
-            // distributed tier for good (monotone latch)
-            val full = joinMapToDf()
-            joinLocalMap = None
-            joinOversize = true
-            full.localCheckpoint(true)
-          }
+          val keyed = rows.map(r => joinKey(r, n) -> r.getLong(n))
+          val probed = joinOverlay.probe(keyed.map(_._1)).fold(Map.empty[Row, Long])(p =>
+            timed("state-touched")(p.collect()).map(r => joinKey(r, n) -> r.getLong(n)).toMap)
+          joinOverlay.carry(keyed.map { case (k, d) =>
+            k -> Some(Math.addExact(joinOverlay.current(k, probed).getOrElse(0L), d)).filter(_ > 0L)
+          })
         case _ =>
-          probeJoinState(
-            cascadeInner.get.unionByName(
-                net.withColumnRenamed("__d", MaterializedView.CntCol))
-              .groupBy(outCols.map(col): _*)
-              .agg(sum(col(MaterializedView.CntCol)).as(MaterializedView.CntCol))
-              .filter(col(MaterializedView.CntCol) > 0))
+          cascadeInner.get.unionByName(
+              net.withColumnRenamed("__d", MaterializedView.CntCol))
+            .groupBy(outCols.map(col): _*)
+            .agg(sum(col(MaterializedView.CntCol)).as(MaterializedView.CntCol))
+            .filter(col(MaterializedView.CntCol) > 0)
+            .localCheckpoint(true)
       })
       emitOps(keyedOps.getOrElse(Changelog.netOps(net, outCols, "__d")))
       emitted = true
@@ -2294,9 +2274,8 @@ final class MaterializedView private[engine](
       MaterializedView.log.warn(
         s"delta-join epoch for $viewName fell back to full recompute: $t")
       statementEvals += 1
-      // prevVis BEFORE probeJoinState re-seeds the map: the old
-      // cascadeInner is its own frame (joinMapToDf copies rows), but the
-      // emit below must diff against the PRE-epoch state
+      // the emit below diffs against the PRE-epoch state: cascadeInner,
+      // whose overlay rows are copied into its LocalRelations
       val prevGrouped = cascadeInner.get
       val grouped = probeJoinState(groupedCounts(spark.sql(cascadeStmt)))
       val vis = expandCounts(grouped)
@@ -2314,13 +2293,6 @@ final class MaterializedView private[engine](
       // handler above): restore the consumed offsets so the next epoch
       // re-folds this delta instead of losing it (round-12 ADVICE);
       // post-commit, state merged BEFORE the emit, so the offsets stand.
-      // The driver map folds IN PLACE before the commit point — on any
-      // non-settled escape it may hold a partially/fully applied delta
-      // while the offsets are restored (a retry would double-fold), so
-      // drop it: cascadeInner (the pre-epoch frame — joinMapToDf copies
-      // rows out of the map) stays the consistent state and the next
-      // distributed merge re-seeds.
-      if (!settled) joinLocalMap = None
       if (!settled && !emitted) restoreOffsets(prevOffsets)
       tempViews.foreach(spark.catalog.dropTempView(_))
     }

@@ -456,7 +456,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       }
       true
     } catch { case t: Throwable =>
-      if (java.lang.Boolean.getBoolean("graft.debugJoinCascade")) t.printStackTrace()
+      MaterializedView.log.debug(s"window cascade refused for $viewName", t)
       windowMode = false
       cascadeMode = false
       cascadeUpstreams = Nil
@@ -1173,7 +1173,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       }
       true
     } catch { case t: Throwable =>
-      if (java.lang.Boolean.getBoolean("graft.debugJoinCascade")) t.printStackTrace()
+      MaterializedView.log.debug(s"global-window fold refused for $viewName", t)
       windowGlobalMode = false
       cascadeUpstreams = Nil
       windowInputState = None

@@ -66,6 +66,11 @@ class CountersSpec extends SparkSpec {
     // each epoch's new keys and a checkpoint whenever the touched set
     // outgrows the bound; the shuffle is the tumble entry's own
     "s_mv_tumble_maintain_overbound" -> (2.625, 171094L),
+    // the left-join fold past its grouped-state bound: one flat checkpoint
+    // when the state first outgrows it, then a base probe for each epoch's
+    // new rows and a flat checkpoint whenever the touched set outgrows the
+    // bound; no state shuffle
+    "s_mv_left_join_fold_overbound" -> (4.5, 4096L),
   )
 
   for (d <- Bench.streamDefs) {

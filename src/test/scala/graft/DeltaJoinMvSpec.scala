@@ -728,12 +728,12 @@ class DeltaJoinMvSpec extends SparkSpec {
     us.insert(Seq(Row(1L, "ann"), Row(2L, "bob")))
     rw.flush()
     assert(mv.joinStateIsLocal,
-      "a bounded binary-free grouped state must seed the driver map at backfill")
+      "a bounded binary-free grouped state must seed the overlay at backfill")
     ev.insert(Seq(Row(10L, 1L, 5.0), Row(11L, 2L, 7.0)))
     rw.flush()
-    assert(mv.joinStateIsLocal, "delta epochs must keep the map tier engaged")
+    assert(mv.joinStateIsLocal, "delta epochs must keep the state driver-resident")
     assert(joinRows(mv) == Set((10L, "ann", 5.0), (11L, "bob", 7.0)))
-    // retraction folds through the map by point arithmetic
+    // retraction folds through the overlay by point arithmetic
     rw.execute("DELETE FROM djl_ev WHERE event_id = 10")
     rw.flush()
     assert(joinRows(mv) == Set((11L, "bob", 7.0)))
@@ -749,29 +749,109 @@ class DeltaJoinMvSpec extends SparkSpec {
       "JOIN djo_user u ON u.uid = e.user_id", "djo_bound_mv")
     val mv = rw.mvByName("djo_bound_mv").get
     assert(mv.isDeltaJoinMode)
-    mv.joinStateLocalMax = 3 // shrink the bound: the fold must outgrow it
+    mv.cascadeLocalMax = 3 // shrink the bound: the fold must outgrow it
     val ev = rw.table("djo_ev").get
     val us = rw.table("djo_user").get
     us.insert(Seq(Row(1L, "ann"), Row(2L, "bob")))
     ev.insert(Seq(Row(10L, 1L, 5.0), Row(11L, 2L, 7.0)))
     rw.flush()
     assert(mv.joinStateIsLocal, "state of 2 rows fits the shrunken bound")
-    // push the state past the bound mid-fold: the map must hand a
-    // CONSISTENT frame to the distributed tier and latch (monotone)
+    // push the state past the bound mid-fold (a 6-row net is oversized
+    // too): the merge must checkpoint a CONSISTENT flat frame
     ev.insert((20L to 25L).map(i => Row(i, 1L, i.toDouble)))
     rw.flush()
-    assert(!mv.joinStateIsLocal, "outgrowing the bound must drop the map")
+    assert(!mv.joinStateIsLocal, "outgrowing the bound must leave the driver")
     val expected = Set((11L, "bob", 7.0), (10L, "ann", 5.0)) ++
       (20L to 25L).map(i => (i, "ann", i.toDouble))
     assert(joinRows(mv) == expected, "the handed-off frame must be consistent")
-    // shrinking back below the bound must NOT re-engage (monotone latch —
-    // the probe would re-execute the full merge plan every epoch)
+    // shrinking back below the bound keeps the state over its base: only
+    // a re-localizing probe (backfill, recompute, restore) drops the base
     rw.execute("DELETE FROM djo_ev WHERE event_id >= 20")
     rw.flush()
-    assert(!mv.joinStateIsLocal, "the oversize latch is monotone")
+    assert(!mv.joinStateIsLocal, "the base stays once the state outgrew the bound")
     assert(joinRows(mv) == Set((10L, "ann", 5.0), (11L, "bob", 7.0)),
       "the distributed tier must keep folding correctly after the latch")
     assert(mv.isDeltaJoinMode, "no demotion anywhere in the hand-off")
+    rw.close()
+  }
+
+  test("grouped join state past its driver bound carries at constant depth") {
+    val rw = GraftEngine.open(ConnOptions(), Some(spark))
+    rw.createTable("djc_ev", evSchema, primaryKey = Seq("event_id"))
+    rw.createTable("djc_user", userSchema, primaryKey = Seq("uid"))
+    val ev = rw.table("djc_ev").get
+    val us = rw.table("djc_user").get
+    us.insert(Seq(Row(1L, "ann"), Row(2L, "bob")))
+    ev.insert(Seq(Row(1L, 1L, 1.0), Row(2L, 1L, 1.0), Row(3L, 2L, 2.0)))
+    rw.flush()
+    // the output drops the PK, so equal rows repeat (multiplicity > 1),
+    // and events of unknown users are NULL-padded
+    val sql = "SELECT u.name, e.value FROM djc_ev e LEFT JOIN djc_user u ON u.uid = e.user_id"
+    val mv = rw.mv(sql, "djc_mv")
+    assert(mv.isDeltaJoinMode)
+    val evals = mv.statementEvals
+    // every net below has at most 5 rows and two epochs touch at most 5
+    // keys: the state carries with no base for two barriers, outgrows the
+    // bound at the third and checkpoints flat, then carries over a base
+    // and flattens again after the 5th and 7th
+    mv.cascadeLocalMax = 5
+    mv.compactEvery = 2
+    val sub = mv.subscription().declareCursor(Some(0L))
+    val ops = scala.collection.mutable.ArrayBuffer[Row]()
+    def rows(rs: Seq[Row]): Seq[(Option[String], Double)] =
+      rs.map(r => (Option(r.getString(0)), r.getDouble(1))).sortBy(_.toString)
+    def barrier(step: Int, overlayEpochs: Long, local: Boolean): Unit = {
+      rw.flush()
+      val face = rows(mv.df.collect().toSeq)
+      assert(face == rows(rw.fetch(sql)), s"barrier $step: face must equal batch")
+      ops ++= Iterator.continually(sub.fetch(1000)).takeWhile(_.nonEmpty).flatten
+      val replay = ops.foldLeft(Map.empty[Row, Int]) { (acc, r) =>
+        val row = Row.fromSeq(r.toSeq.take(2))
+        val d = r.getString(2) match {
+          case "Insert" | "UpdateInsert" => 1
+          case "Delete" | "UpdateDelete" => -1
+        }
+        acc.updated(row, acc.getOrElse(row, 0) + d)
+      }
+      assert(replay.values.forall(_ >= 0), s"barrier $step: replay $replay")
+      assert(rows(replay.toSeq.flatMap { case (r, c) => Seq.fill(c)(r) }) == face,
+        s"barrier $step: changelog replay must equal the face")
+      assert(mv.overlayEpochs == overlayEpochs, s"barrier $step: overlay epochs")
+      assert(mv.joinStateIsLocal == local && mv.isDeltaJoinMode, s"barrier $step")
+    }
+    // 1-2, no base: (bob, 2.0) vanishes and comes back inside one overlay
+    // window, and a revisited (ann, 1.0) reaches 3
+    rw.execute("DELETE FROM djc_ev WHERE event_id = 3")
+    barrier(1, 0, local = true)
+    ev.insert(Seq(Row(13L, 2L, 2.0), Row(14L, 1L, 1.0)))
+    barrier(2, 0, local = true)
+    // 3: NULL-padded and repeated rows push the state to 6 rows: flat
+    ev.insert(Seq(Row(4L, 9L, 3.0), Row(5L, 9L, 3.0), Row(6L, 2L, 4.0),
+      Row(7L, 1L, 5.0), Row(8L, 2L, 6.0)))
+    barrier(3, 0, local = false)
+    // 4: retract (bob, 2.0), held only in the base (probed); the late user
+    // 9 turns both NULL-padded rows into named ones; (ann, 5.0) vanishes
+    rw.execute("DELETE FROM djc_ev WHERE event_id IN (13, 7)")
+    us.insert(Seq(Row(9L, "zed")))
+    barrier(4, 1, local = false)
+    // 5: (ann, 5.0) comes back inside the same overlay window (its
+    // vanished value, not the base's, is current); (ann, 1.0) reaches 4
+    ev.insert(Seq(Row(9L, 1L, 5.0), Row(10L, 1L, 1.0)))
+    barrier(5, 2, local = false)
+    // 6: an update moves one (ann, 1.0); dropping user 9 NULL-pads again
+    rw.execute("UPDATE djc_ev SET value = 7.0 WHERE event_id = 1")
+    rw.execute("DELETE FROM djc_user WHERE uid = 9")
+    barrier(6, 3, local = false)
+    // 7: a third NULL-padded (NULL, 3.0)
+    ev.insert(Seq(Row(11L, 9L, 3.0), Row(12L, 2L, 8.0)))
+    barrier(7, 4, local = false)
+    // 8: retract base rows
+    rw.execute("DELETE FROM djc_ev WHERE event_id IN (1, 2)")
+    barrier(8, 5, local = false)
+    assert(rows(mv.df.collect().toSeq) == rows(Seq(
+      Row(null, 3.0), Row(null, 3.0), Row(null, 3.0), Row("bob", 4.0), Row("bob", 6.0),
+      Row("ann", 5.0), Row("ann", 1.0), Row("ann", 1.0), Row("bob", 8.0))))
+    assert(mv.statementEvals == evals, "no epoch may fall back to a recompute")
     rw.close()
   }
 }
