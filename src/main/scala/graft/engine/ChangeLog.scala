@@ -74,6 +74,11 @@ final class ChangeLog(spark: SparkSession, rowSchema: () => StructType,
   private[engine] def changeSchema: StructType =
     rowSchema().add("op", StringType).add("rw_timestamp", LongType, nullable = false)
 
+  /** Every segment is written under [[changeSchema]]: reading it back under
+    * that schema skips Parquet's schema-inference job. */
+  private def readSegments(paths: Seq[String]): DataFrame =
+    spark.read.schema(changeSchema).parquet(paths: _*)
+
   /** Root of the committed segment directories (`seg-*`). Streaming file
     * sources read the log through this path — the collect-free feed behind
     * MV face streams. */
@@ -190,7 +195,7 @@ final class ChangeLog(spark: SparkSession, rowSchema: () => StructType,
         val rows = tailCache.get._2.filter(r => r.getLong(r.length - 1) > after)
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), changeSchema)
       case _ =>
-        spark.read.parquet(segs.map(_._3): _*).filter(col("rw_timestamp") > after)
+        readSegments(segs.map(_._3)).filter(col("rw_timestamp") > after)
           .localCheckpoint(true)
     }
   }
@@ -221,7 +226,7 @@ final class ChangeLog(spark: SparkSession, rowSchema: () => StructType,
       case Nil => Nil
       case (_, _, path, cnt) :: Nil if cnt <= tailCacheMaxRows =>
         if (!tailCache.exists(_._1 == path)) {
-          val rows = spark.read.parquet(path).collect()
+          val rows = readSegments(Seq(path)).collect()
             .sortBy(r => r.getLong(r.length - 1)).toIndexedSeq
           tailCache = Some((path, rows))
         }
@@ -241,7 +246,7 @@ final class ChangeLog(spark: SparkSession, rowSchema: () => StructType,
           if (min > after) acc += cnt
           need
         }
-        spark.read.parquet(take.map(_._3): _*)
+        readSegments(take.map(_._3))
           .filter(col("rw_timestamp") > after)
           .orderBy("rw_timestamp")
           .limit(limit)

@@ -23,6 +23,17 @@ final class GraftEngine(val spark: SparkSession,
   private val mvs = mutable.LinkedHashMap[(String, String), MaterializedView]()
   private val subscriptionSources = mutable.LinkedHashMap[String, (String, String)]()
 
+  // information_schema compatibility views (S2/S3), rebuilt by the first
+  // read after a table or MV is created, dropped or restored (two racing
+  // reads may both rebuild; either result is current). The view names are
+  // engine-unique: engines sharing a session must not read each other's
+  // catalog.
+  private val infoSchemaId = GraftEngine.engineIds.incrementAndGet()
+  private val infoSchemaColumns = s"graft_information_schema_columns_$infoSchemaId"
+  private val infoSchemaTables = s"graft_information_schema_tables_$infoSchemaId"
+  private val catalogVersion = new java.util.concurrent.atomic.AtomicLong()
+  @volatile private var infoSchemaVersion = -1L
+
   /** Driver threads FLUSH refreshes MVs on: one per driver core, daemon,
     * started on demand and retired when idle; shut down by [[close]]. */
   private val refreshPool = {
@@ -67,13 +78,13 @@ final class GraftEngine(val spark: SparkSession,
   private[engine] def rewrite(sql: String): String = {
     val q = (liveTables.keys ++ mvs.keys).toSeq
     Dialect(sql, q)
-      .replaceAll("(?i)\\binformation_schema\\.columns\\b", "graft_information_schema_columns")
-      .replaceAll("(?i)\\binformation_schema\\.tables\\b", "graft_information_schema_tables")
+      .replaceAll("(?i)\\binformation_schema\\.columns\\b", infoSchemaColumns)
+      .replaceAll("(?i)\\binformation_schema\\.tables\\b", infoSchemaTables)
       .replaceAll("(?is)^\\s*SHOW\\s+MATERIALIZED\\s+VIEWS\\s*$",
-        "SELECT table_name AS name FROM graft_information_schema_tables " +
+        s"SELECT table_name AS name FROM $infoSchemaTables " +
           "WHERE table_type = 'MATERIALIZED VIEW' ORDER BY table_name")
       .replaceAll("(?is)^\\s*SHOW\\s+TABLES\\s+IN\\s+information_schema\\s*$",
-        "SELECT table_name AS name FROM graft_information_schema_tables ORDER BY table_name")
+        s"SELECT table_name AS name FROM $infoSchemaTables ORDER BY table_name")
   }
 
   private val createSchemaRe = """(?is)\s*CREATE\s+SCHEMA\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w]+)\s*""".r
@@ -150,6 +161,7 @@ final class GraftEngine(val spark: SparkSession,
           s"cannot drop materialized view $qname: " +
             s"${dependents.keys.map(k => s"${k._1}.${k._2}").mkString(", ")} depend(s) on it")
       mvs.remove((sn, vn)).foreach { m => m.stop(); m.purgeChangelog() }
+      catalogVersion.incrementAndGet()
     case createSubRe(subQ, srcQ) =>
       val (_, subName) = splitQualified(subQ)
       subscriptionSources(subName) = splitQualified(srcQ)
@@ -326,7 +338,7 @@ final class GraftEngine(val spark: SparkSession,
       liveTables((schemaName, name)) = t
       writeTableMeta(t)
       t.refreshView()
-      refreshInformationSchema()
+      catalogVersion.incrementAndGet()
       t
     }
 
@@ -372,6 +384,8 @@ final class GraftEngine(val spark: SparkSession,
 
   /** information_schema compatibility views (S2/S3). */
   private def refreshInformationSchema(): Unit = {
+    val version = catalogVersion.get()
+    if (version == infoSchemaVersion) return
     import scala.jdk.CollectionConverters._
     val colRows = (liveTables.values.map(t => (t.schemaName, t.name, t.schema)) ++
       mvs.values.map(m => (m.schemaName, m.name, m.outputSchema))).flatMap {
@@ -384,7 +398,7 @@ final class GraftEngine(val spark: SparkSession,
       StructField("column_name", StringType), StructField("ordinal_position", IntegerType),
       StructField("data_type", StringType)))
     spark.createDataFrame(colRows.asJava, colSchema)
-      .createOrReplaceTempView("graft_information_schema_columns")
+      .createOrReplaceTempView(infoSchemaColumns)
 
     val tblRows = (liveTables.values.map(t => Row(t.schemaName, t.name, "BASE TABLE")) ++
       mvs.values.map(m => Row(m.schemaName, m.name, "MATERIALIZED VIEW"))).toList
@@ -392,7 +406,8 @@ final class GraftEngine(val spark: SparkSession,
       StructField("table_schema", StringType), StructField("table_name", StringType),
       StructField("table_type", StringType)))
     spark.createDataFrame(tblRows.asJava, tblSchema)
-      .createOrReplaceTempView("graft_information_schema_tables")
+      .createOrReplaceTempView(infoSchemaTables)
+    infoSchemaVersion = version
   }
 
   // ---- ingest (K2–K5) -----------------------------------------------------
@@ -502,8 +517,8 @@ final class GraftEngine(val spark: SparkSession,
          watermarks: Map[String, (String, String)] = Map.empty): MaterializedView = {
     val m = new MaterializedView(this, schemaName, name, stmt, watermarks)
     mvs((schemaName, name)) = m
+    catalogVersion.incrementAndGet()
     m.start()
-    refreshInformationSchema()
     m
   }
 
@@ -753,6 +768,8 @@ final class GraftEngine(val spark: SparkSession,
     }
     liveTables.values.foreach(_.cleanup())
     mvs.clear()
+    spark.catalog.dropTempView(infoSchemaColumns)
+    spark.catalog.dropTempView(infoSchemaTables)
     refreshPool.shutdown()
   }
 }
@@ -822,6 +839,8 @@ final class Connection private[engine](engine: GraftEngine) extends AutoCloseabl
 }
 
 object GraftEngine {
+  private val engineIds = new java.util.concurrent.atomic.AtomicLong()
+
   /** Run `f` with its Spark jobs tagged `view:phase` in the `graft.phase`
     * local property. AQE's thread-local capture carries the tag to every
     * query stage `f` submits, so profilers, the Spark UI and e2ebench's

@@ -74,10 +74,16 @@ final class LiveTable(
     * key-superset-safe optimizations, never correctness dependencies. */
   private val segKeyRange = scala.collection.mutable.Map[String, (Any, Any, Boolean)]()
 
-  private def recordKeyRange(path: String, rows: Seq[Row]): Unit = {
-    if (primaryKey.size != 1) return
+  private def recordKeyRange(path: String, rows: Seq[Row]): Unit =
+    keyRange(rows).foreach(segKeyRange.update(path, _))
+
+  /** (min, max, distinct-within) of the single-column primary key over
+    * `rows`. None for an empty set, a NULL key (the rows stay unprunable),
+    * a multi-column key or a key type without a local ordering. */
+  private def keyRange(rows: Iterable[Row]): Option[(Any, Any, Boolean)] = {
+    if (primaryKey.size != 1) return None
     val ord = graft.streaming.Changelog.localOrdering(
-      schema(primaryKey.head).dataType).getOrElse(return)
+      schema(primaryKey.head).dataType).getOrElse(return None)
     val keyIdx = schema.fieldIndex(primaryKey.head)
     var lo: Any = null
     var hi: Any = null
@@ -85,13 +91,47 @@ final class LiveTable(
     val seen = new scala.collection.mutable.HashSet[Any]()
     rows.foreach { r =>
       val k = r.get(keyIdx)
-      if (k == null) return // NULL keys: leave the segment unprunable
+      if (k == null) return None
       if (unique && !seen.add(k)) unique = false
       if (lo == null || ord.lt(k, lo)) lo = k
       if (hi == null || ord.gt(k, hi)) hi = k
     }
-    if (lo != null) segKeyRange.update(path, (lo, hi, unique))
+    if (lo == null) None else Some((lo, hi, unique))
   }
+
+  // The memory tail's LocalRelation frame and PK range, each built on first
+  // use after a change to `allRows` and shared by every face, history and
+  // diff read until the next change; [[tailChanged]] drops both.
+  private var tailFrame: Option[DataFrame] = None
+  private var tailRange: Option[Option[(Any, Any, Boolean)]] = None
+  /** Tail frames encoded so far — spec probe: one per change of the tail. */
+  private[engine] var tailEncodes = 0L
+
+  /** The memory tail as a `withSeq` LocalRelation. */
+  private def tailDF: DataFrame = tailFrame.getOrElse {
+    val df = spark.createDataFrame(allRows.toList.asJava, withSeq)
+    tailEncodes += 1
+    tailFrame = Some(df)
+    df
+  }
+
+  private def tailKeyRange: Option[(Any, Any, Boolean)] = tailRange.getOrElse {
+    val r = keyRange(allRows)
+    tailRange = Some(r)
+    r
+  }
+
+  /** Call after every mutation of `allRows`. */
+  private def tailChanged(): Unit = {
+    tailFrame = None
+    tailRange = None
+  }
+
+  /** Engine-written segments carry `withSeq`: reading them under it skips
+    * Parquet's schema-inference job. */
+  private def readSegments(paths: Seq[String]): DataFrame =
+    spark.read.schema(withSeq).parquet(paths: _*)
+
   private def spillThreshold: Int =
     spark.conf.getOption("graft.table.spillThreshold").map(_.toInt).getOrElse(100000)
   // durable tables spill under dataDir (restorable); ephemeral tables spill
@@ -117,12 +157,17 @@ final class LiveTable(
 
   // restart recovery (durable mode): rebuild the segment index from the
   // self-describing directory names ([[SegmentFiles]] codec) and resume
-  // the sequence counter
+  // the sequence counter past every recovered row
   persistDir.foreach { d =>
-    val recovered = SegmentFiles.recover(d)
-    segments ++= recovered
-    recovered.lastOption.foreach { case (_, max, _, _) => seq = max }
+    segments ++= SegmentFiles.recover(d)
+    seq = spilledMaxSeq
   }
+
+  /** Highest `__seq` in any segment. Segment seq ranges are not monotone
+    * in index order: a bulk segment lands while older rows still sit in
+    * the tail, and the tail spills after it (and recovery orders segments
+    * by their lowest seq). */
+  private def spilledMaxSeq: Long = segments.iterator.map(_._2).maxOption.getOrElse(0L)
 
   /** The table's own 4-op changelog (round 8): the feed that lets aggregate
     * MVs over PK/upsert tables — and over DML-mutated tables — maintain
@@ -170,8 +215,9 @@ final class LiveTable(
   private[engine] def emitChangelog(): Unit = synchronized {
     if (!clEnabled || seq == clSeq) return
     flushBuffer()
-    val hist = rawHistoryDF
-    val delta = hist.filter(col("__seq") > clSeq)
+    // lazy: the zero-job memory paths below never read the history
+    lazy val hist = rawHistoryDF
+    lazy val delta = hist.filter(col("__seq") > clSeq)
     val ops =
       if (primaryKey.isEmpty)
         // zero-job fast path: a plain table's delta is Insert-only, and
@@ -256,7 +302,7 @@ final class LiveTable(
     val pk = primaryKey.head
     val keyOrd = Changelog.localOrdering(schema(pk).dataType)
       .getOrElse(return None)
-    if (segments.last._2 > clSeq) return None // delta rows spilled: full path
+    if (spilledMaxSeq > clSeq) return None // delta rows spilled: full path
     val seqIdx = sch.fieldIndex("__seq")
     val keyIdx = sch.fieldIndex(pk)
     val touched = allRows.iterator.filter(_.getLong(seqIdx) > clSeq)
@@ -283,9 +329,7 @@ final class LiveTable(
     // collect (key-superset-safe — a non-overlapping segment cannot hold
     // a touched key's row, so every touched-key-restricted computation
     // over the pruned history equals the full-history one)
-    val mem = spark.createDataFrame(allRows.toList.asJava, sch)
-    val pruned = spark.read.parquet(overlapping.map(_._3).toSeq: _*)
-      .unionByName(mem)
+    val pruned = readSegments(overlapping.map(_._3).toSeq).unionByName(tailDF)
     val keySchema = org.apache.spark.sql.types.StructType(Seq(schema(pk)))
     val keys = spark.createDataFrame(java.util.Arrays.asList(
       touched.iterator.map(k => Row(k)).toIndexedSeq: _*), keySchema)
@@ -302,8 +346,7 @@ final class LiveTable(
     * the ops frame is a LocalRelation in emission order. None once any
     * delta row has spilled — the distributed sort spelling covers it. */
   private def memoryInsertOps(): Option[DataFrame] = {
-    val spilledMax = segments.lastOption.map(_._2).getOrElse(0L)
-    if (clSeq < spilledMax) return None
+    if (clSeq < spilledMaxSeq) return None
     val sch = withSeq
     val seqIdx = sch.fieldIndex("__seq")
     val rows = allRows.iterator.filter(_.getLong(seqIdx) > clSeq)
@@ -456,11 +499,9 @@ final class LiveTable(
 
   /** Raw append history with `__seq`, segments unioned with the memory
     * tail (no upsert resolution). */
-  private def rawHistoryDF: DataFrame = {
-    val mem = spark.createDataFrame(allRows.toList.asJava, withSeq)
-    if (segments.isEmpty) mem
-    else spark.read.parquet(segments.map(_._3).toSeq: _*).unionByName(mem)
-  }
+  private def rawHistoryDF: DataFrame =
+    if (segments.isEmpty) tailDF
+    else readSegments(segments.map(_._3).toSeq).unionByName(tailDF)
 
   /** Driver-local merged-face tier for PK tables (round 14): the batch
     * face is one current row per key — exactly a map keyed by the PK
@@ -631,19 +672,8 @@ final class LiveTable(
       .getOrElse(return None)
     // the memory tail participates as one pseudo-segment (a NULL tail key
     // or an unorderable value refuses — superset-safe)
-    val sch = withSeq
-    val keyIdx = sch.fieldIndex(pk)
-    var tLo: Any = null
-    var tHi: Any = null
-    var tUnique = true
-    val seen = new scala.collection.mutable.HashSet[Any]()
-    allRows.foreach { r =>
-      val k = r.get(keyIdx)
-      if (k == null) return None
-      if (tUnique && !seen.add(k)) tUnique = false
-      if (tLo == null || keyOrd.lt(k, tLo)) tLo = k
-      if (tHi == null || keyOrd.gt(k, tHi)) tHi = k
-    }
+    val tail = tailKeyRange
+    if (tail.isEmpty && allRows.nonEmpty) return None
     // every segment must carry a recorded range: an unknown range overlaps
     // everything, so nothing could be proven disjoint anyway
     val ranges: IndexedSeq[(String, (Any, Any, Boolean))] =
@@ -652,8 +682,7 @@ final class LiveTable(
           case Some(r) => p -> r
           case None => return None
         }
-      }.toIndexedSeq ++
-        (if (tLo != null) IndexedSeq("" -> ((tLo, tHi, tUnique))) else Nil)
+      }.toIndexedSeq ++ tail.map("" -> _)
     // sort by lo; segment i is disjoint from EVERY other interval iff
     // max(hi) over all earlier-lo intervals < lo_i (nothing from the left
     // reaches in) and lo_{i+1} > hi_i (every later interval starts past
@@ -673,16 +702,15 @@ final class LiveTable(
     val cleanPaths = segments.iterator.map(_._3).filter(clean).toSeq
     val dirtyPaths = segments.iterator.map(_._3).filterNot(clean).toSeq
     val cols = schema.fieldNames.toIndexedSeq.map(col)
-    val cleanDf = spark.read.parquet(cleanPaths: _*).select(cols: _*)
-    val mem = spark.createDataFrame(allRows.toList.asJava, sch)
+    val cleanDf = readSegments(cleanPaths).select(cols: _*)
     val dirtySide =
       if (dirtyPaths.isEmpty && clean("")) None
       else {
         val raw =
-          if (dirtyPaths.isEmpty) mem
+          if (dirtyPaths.isEmpty) tailDF
           else {
-            val d = spark.read.parquet(dirtyPaths: _*)
-            if (clean("")) d else d.unionByName(mem)
+            val d = readSegments(dirtyPaths)
+            if (clean("")) d else d.unionByName(tailDF)
           }
         val ver = versionColumn.map(col).getOrElse(col("__seq"))
         val w = org.apache.spark.sql.expressions.Window
@@ -692,7 +720,7 @@ final class LiveTable(
           .filter(col("__rn") === 1).select(cols: _*))
       }
     val cleanAll =
-      if (clean("")) cleanDf.unionByName(mem.select(cols: _*)) else cleanDf
+      if (clean("")) cleanDf.unionByName(tailDF.select(cols: _*)) else cleanDf
     Some(dirtySide.map(cleanAll.unionByName).getOrElse(cleanAll))
   }
 
@@ -814,7 +842,7 @@ final class LiveTable(
     // them point-wise; drop it and let the next read re-seed bounded
     invalidateMergedFace()
     if (readerStreams.nonEmpty) {
-      spark.read.parquet(path).orderBy("__seq").drop("__seq")
+      readSegments(Seq(path)).orderBy("__seq").drop("__seq")
         .toLocalIterator().asScala.grouped(batchSize)
         .foreach { chunk =>
           val rs = chunk.toSeq
@@ -835,6 +863,7 @@ final class LiveTable(
 
   private def addBatch(rows: Seq[Row]): Unit = {
     allRows ++= rows
+    tailChanged()
     mergedFaceAppend(rows)
     // the streaming faces carry the declared schema (no __seq)
     val faces = rows.map(r => Row.fromSeq(r.toSeq.dropRight(1)))
@@ -846,6 +875,7 @@ final class LiveTable(
       val n = allRows.size - spillThreshold / 2
       writeSegment(allRows.take(n).toList)
       allRows.remove(0, n)
+      tailChanged()
     }
     refreshView()
   }
@@ -874,6 +904,7 @@ final class LiveTable(
     if (persistDir.nonEmpty && allRows.nonEmpty) {
       writeSegment(allRows.toList)
       allRows.clear()
+    tailChanged()
     }
   }
 
@@ -997,7 +1028,7 @@ final class LiveTable(
     val (minA, _, pathA, _) = segments(idx)
     val (_, maxB, pathB, _) = segments(idx + 1)
     val rows = GraftEngine.timed(spark, viewName, "tbl-compact-merge")(
-      spark.read.parquet(pathA, pathB).collect())
+      readSegments(Seq(pathA, pathB)).collect())
     val keyIdx = primaryKey.map(withSeq.fieldIndex)
     val ord = winnerOrdering.get
     val m = new scala.collection.mutable.LinkedHashMap[List[Any], Row]()
@@ -1069,6 +1100,7 @@ final class LiveTable(
     segments.clear()
     segKeyRange.clear()
     allRows.clear()
+    tailChanged()
     segments += ((minSeq, maxBound, path, rows.size.toLong))
     recordKeyRange(path, rows)
     refreshView()
@@ -1115,6 +1147,7 @@ final class LiveTable(
     segments.clear()
     segKeyRange.clear()
     allRows.clear()
+    tailChanged()
     if (n == 0) SegmentFiles.delete(staging)
     else {
       val path = SegmentFiles.path(segDir, base + 1, base + n, n)

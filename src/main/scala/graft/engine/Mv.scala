@@ -858,12 +858,12 @@ final class MaterializedView private[engine](
         // per-epoch cost proportional to touched groups relies on Catalyst's
         // PushDownLeftSemiAntiJoin planting the key filter BELOW the final
         // Aggregate (verified to fire for both attribute and expression
-        // grouping keys, incl. the null-safe <=> condition). The optimized
-        // plan is recorded so CascadeMvSpec can pin the property — a Spark
+        // grouping keys, incl. the null-safe <=> condition). The frame is
+        // kept so CascadeMvSpec can pin the property — a Spark
         // upgrade that stops pushing would silently turn every epoch into a
         // full recompute over the upstream snapshots.
         val recompute = keyJoin(full, touched, "left_semi")
-        lastCascadeEpochPlan = Some(recompute.queryExecution.optimizedPlan.toString)
+        cascadeEpochFrame = Some(recompute)
         val newTouched = timed("group-recompute")(boundedLocal(recompute))
         val prevTouched = keyJoin(cascadeInner.get, touched, "left_semi")
         // state BEFORE ops (same failure discipline as joinCascadeEpoch):
@@ -2127,7 +2127,7 @@ final class MaterializedView private[engine](
           val payload = adds.unionByName(dels)
           val plus = restrictOuterToDelta(spark.sql(sqlNew), u.viewName, payload)
             .select(outCols.map(col): _*).withColumn("__d", lit(1L))
-          lastOuterTermPlan = Some(plus.queryExecution.optimizedPlan.toString)
+          outerTermFrame = Some(plus)
           val minus = restrictOuterToDelta(spark.sql(sqlOld),
               epochView("jc_old", u.viewName), payload)
             .select(outCols.map(col): _*).withColumn("__d", lit(-1L))
@@ -2162,7 +2162,7 @@ final class MaterializedView private[engine](
           val plus  = spark.sql(termSql(epochView("jc_add", u.viewName)))
             .select(outCols.map(col): _*).withColumn("__d", lit(1L))
           if (i == 0 && joinHasJoin)
-            lastJoinEpochPlan = Some(plus.queryExecution.optimizedPlan.toString)
+            joinEpochFrame = Some(plus)
           val minus = spark.sql(termSql(epochView("jc_del", u.viewName)))
             .select(outCols.map(col): _*).withColumn("__d", lit(-1L))
           Seq(plus, minus)
@@ -2257,7 +2257,17 @@ final class MaterializedView private[engine](
             .filter(col(MaterializedView.CntCol) > 0)
             .localCheckpoint(true)
       })
-      emitOps(keyedOps.getOrElse(Changelog.netOps(net, outCols, "__d")))
+      // a landed net spells its ops driver-side (zero jobs, and the
+      // changelog append takes its local path, which seeds the tail cache
+      // the subscription drain reads); distributed nets and columns
+      // without a local ordering keep the netOps plan
+      emitOps(keyedOps.orElse(netRows.flatMap { rows =>
+        val n = outCols.length
+        val rowSchema = org.apache.spark.sql.types.StructType(netPlan.schema.fields.take(n))
+        Changelog.localNetOps(rows.map(r => joinKey(r, n) -> r.getLong(n)), rowSchema)
+          .map(ops => localDf(ops.toIndexedSeq,
+            rowSchema.add("op", org.apache.spark.sql.types.StringType)))
+      }).getOrElse(Changelog.netOps(net, outCols, "__d")))
       emitted = true
       cascadeInner = Some(merged)
       val vis = expandCounts(merged)

@@ -811,21 +811,34 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
       }
   }
 
+  // The epoch-plan probes below keep the epoch's analyzed frame and
+  // optimize it only when a spec reads the probe: optimization walks every
+  // leaf row of the frame, which includes the source table's driver tail
+  // as a LocalRelation.
+  @volatile private[engine] var cascadeEpochFrame: Option[DataFrame] = None
+  @volatile private[engine] var joinEpochFrame: Option[DataFrame] = None
+  @volatile private[engine] var outerTermFrame: Option[DataFrame] = None
+
   /** Optimized plan of the last cascade epoch's touched-group recompute —
-    * spec probe pinning the semi-join-below-Aggregate pushdown. */
-  @volatile private[graft] var lastCascadeEpochPlan: Option[String] = None
+    * spec probe pinning the semi-join-below-Aggregate pushdown. Optimized
+    * when read. */
+  private[graft] def lastCascadeEpochPlan: Option[String] =
+    cascadeEpochFrame.map(_.queryExecution.optimizedPlan.toString)
 
   /** Optimized plan of the last delta-join epoch's first + term —
     * recorded so DeltaJoinMvSpec can pin the broadcast-delta property (the
-    * snapshot side must never shuffle for a delta-sized probe). */
-  @volatile private[graft] var lastJoinEpochPlan: Option[String] = None
+    * snapshot side must never shuffle for a delta-sized probe). Optimized
+    * when read. */
+  private[graft] def lastJoinEpochPlan: Option[String] =
+    joinEpochFrame.map(_.queryExecution.optimizedPlan.toString)
 
   /** Optimized plan of the last restricted-difference (+) term (outer-join
     * epochs where the null-padded side changed) — spec pin: the linear
     * side is probed by a LeftSemi join whose right side broadcasts, so
     * neither the linear subtree nor the join's base nonlinear side ever
-    * shuffles for a delta-sized change. */
-  @volatile private[graft] var lastOuterTermPlan: Option[String] = None
+    * shuffles for a delta-sized change. Optimized when read. */
+  private[graft] def lastOuterTermPlan: Option[String] =
+    outerTermFrame.map(_.queryExecution.optimizedPlan.toString)
 
   /** How many times the FULL defining statement has been evaluated over
     * source data (batch refresh epochs + cascade backfills/recomputes) —

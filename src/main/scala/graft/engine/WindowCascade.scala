@@ -468,10 +468,15 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     }
   }
 
+  /** The last window-cascade recompute's analyzed frame, kept for
+    * [[lastWindowEpochPlan]] (see SessionMvSupport's epoch-plan probes). */
+  @volatile private[engine] var windowEpochFrame: Option[DataFrame] = None
+
   /** Optimized plan of the last window-cascade recompute — spec pin: the
     * touched-partition semi join must sit BELOW the Window node, or every
-    * epoch silently re-ranks the world. */
-  @volatile private[graft] var lastWindowEpochPlan: Option[String] = None
+    * epoch silently re-ranks the world. Optimized when read. */
+  private[graft] def lastWindowEpochPlan: Option[String] =
+    windowEpochFrame.map(_.queryExecution.optimizedPlan.toString)
 
   /** A restriction-key expression as a Column — the unresolved-attribute
     * leaves re-resolve against the frame it is applied to: the delta
@@ -727,7 +732,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       // guard), which would leave the filter above the Window and re-rank
       // the WHOLE source every epoch
       val recompute = restrictWindowToPartitions(spark.sql(cascadeStmt), touched)
-      lastWindowEpochPlan = Some(recompute.queryExecution.optimizedPlan.toString)
+      windowEpochFrame = Some(recompute)
 
       // ---- keyed local state tail: the slice collects ONCE (with its
       // state keys evaluated alongside), the diff runs driver-side, and

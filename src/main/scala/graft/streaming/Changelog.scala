@@ -199,12 +199,22 @@ object Changelog {
     * from java.lang.String's UTF-16 order above the BMP. */
   def localMultisetDiff(prev: Option[Seq[Row]], next: Seq[Row],
       schema: org.apache.spark.sql.types.StructType): Option[Seq[Row]] = {
-    val ords = schema.fields.map(f => localOrdering(f.dataType))
-    if (ords.exists(_.isEmpty)) return None
     val counts = scala.collection.mutable.LinkedHashMap[Row, Long]()
     next.foreach(r => counts.update(r, counts.getOrElse(r, 0L) + 1L))
     prev.getOrElse(Nil).foreach(r => counts.update(r, counts.getOrElse(r, 0L) - 1L))
-    val ops = counts.iterator.filter(_._2 != 0L).flatMap { case (r, d) =>
+    localNetOps(counts.toSeq, schema)
+  }
+
+  /** Driver-side [[netOps]] for a net that is already on the driver
+    * (distinct row → signed count): |Δ| Inserts or Deletes per row, in
+    * [[netOps]]'s emission order (row columns ascending NULLS FIRST, then
+    * op rank), zero jobs. None when a column's type has no local ordering
+    * (caller keeps [[netOps]]). */
+  private[graft] def localNetOps(net: Seq[(Row, Long)],
+      schema: org.apache.spark.sql.types.StructType): Option[Seq[Row]] = {
+    val ords = schema.fields.map(f => localOrdering(f.dataType))
+    if (ords.exists(_.isEmpty)) return None
+    val ops = net.iterator.filter(_._2 != 0L).flatMap { case (r, d) =>
       val op = if (d > 0) OpInsert else OpDelete
       Iterator.fill(math.abs(d).toInt)((r, op))
     }.toIndexedSeq

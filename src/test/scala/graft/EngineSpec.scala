@@ -251,6 +251,18 @@ class EngineSpec extends SparkSpec {
     assert(cols == Seq("product", "price"))
     assert(rw.checkExist("test_product"))
     assert(!rw.checkExist("nope_not_here"))
+    // the views are rebuilt when the catalog changes, not on every read:
+    // a fetch has built them, and each CREATE / DROP must still show up
+    def mvNames = rw.fetch("SHOW MATERIALIZED VIEWS").map(_.getString(0)).toSet
+    assert(!mvNames.contains("info_mv"))
+    rw.mv("SELECT product, count(*) AS n FROM test_product GROUP BY product", "info_mv")
+    assert(mvNames.contains("info_mv"))
+    assert(rw.fetch("""SELECT data_type FROM information_schema.columns
+        |WHERE table_name = 'info_mv' AND column_name = 'n'""".stripMargin)
+      .map(_.getString(0)) == Seq("bigint"))
+    rw.execute("DROP MATERIALIZED VIEW info_mv")
+    assert(!mvNames.contains("info_mv"))
+    assert(rw.fetch("SELECT * FROM information_schema.columns WHERE table_name = 'info_mv'").isEmpty)
   }
 
   test("watermarked MV (W9): state-bounded tumble agg still matches batch on in-order data") {
