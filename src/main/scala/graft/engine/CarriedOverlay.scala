@@ -6,10 +6,10 @@ import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
-/** Keyed carried state at constant plan depth, shared by the delta-agg
-  * aux state and the window cascade's grouped state past their driver
-  * tiers, and in both tiers by the streaming update-mode aggregate and
-  * the delta-join cascade's grouped state (output row → multiplicity). The
+/** Keyed carried state at constant plan depth, shared in both tiers by
+  * the delta-agg aux state, the window cascade's grouped state, the
+  * streaming update-mode aggregate and the delta-join cascade's grouped
+  * state (output row → multiplicity). The
   * state is `base` (the last flat checkpoint, or a mode's own layer over
   * it, see [[stack]]) plus a driver-resident `key → V` overlay holding the
   * current value of every key touched since; the touched set also keeps
@@ -21,10 +21,11 @@ import scala.collection.mutable
   * names only the touched keys that may have a base row: a key the last
   * [[probe]] asked for and the mode's collect did not return is left
   * out, and with no such key the frame is `base ∪ render(overlay)`. With
-  * no base (a mode starting from no state) the frame is `render(overlay)`
-  * as a LocalRelation and nothing is probed, until it outgrows `limit`
-  * and checkpoints flat into the first base. Each mode keeps its value type,
-  * key condition, render (to state rows), base-probe collect and fold.
+  * no base (a mode starting from no state, or a state seeded whole into
+  * the overlay) the frame is `render(overlay)` as a LocalRelation and
+  * nothing is probed, until it outgrows `limit` and checkpoints flat into
+  * the first base. Each mode keeps its value type, key condition, render
+  * (to state rows), base-probe collect and fold.
   *
   * Invariants:
   *  - Value-hashable keys: `Row.hashCode` hashes a byte array by identity,
@@ -34,8 +35,11 @@ import scala.collection.mutable
   *    last. An epoch over any other state frame (a durable restore, a
   *    repair, an epoch another path took or whose emit failed) or over no
   *    state drops the overlay and re-bases on that frame, which every such
-  *    path leaves flat. [[invalidate]] forces this after an epoch escaped
-  *    without installing the frame it got.
+  *    path leaves flat; a mode that seeds takes the frame whole into the
+  *    overlay instead while it fits `limit`. So "past the bound" is a
+  *    property of the frame ([[overBound]]), never a latch. [[invalidate]]
+  *    forces a re-base after an epoch escaped without installing the frame
+  *    it got.
   *  - Commit before emit: everything before [[carry]] is pure (beyond
   *    [[current]] noting keys the base lacks), so a mode may refuse the
   *    epoch there. [[carry]] applies the epoch's changes and builds (and,
@@ -73,16 +77,31 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
     * in the overlay (no base). */
   def holdsAll(state: DataFrame): Boolean = base.isEmpty && returned.exists(_ eq state)
 
+  /** Whether `state` is the frame this overlay returned last, carried over
+    * a base: a state known to be past `limit`. */
+  def overBound(state: DataFrame): Boolean = base.nonEmpty && returned.exists(_ eq state)
+
+  /** The overlay's live keys and their values: the whole state while it
+    * has no base. */
+  def keyCount: Int = overlay.size
+  def values: Iterator[V] = overlay.valuesIterator
+
   /** Drop the state; the next epoch re-bases on the frame it is given. */
   def invalidate(): Unit = rebase(None)
 
   /** Open an epoch over `state` (None: no state yet) of `stateSchema`
     * rows. Keys are rows of `keys`, whose column names differ from the
-    * state's; `cond` matches them to state rows. False = refused keys. */
+    * state's; `cond` matches them to state rows. A `state` this overlay
+    * did not return (a backfill, restore or repair frame) is taken whole
+    * into the no-base tier when `seed` collects its entries (None: past
+    * `limit`, or a mode that does not seed), else it becomes the base.
+    * False = refused keys. */
   def begin(state: Option[DataFrame], stateSchema: StructType, keys: StructType,
-      cond: Column): Boolean = {
+      cond: Column, seed: DataFrame => Option[Iterable[(Row, V)]] = _ => None): Boolean = {
     if (!CarriedOverlay.valueHashable(keys)) return false
-    rebase(state)
+    val seeded = state.filterNot(s => returned.exists(_ eq s)).flatMap(seed)
+    rebase(if (seeded.isEmpty) state else None)
+    seeded.foreach(_.foreach { case (k, v) => overlay.update(k, v); touched += k })
     schema = stateSchema
     keySchema = keys
     keyCond = cond
@@ -139,10 +158,11 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
     out
   }
 
-  /** A mode's own layer `plan` over `state`: it becomes the next base. */
-  def stack(state: DataFrame, plan: DataFrame): DataFrame = {
+  /** A mode's own layer `plan` over `state`: it becomes the next base,
+    * checkpointed at once when `flat` (a state found past `limit`). */
+  def stack(state: DataFrame, plan: DataFrame, flat: Boolean = false): DataFrame = {
     rebase(Some(state))
-    returned = Some(layer(plan, oversize = false))
+    returned = Some(layer(plan, oversize = flat))
     reset(returned)
     returned.get
   }

@@ -386,8 +386,8 @@ private[engine] object DeltaAgg {
       * retraction (a sketch cannot subtract). */
     private[graft] def hasHll: Boolean = slots.exists(_.kind == KindHll)
     /** True when every aux column folds by plain signed addition (no
-      * extremum/float/sketch slots) — the driver-local map tier's
-      * admission: point arithmetic reproduces the union+re-sum merge
+      * extremum/float/sketch slots) — the admission of the aux
+      * overlay's point fold, which reproduces the union+re-sum merge
       * exactly. */
     private[graft] def isPureSigned: Boolean = !needJoinMerge && !hasHll
     /** Sketch-valued aux columns: combined by hll_union_agg, never

@@ -163,10 +163,10 @@ final class LiveTable(
     seq = spilledMaxSeq
   }
 
-  /** Highest `__seq` in any segment. Segment seq ranges are not monotone
-    * in index order: a bulk segment lands while older rows still sit in
-    * the tail, and the tail spills after it (and recovery orders segments
-    * by their lowest seq). */
+  /** Highest `__seq` in any segment. Segment seq ranges need not be
+    * monotone in index order: recovery orders segments by their lowest
+    * seq, and a data dir written before [[insertBulk]] spilled the tail
+    * first can hold a bulk segment below a later tail spill. */
   private def spilledMaxSeq: Long = segments.iterator.map(_._2).maxOption.getOrElse(0L)
 
   /** The table's own 4-op changelog (round 8): the feed that lets aggregate
@@ -467,7 +467,7 @@ final class LiveTable(
   def streamingDFFor(reader: String, afterSeq: Long = -1L): DataFrame = synchronized {
     readerStreams.getOrElseUpdate(reader, {
       val s = MemoryStream[Row](enc, spark)
-      val spillBound = segments.lastOption.map(_._2).getOrElse(0L)
+      val spillBound = spilledMaxSeq
       val tail = allRows.toList
         .filter(_.getLong(schema.length) > math.max(spillBound, afterSeq))
         .map(r => Row.fromSeq(r.toSeq.dropRight(1)))
@@ -806,6 +806,9 @@ final class LiveTable(
     * then CREATE MV), no row ever crosses the driver. */
   def insertBulk(df: DataFrame, batchSize: Int = 100000): Unit = synchronized {
     flushBuffer()
+    // spill the memory tail first: every tail row then has a seq above
+    // every segment's, the split [[streamingDFFor]] seeds its faces by
+    spillTail()
     val base = seq
     // materialize the source ONCE before stamping: zipWithIndex runs a
     // partition-sizing job and the parquet write re-runs the plan — on a
@@ -901,11 +904,13 @@ final class LiveTable(
     * whole table restores on the next open. No-op when ephemeral. */
   def spillAll(): Unit = synchronized {
     flushBuffer()
-    if (persistDir.nonEmpty && allRows.nonEmpty) {
-      writeSegment(allRows.toList)
-      allRows.clear()
+    if (persistDir.nonEmpty) spillTail()
+  }
+
+  private def spillTail(): Unit = if (allRows.nonEmpty) {
+    writeSegment(allRows.toList)
+    allRows.clear()
     tailChanged()
-    }
   }
 
   /** Engine-close hook for EPHEMERAL tables: unlink temp-dir segments (a

@@ -1252,7 +1252,7 @@ final class MaterializedView private[engine](
         // s_mv_histogram_fold's diff-collect shuffle (2.1 MB/replay) and
         // most of its 5.875 jobs/epoch
         val (oldVisT, newVisT) = overboundSlices match {
-          // over-bound epoch (round 16): the merge already collected the
+          // overlay epoch (either tier): the merge already holds the
           // touched keys' old state rows and point-folded the new ones —
           // the diff sides are those driver slices' visible projections
           // (identical multisets to the state-scan spelling: visible is a
@@ -1282,23 +1282,13 @@ final class MaterializedView private[engine](
         true
     }
 
-  /** Aux-state size latch + delta-segment depth (round 13, verdict #4):
-    * [[boundedLocal]]'s probe re-executes the full merge plan, and the
-    * over-bound fallback then executes it AGAIN into the checkpoint — for
-    * a histogram-tier state (O(distinct values) rows by design) that was
-    * 2× O(state) of pure persistence every epoch. Once the state overflows
-    * the local bound, `auxOversize` latches (monotone, same stance as
-    * [[windowStateOversize]]) and epochs switch to delta-segment
-    * persistence below. */
-  private var auxOversize = false
   /** Touched-slice pair (old state rows, folded new rows) of the LAST
-    * over-bound epoch merge, both driver-resident — set by
-    * [[overboundLocalMerge]] and consumed by [[deltaAggEpoch]]'s visible
-    * diff, which would otherwise re-run two broadcast-semi scans of the
-    * FULL stacked state (one per diff side) for rows the merge already
-    * holds (round 16; the over-bound epoch paid ~3 full-state scans).
-    * Cleared at every merge entry; None = diff keeps the state-scan
-    * spelling. */
+    * [[overboundLocalMerge]] epoch, both driver-resident — consumed by
+    * [[deltaAggEpoch]]'s visible diff, which would otherwise re-run two
+    * broadcast-semi scans of the FULL carried state (one per diff side)
+    * for rows the merge already holds (round 16; the over-bound epoch paid
+    * ~3 full-state scans). Cleared at every merge entry; None = diff keeps
+    * the state-scan spelling. */
   private var overboundSlices: Option[(DataFrame, DataFrame)] = None
   /** Flat-checkpoint cadence, in plan layers above the last flat
     * checkpoint, of every [[CarriedOverlay]] of this MV and of the
@@ -1307,23 +1297,6 @@ final class MaterializedView private[engine](
   /** Over-bound overlay epochs of any mode (spec and bench probe). */
   private[graft] def overlayEpochs: Long =
     auxOverlay.epochs + windowOverlay.epochs + streamOverlay.epochs + joinOverlay.epochs
-
-  /** Driver-local aux-state map tier (round 13): for pure-signed specs
-    * (every slot folds by signed addition — no extremum/float/sketch)
-    * whose state fits [[auxStateLocalMax]] rows, the carried aux state
-    * lives in a driver map keyed by the state-key tuple, and each epoch's
-    * already-driver-collected partials fold by point arithmetic — ZERO
-    * jobs for the state merge, and every downstream evaluation (visible
-    * diff, snapshot readers) plans over a LocalRelation instead of
-    * re-scanning a checkpointed frame. Mirrors [[windowLocalState]]'s
-    * design and bound; outgrowing the bound (or a distributed
-    * backfill-class epoch) drops the map and the distributed tiers below
-    * take over — the 100 TB path. */
-  private var auxLocalMap: Option[scala.collection.mutable.LinkedHashMap[
-    Row, Array[Any]]] = None
-  private[graft] var auxStateLocalMax = 200000
-  /** True while the aux state is maintained by the driver map (probe). */
-  private[graft] def auxStateIsLocal: Boolean = auxLocalMap.nonEmpty
 
   /** a ⊞ sign·b on external Row values. NULL is the additive identity
     * (Sum skips NULLs); the result is NULL only when both sides are.
@@ -1355,11 +1328,11 @@ final class MaterializedView private[engine](
           case _ => r
         }
       case _ => throw new IllegalStateException(
-        s"aux map tier cannot add ${a.getClass} / ${sb.getClass}")
+        s"point fold cannot add ${a.getClass} / ${sb.getClass}")
     }
   }
 
-  /** Fold one sign side's partial rows into the map by point writes.
+  /** Fold one sign side's partial rows into `m` by point writes.
     * Row layout is the aux frame's: state keys first, aux columns after
     * (rows counter last). A key whose rows counter reaches ≤ 0 leaves the
     * map — the distributed merge's `rowsCol > 0` filter. */
@@ -1383,8 +1356,6 @@ final class MaterializedView private[engine](
     }
   }
 
-  private def auxMapToDf(spec: DeltaAgg.Spec): DataFrame =
-    localDf(auxRows(auxLocalMap.get.iterator), auxLocalSchema.get)
   /** Aux-frame rows (state keys first, aux slots after) of `key → aux`
     * entries, and the split back. */
   private def auxRows(m: Iterator[(Row, Array[Any])]): IndexedSeq[Row] =
@@ -1392,8 +1363,6 @@ final class MaterializedView private[engine](
   private def splitAux(r: Row, nKeys: Int): (Row, Array[Any]) =
     Row.fromSeq((0 until nKeys).map(r.get)) ->
       Array.tabulate[Any](r.length - nKeys)(j => r.get(nKeys + j))
-  private var auxLocalSchema: Option[org.apache.spark.sql.types.StructType] = None
-
   /** Aux slot types the point arithmetic ([[addSigned]]) covers. */
   private def pointFoldable(schema: org.apache.spark.sql.types.StructType, nKeys: Int): Boolean = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -1403,40 +1372,34 @@ final class MaterializedView private[engine](
     })
   }
 
-  /** Seed the map from a collected full state; false = a column type the
-    * point arithmetic doesn't cover, or keys that are not value-hashable
-    * ([[CarriedOverlay.valueHashable]]): stay on the LocalRelation tier. */
-  private def seedAuxMap(rows: IndexedSeq[Row],
-      schema: org.apache.spark.sql.types.StructType,
-      spec: DeltaAgg.Spec): Boolean = {
-    val nKeys = spec.stateKeys.length
-    if (!pointFoldable(schema, nKeys) || spec.stateKeys.isEmpty ||
-        !CarriedOverlay.valueHashable(
-          org.apache.spark.sql.types.StructType(schema.fields.take(nKeys)))) return false
-    val m = new scala.collection.mutable.LinkedHashMap[Row, Array[Any]]()
-    rows.foreach(m += splitAux(_, nKeys))
-    auxLocalSchema = Some(schema)
-    auxLocalMap = Some(m)
-    true
-  }
-
-  /** Over-bound aux state (round 16) as a [[CarriedOverlay]] keyed by the
-    * state-key tuple, valued by the aux slots: constant plan depth, where
-    * a growing anti-join stack re-executed several times per epoch cost
-    * 10.875 jobs/epoch and 841 KB of shuffle at the bench. */
+  /** The aux state as a [[CarriedOverlay]] keyed by the state-key tuple,
+    * valued by the aux slots. Pure-signed keyed specs (every slot folds by
+    * signed addition — no extremum/float/sketch) fold each epoch's
+    * driver-side partials into it by point arithmetic: with no base while
+    * the state fits [[cascadeLocalMax]] rows — zero jobs for the merge,
+    * and every downstream evaluation plans over a LocalRelation — and
+    * over a flat base at constant plan depth past it, where a growing
+    * anti-join stack re-executed several times per epoch cost 10.875
+    * jobs/epoch and 841 KB of shuffle at the bench. Other specs hand it
+    * only their over-bound frames ([[mergeAuxState]]). */
   private lazy val auxOverlay = new CarriedOverlay[Array[Any]](spark,
     compactEvery, cascadeLocalMax, auxRows, _.localCheckpoint(true))
+  /** True while the whole aux state is the overlay's, with no base. */
+  private[graft] def auxStateIsLocal: Boolean = auxState.exists(auxOverlay.holdsAll)
 
-  /** Over-bound epoch merge for pure-signed specs with driver-resident
-    * partials: probe the overlay's base once for the epoch's
-    * NEWLY-touched keys (the only cluster work — previously-touched keys'
-    * rows are already in the overlay), fold the partials by the aux-map
-    * tier's point arithmetic (overflow raises exactly like checkedCast →
-    * the caller's demote-to-recompute), commit them to the overlay, and
-    * stash the (old, new) touched slices for [[deltaAggEpoch]]'s diff,
-    * which then runs entirely driver-side. None = not admissible
-    * (join-merge spec, distributed partials, non-signed aux types) → the
-    * mergeParts spelling. */
+  /** The epoch merge of pure-signed keyed specs with driver-resident
+    * partials, in either tier of [[auxOverlay]]. A state the overlay did
+    * not return (the backfill, a restore, a distributed merge) is seeded
+    * whole into its no-base tier while it fits [[cascadeLocalMax]] rows,
+    * else it becomes the base; over a base, the epoch probes it once for
+    * the keys this overlay window has not touched (the only cluster work).
+    * The partials fold by point arithmetic (overflow raises exactly like
+    * checkedCast → the caller's demote-to-recompute), commit to the
+    * overlay, and the (old, new) touched slices are stashed for
+    * [[deltaAggEpoch]]'s diff, which then runs entirely driver-side.
+    * None = not admissible (join-merge spec, distributed partials,
+    * non-signed aux types, binary keys) → [[mergeAuxState]]'s distributed
+    * spellings. */
   private def overboundLocalMerge(spec: DeltaAgg.Spec,
       touchedLocal: Option[DataFrame],
       localParts: Option[(IndexedSeq[Row], IndexedSeq[Row])]): Option[DataFrame] = {
@@ -1448,19 +1411,24 @@ final class MaterializedView private[engine](
     val keys = spec.stateKeys
     val nKeys = keys.length
     val sch = state.schema
-    // positional layout check (state keys first, aux after — the aux-map
-    // tier's contract) + point-arithmetic type admission
+    // positional layout check (state keys first, aux after) + point
+    // arithmetic type admission
     if (sch.fields.take(nKeys).map(_.name).toSeq != keys ||
         !pointFoldable(sch, nKeys)) return None
     val auxTypes = sch.fields.drop(nKeys).map(_.dataType).toIndexedSeq
+    def seed(s: DataFrame): Option[Iterable[(Row, Array[Any])]] = {
+      val rows = s.limit(cascadeLocalMax + 1).collect()
+      if (rows.length > cascadeLocalMax) None else Some(rows.map(splitAux(_, nKeys)))
+    }
     if (!auxOverlay.begin(Some(state), sch, org.apache.spark.sql.types.StructType(
       touched.schema.fields.zip(keys).map { case (f, k) => f.copy(name = s"__k_$k") }),
-      keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _))) return None
+      keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _), seed)) return None
     // zero-job collect: the touched frame is a LocalRelation
     val epochKeys = touched.collect().toIndexedSeq
     // ONE bounded probe against the FLAT base for keys this overlay window
     // has not seen (plain collect — the result is ≤ one state row per
-    // probed key; executeTake's scale-up rounds cost extra jobs)
+    // probed key; executeTake's scale-up rounds cost extra jobs); none
+    // with no base
     val probed = auxOverlay.probe(epochKeys).fold(Map.empty[Row, Array[Any]])(p =>
       timed("state-touched")(p.collect()).map(splitAux(_, nKeys)).toMap)
     // the epoch keys' pre-fold current rows (a key that vanished earlier in
@@ -1476,68 +1444,34 @@ final class MaterializedView private[engine](
     Some(auxOverlay.carry(epochKeys.map(k => k -> folded.get(k))))
   }
 
-  /** Materialize the epoch's folded aux state, cheapest tier first:
-    * (0) driver map point-merge — zero jobs (pure-signed specs, local
-    * partials, state ≤ [[auxStateLocalMax]]); (1) distributed merge
-    * probed down to a LocalRelation / map seed while the state fits;
-    * (2) past the bound (latched — the probe re-executes the full merge
-    * plan, so re-probing every epoch would pay O(state) twice): the
-    * [[auxOverlay]] epoch, else the keyed mergeParts path, which persists
-    * ONLY the touched slice (delta-proportional) and stacks it over the
-    * carried frame with a broadcast anti join under the overlay's depth
-    * bound; join-merge (extremum/float) specs checkpoint directly. */
+  /** Materialize the epoch's folded aux state: the [[auxOverlay]] epoch
+    * when it admits the spec (either tier), else a distributed merge. A
+    * state the overlay carries over a base is past the bound and is not
+    * probed again: the keyed mergeParts path persists ONLY the touched
+    * slice (delta-proportional) and stacks it over the carried frame under
+    * the overlay's depth bound, and join-merge (extremum/float) and global
+    * specs checkpoint flat ([[mergedState]]). Any other state's merge is
+    * probed down to a LocalRelation while it fits. */
   private def mergeAuxState(spec: DeltaAgg.Spec, addAux: DataFrame,
       delAux: DataFrame, refetch: DataFrame => DataFrame,
       touchedLocal: Option[DataFrame],
       localParts: Option[(IndexedSeq[Row], IndexedSeq[Row])]): DataFrame = {
     overboundSlices = None
-    if (auxLocalMap.nonEmpty) localParts match {
-      case Some((addRows, delRows)) if spec.isPureSigned =>
-        val m = auxLocalMap.get
-        val nKeys = spec.stateKeys.length
-        val auxTypes = auxLocalSchema.get.fields.drop(nKeys)
-          .map(_.dataType).toIndexedSeq
-        foldIntoAuxMap(m, addRows, 1, nKeys, auxTypes)
-        foldIntoAuxMap(m, delRows, -1, nKeys, auxTypes)
-        if (m.size <= auxStateLocalMax) return auxMapToDf(spec)
-        // outgrew the bound: hand a consistent frame to the distributed
-        // tiers for good (monotone, like the window tier's total-size latch)
-        val full = auxMapToDf(spec)
-        auxLocalMap = None
-        auxOversize = true
-        return full.localCheckpoint(true)
-      case _ =>
-        // distributed backfill-class epoch: the map content IS auxState's
-        // LocalRelation — drop the map (transient) and merge distributed;
-        // the seed below re-localizes when the state still fits
-        auxLocalMap = None
-    }
-    if (!auxOversize) {
-      val merged = DeltaAgg.merge(auxState.get, addAux, delAux,
-        spec, refetch, touchedLocal)
-      val probeMax =
-        if (spec.isPureSigned && spec.stateKeys.nonEmpty) auxStateLocalMax
-        else cascadeLocalMax
-      val rows = pinLocal1(merged).limit(probeMax + 1).collect()
-      if (rows.length <= probeMax) {
-        val local = localDf(rows.toIndexedSeq, merged.schema)
-        if (spec.isPureSigned) seedAuxMap(rows.toIndexedSeq, merged.schema, spec)
-        local
-      } else {
-        auxOversize = true
-        merged.localCheckpoint(true)
+    val state = auxState.get
+    overboundLocalMerge(spec, touchedLocal, localParts).getOrElse {
+      val parts =
+        if (auxOverlay.overBound(state))
+          DeltaAgg.mergeParts(state, addAux, delAux, spec, touchedLocal)
+        else None
+      parts match {
+        case Some((untouched, resummed)) =>
+          // touched slice is delta-sized — lands driver-side in the usual
+          // epoch; the untouched rows never re-persist
+          auxOverlay.stack(state, untouched.unionByName(boundedLocal(resummed)))
+        case None => mergedState(auxOverlay, state,
+          DeltaAgg.merge(state, addAux, delAux, spec, refetch, touchedLocal))
       }
-    } else overboundLocalMerge(spec, touchedLocal, localParts).getOrElse(
-      DeltaAgg.mergeParts(auxState.get, addAux, delAux, spec,
-        touchedLocal) match {
-      case Some((untouched, resummed)) =>
-        // touched slice is delta-sized — lands driver-side in the usual
-        // epoch; the untouched rows never re-persist
-        auxOverlay.stack(auxState.get, untouched.unionByName(boundedLocal(resummed)))
-      case None =>
-        DeltaAgg.merge(auxState.get, addAux, delAux, spec, refetch,
-          touchedLocal).localCheckpoint(true)
-    })
+    }
   }
 
   /** Downstream keys a cascade epoch must recompute: the statement
@@ -1602,6 +1536,21 @@ final class MaterializedView private[engine](
     val rows = pinLocal1(df).limit(cascadeLocalMax + 1).collect()
     if (rows.length <= cascadeLocalMax) localDf(rows.toIndexedSeq, df.schema)
     else df.localCheckpoint(true)
+  }
+
+  /** Materialize a carried state's merge `plan` over `state`. A state
+    * `overlay` carries over a base is past the bound, so the plan
+    * checkpoints flat at once; any other is probed down to a LocalRelation
+    * while it fits [[cascadeLocalMax]] rows, and past the bound checkpoints
+    * flat into `overlay`'s base — no later epoch probes a state already
+    * known to be over the bound. */
+  private[engine] def mergedState(overlay: CarriedOverlay[_], state: DataFrame,
+      plan: DataFrame): DataFrame = {
+    if (!overlay.overBound(state)) {
+      val rows = pinLocal1(plan).limit(cascadeLocalMax + 1).collect()
+      if (rows.length <= cascadeLocalMax) return localDf(rows.toIndexedSeq, plan.schema)
+    }
+    overlay.stack(state, plan, flat = true)
   }
 
   /** Pin a plan whose every leaf is already driver-resident (LocalRelation

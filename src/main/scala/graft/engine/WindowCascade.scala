@@ -17,8 +17,8 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
   * The two modes this trait owns:
   *  - KEYED window cascade ([[tryStartWindowCascade]] /
   *    [[windowCascadeEpoch]]): touched-PARTITION recompute + slice
-  *    replacement, with the driver-local keyed state tier and the
-  *    degenerate-shape reroute latch.
+  *    replacement, with the grouped state carried in [[windowOverlay]]
+  *    and the degenerate-shape reroute latch.
   *  - GLOBAL-window prefix fold ([[tryStartGlobalWindow]] /
   *    [[windowGlobalEpoch]]): carried input multiset + per-source signed
   *    delta terms (telescoped for multi-source prefixes), suffix
@@ -61,38 +61,11 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     * current snapshot against the renamed payload under this condition and
     * projecting the window keys; exactly those partitions re-rank. */
   private[engine] var windowPaddedDims: Map[String, org.apache.spark.sql.catalyst.expressions.Expression] = Map.empty
-  /** Monotone latch: once the window cascade's grouped state overflows
-    * [[cascadeLocalMax]], stop probing — merge straight to a checkpoint
-    * (the probe would re-execute the merge plan every epoch only to
-    * rediscover the overflow). */
-  private[graft] var windowStateOversize = false
-  /** Window-cascade keyed local state tier (round 12): the carried
-    * multiset, driver-resident and KEYED by the restriction-key tuple, so
-    * an epoch replaces its touched slices by hash-map point writes and
-    * diffs them with [[Changelog.localMultisetDiff]] — zero Spark jobs in
-    * the whole state tail. Profiling showed the distributed spelling spent
-    * ~55% of a bench epoch re-scanning OUTPUT-sized state as separate
-    * diff (semi ⋈ + full-outer) and merge (anti ⋈ ∪ union → checkpoint)
-    * jobs even though the epoch's change is delta-sized. This is the same
-    * cost model as a streaming engine's keyed state store: point reads and
-    * writes per touched key, never a full-state rewrite per epoch. Bounded
-    * by [[windowLocalStateMax]] EXPANDED rows; outgrowing it (or an
-    * output type with no local ordering) disables the tier permanently
-    * ([[windowLocalDisabled]]) and the distributed grouped-state spelling
-    * — the 100 TB shape, where state lives as a checkpointed frame (at
-    * cluster scale: a keyed state store / Delta MERGE) — takes over. */
-  private[engine] var windowLocalState:
-    Option[scala.collection.mutable.LinkedHashMap[Row, IndexedSeq[Row]]] = None
-  /** Output schema of the localized window state (set iff the tier is or
-    * was active — the map's rows carry no schema of their own). */
-  private[engine] var windowLocalSchema: Option[org.apache.spark.sql.types.StructType] = None
-  /** Monotone disable for the local tier: state/slice over the cap or an
-    * unorderable output type — both only recur, so never re-probe. A
-    * TRANSIENT drop (epoch repair) clears only [[windowLocalState]] and
-    * the tier re-localizes at the next epoch. */
-  private[engine] var windowLocalDisabled = false
-  /** Driver-memory budget for the local window state, in expanded rows. */
-  private[graft] var windowLocalStateMax = 200000
+  /** True while the grouped output state (keyed cascade or global-window
+    * fold) is carried over a base of [[windowOverlay]], past
+    * [[cascadeLocalMax]]. */
+  private[graft] def windowStateOversize: Boolean =
+    cascadeInner.exists(windowOverlay.overBound)
 
   // global-window prefix-fold state (round 12): window statements the
   // KEYED cascade refuses — a global (no PARTITION BY) or untraceable-key
@@ -110,8 +83,10 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
   /** Grouped (row → count) multiset of the cut node's output — the
     * suffix's input state. */
   private[engine] var windowInputState: Option[DataFrame] = None
-  /** Monotone oversize latch for [[windowInputState]] (same discipline as
-    * [[windowStateOversize]]). */
+  /** Monotone oversize latch for [[windowInputState]]: once it outgrows
+    * [[cascadeLocalMax]], stop probing — merge straight to a checkpoint
+    * (the probe would re-execute the merge plan every epoch only to
+    * rediscover the overflow). */
   private[engine] var windowInputOversize = false
 
   /** Trace an attribute (by exprId) through pass-through plan nodes down
@@ -552,38 +527,13 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     })
   }
 
-  /** Try to lift the distributed window-cascade state into the keyed
-    * local tier ([[windowLocalState]]): ONE bounded collect of the
-    * expanded state with the state-key spellings evaluated alongside.
-    * Refused — monotonically, via [[windowLocalDisabled]] — when the
-    * multiset outgrows [[windowLocalStateMax]] or an output type has no
-    * local ordering (the driver-side diff could not reproduce the
-    * distributed emission order). */
-  private[engine] def tryLocalizeWindowState(): Unit = {
-    if (windowLocalState.nonEmpty || windowLocalDisabled || cascadeInner.isEmpty)
-      return
-    val vis = expandCounts(cascadeInner.get)
-    val schema = vis.schema
-    if (schema.fields.exists(f => Changelog.localOrdering(f.dataType).isEmpty)) {
-      windowLocalDisabled = true; return
-    }
-    val n = schema.length
-    val rows = collectWithStateKeys(vis, vis.columns.toIndexedSeq)
-    if (rows.length > windowLocalStateMax) { windowLocalDisabled = true; return }
-    val m = new scala.collection.mutable.LinkedHashMap[Row, IndexedSeq[Row]]()
-    groupSliceByKey(rows, n).foreach { case (k, b) => m.update(k, b) }
-    windowLocalSchema = Some(schema)
-    windowLocalState = Some(m)
-    syncWindowLocalState()
-  }
-
   /** `df`'s `cols` and the state keys (as `__sk_<i>`), collected up to one
-    * row past [[windowLocalStateMax]]. */
+    * row past [[cascadeLocalMax]]. */
   private def collectWithStateKeys(df: DataFrame, cols: Seq[String]): Array[Row] = {
     import org.apache.spark.sql.functions.col
     df.select(cols.map(col) ++
       windowStateKeys.indices.map(i => windowStateKeyCol(i).as(s"__sk_$i")): _*)
-      .limit(windowLocalStateMax + 1).collect()
+      .limit(cascadeLocalMax + 1).collect()
   }
 
   /** Split collected (output ++ __sk_*) rows into key → expanded-rows
@@ -601,44 +551,18 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     grouped.map { case (k, b) => k -> (b.toIndexedSeq: IndexedSeq[Row]) }
   }
 
-  /** Publish the local map as the visible snapshot (a LocalRelation — no
-    * checkpoint job) and keep [[cascadeInner]] as its LAZY grouped
-    * spelling, executed only by the rare consumers (durable persist, the
-    * epoch-repair diff, tier fallback). */
-  private def syncWindowLocalState(): Unit = {
-    val all = windowLocalState.get.valuesIterator.flatten.toIndexedSeq
-    val vis = localDf(all, windowLocalSchema.get)
-    snapshot = Some(vis)
-    cascadeInner = Some(groupedCounts(vis))
-    vis.createOrReplaceTempView(viewName)
-  }
-
-  /** Fall out of the local tier mid-run: checkpoint the (pre-epoch) lazy
-    * grouped state so the distributed epoch body proceeds against
-    * materialized state. `disable` latches the tier off permanently —
-    * size/type refusals only recur; a transient epoch repair instead just
-    * drops the map and the tier re-localizes next epoch. */
-  private[engine] def unlocalizeWindowState(disable: Boolean): Unit = {
-    windowLocalState.foreach { _ =>
-      cascadeInner = Some(cascadeInner.get.localCheckpoint(true))
-      val vis = expandCounts(cascadeInner.get)
-      snapshot = Some(vis)
-      vis.createOrReplaceTempView(viewName)
-    }
-    windowLocalState = None
-    if (disable) windowLocalDisabled = true
-  }
-
   /** One window-cascade epoch: the delta payload names the touched
     * partitions; exactly those re-evaluate against the source's current
     * snapshot (semi-join below the Window) and REPLACE their slice of the
     * carried multiset; the epoch's ops are the multiset diff of the
     * touched slice. Per-epoch cluster work is touched-partition-bounded —
     * at 100 TB a delta touching k partitions re-ranks k partitions, never
-    * the table. The state tail (slice diff + replacement) runs in the
-    * keyed local tier ([[windowLocalState]]) while the multiset fits —
-    * map point writes, zero jobs — and as the distributed grouped-state
-    * spelling (semi/anti joins against a checkpointed frame) beyond it. */
+    * the table. The state tail (slice diff + replacement) runs through
+    * [[windowOverlay]] ([[windowOverlayEpoch]]): point writes with zero
+    * jobs while the multiset fits, one base probe past it. A
+    * backfill-class delta, or a slice or probe past the bound, takes the
+    * distributed grouped-state spelling (semi/anti joins against a
+    * checkpointed frame). */
   private[engine] def windowCascadeEpoch(): Unit = synchronized {
     import org.apache.spark.sql.functions.{broadcast, col}
     if (cascadeUpstreams.isEmpty) return
@@ -657,11 +581,6 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       vis.createOrReplaceTempView(viewName)
       timed("backfill")(
         emitOps(Changelog.multisetDiff(None, vis, wide = true), wide = true))
-      // lift the freshly-built state into the local tier right away so the
-      // FIRST incremental epoch already takes the zero-job state tail; a
-      // localize failure must not fail the (already-committed) backfill
-      try timed("backfill")(tryLocalizeWindowState())
-      catch { case scala.util.control.NonFatal(_) => () }
       return
     }
     if (!anyNew) return
@@ -682,7 +601,6 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     epochEmitted = false
     var settled = false
     try {
-      tryLocalizeWindowState()
       val primary = cascadeUpstreams.head
       // touched keys, one term per changed source:
       //  - PRIMARY delta: the restriction-key expressions evaluate
@@ -697,7 +615,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       //    the primary term; unchanged-but-rematched rows are in the
       //    current snapshot — the union covers every affected partition
       //    (over-touching recomputes idempotently).
-      // boundedLocal inlined to keep the key ROWS — the local tier's map
+      // boundedLocal inlined to keep the key ROWS — the overlay's
       // lookups need them
       val touchedRaw = pinLocal1(changed.map { case (u, ops) =>
         if (u.viewName == primary.viewName)
@@ -734,81 +652,23 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       val recompute = restrictWindowToPartitions(spark.sql(cascadeStmt), touched)
       windowEpochFrame = Some(recompute)
 
-      // ---- keyed local state tail: the slice collects ONCE (with its
-      // state keys evaluated alongside), the diff runs driver-side, and
-      // touched slices replace by map point writes — zero further jobs ----
-      if (windowLocalState.nonEmpty && touchedRows.length <= cascadeLocalMax) {
-        val state = windowLocalState.get
-        val schema = windowLocalSchema.get
-        val n = schema.length
-        // degenerate-shape detection (round 13): consecutive epochs whose
-        // delta touches ~every carried partition — the map size makes the
-        // fraction a free probe here
-        if (state.size >= 8 && touchedRows.length >= 0.9 * state.size)
-          windowDegenerateEpochs += 1
-        else windowDegenerateEpochs = 0
-        val sliceRows = timed("group-recompute")(
-          collectWithStateKeys(recompute, recompute.columns.toIndexedSeq))
-        if (sliceRows.length <= windowLocalStateMax) {
-          val newByKey = groupSliceByKey(sliceRows, n)
-          val newSlice = newByKey.valuesIterator.flatten.toIndexedSeq
-          val oldSlice = touchedRows.toIndexedSeq
-            .flatMap(k => state.getOrElse(k, IndexedSeq.empty[Row]))
-          Changelog.localMultisetDiff(Some(oldSlice), newSlice, schema) match {
-            case Some(opsRows) =>
-              if (opsRows.nonEmpty)
-                timed("emitOps")(emitOps(localDf(opsRows.toIndexedSeq,
-                  schema.add("op", org.apache.spark.sql.types.StringType))))
-              epochEmitted = true
-              // point writes AFTER the emit (same atomic-append split as
-              // the distributed branch below): vanished partitions drop,
-              // the rest replace their slice
-              touchedRows.foreach(state.remove)
-              newByKey.foreach { case (k, rs) => state.update(k, rs) }
-              timed("state-merge")(syncWindowLocalState())
-              // per-slice fits don't bound the TOTAL: once the grown
-              // multiset outruns the driver budget, hand the (consistent)
-              // state to the distributed tier for good
-              if (state.valuesIterator.map(_.length.toLong).sum > windowLocalStateMax)
-                unlocalizeWindowState(disable = true)
-              // a wholesale-touch streak reroutes the statement to the
-              // global-window input fold (epoch already committed; the
-              // switch only re-seeds the input state) — round 13
-              if (!windowRerouteRefused &&
-                  windowDegenerateEpochs >= windowDegenerateAfter)
-                tryRerouteToGlobalWindow()
-              return
-            case None => () // unorderable type slipped through — fall out
-          }
-        }
-        // slice over the cap / unorderable: permanent fall-back, and the
-        // distributed body below re-runs the recompute bounded its own way
-        unlocalizeWindowState(disable = true)
-      } else if (windowLocalState.nonEmpty) {
-        // a touched-key set too large to hold is a backfill-class DELTA —
-        // delta-sized, not state-sized (round-12 ADVICE): one bulk load
-        // must not demote every subsequent small epoch to the distributed
-        // tail, so this drop is transient and the tier re-localizes next
-        // epoch (tryLocalizeWindowState's own probe then decides whether
-        // the grown STATE still fits; the permanent latch is reserved for
-        // state-size and unorderable-type refusals)
-        unlocalizeWindowState(disable = false)
-      }
-
-      // ---- over-bound overlay epoch (round 16): in the windowStateOversize
-      // regime the distributed tail below pays two full-state executions
-      // per epoch — the diff's semi-restricted scan and the state-merge's
-      // flat localCheckpoint — so its epoch cost is O(state), not O(delta)
-      // (ScaleProbe window mode: ~14 jobs/epoch at 1M rows).
-      // [[windowOverlay]] carries the grouped state at constant
-      // plan depth instead; only newly-touched keys probe its base, and
-      // the diff runs driver-side with the SAME localMultisetDiff the
-      // local tier emits through. Any bound/orderability refusal falls
-      // through to the distributed tail below with the overlay untouched;
-      // that tail's flat checkpoint re-bases the next overlay epoch.
-      if (windowStateOversize && touchedRows.length <= cascadeLocalMax &&
+      // ---- overlay epoch: the slice collects ONCE (with its state keys
+      // evaluated alongside), the diff runs driver-side and the touched
+      // slices replace in [[windowOverlay]] — zero further jobs with no
+      // base, one bounded probe for the delta's keys new to the overlay
+      // window over one. The distributed tail below would pay two
+      // full-state executions per epoch — the diff's semi-restricted scan
+      // and the state-merge — so its cost is O(state), not O(delta)
+      // (ScaleProbe window mode: ~14 jobs/epoch at 1M rows); it takes
+      // only backfill-class deltas and the overlay's refusals ----
+      if (touchedRows.length <= cascadeLocalMax &&
           windowOverlayEpoch(recompute, touchedRows, touched)) {
         settled = true
+        // a wholesale-touch streak reroutes the statement to the
+        // global-window input fold (epoch already committed; the switch
+        // only re-seeds the input state) — round 13
+        if (!windowRerouteRefused && windowDegenerateEpochs >= windowDegenerateAfter)
+          tryRerouteToGlobalWindow()
         return
       }
 
@@ -822,24 +682,13 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       val epochOps = timed("diff-collect")(boundedLocal(Changelog.multisetDiffGrouped(
         restrict(cascadeInner.get, "left_semi"), newG, MaterializedView.CntCol)))
       // state BEFORE ops (same failure discipline as joinCascadeEpoch): a
-      // merge failure propagates with nothing emitted this epoch. The
-      // oversize latch (round 11): a window MV's grouped state is
-      // OUTPUT-sized, not delta-sized — once it outgrows cascadeLocalMax
-      // the boundedLocal probe would re-execute the merge plan every
-      // epoch just to discover that again, so after the first overflow
-      // the merge checkpoints directly (monotone: multiset state only
-      // shrinks via whole-slice replacement, never back under the bound
-      // in a way worth re-probing).
-      val mergedPlan = restrict(cascadeInner.get, "left_anti").unionByName(newG)
-      val merged = timed("state-merge")(
-        if (windowStateOversize) mergedPlan.localCheckpoint(true)
-        else {
-          val m = boundedLocal(mergedPlan)
-          if (!m.queryExecution.logical
-              .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-            windowStateOversize = true
-          m
-        })
+      // merge failure propagates with nothing emitted this epoch. A window
+      // MV's grouped state is OUTPUT-sized, not delta-sized: once it is
+      // found past cascadeLocalMax it checkpoints flat into the overlay's
+      // base, and a state the overlay carries over a base is not probed
+      // again ([[mergedState]]).
+      val merged = timed("state-merge")(mergedState(windowOverlay, cascadeInner.get,
+        restrict(cascadeInner.get, "left_anti").unionByName(newG)))
       emitOps(epochOps)
       epochEmitted = true
       cascadeInner = Some(merged)
@@ -863,17 +712,15 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       val grouped = groupedCounts(spark.sql(cascadeStmt)).localCheckpoint(true)
       val vis = expandCounts(grouped)
       if (!epochEmitted) {
-        // pre-epoch state: the local map is unmutated before the emit, so
-        // its lazy grouped spelling in cascadeInner is still the truth
+        // pre-epoch state: cascadeInner is installed only after the emit
         val prevVis = expandCounts(cascadeInner.get)
         emitOps(Changelog.multisetDiff(Some(prevVis), vis))
         epochEmitted = true
       }
-      // transient drop — NOT a disable: the tier re-localizes next epoch
-      windowLocalState = None
       // emitted && a POST-emit step failed: the committed ops already
       // describe prev→new, and `grouped` IS the new state (the full
-      // statement over the same current sources) — install it, emit nothing
+      // statement over the same current sources) — install it, emit
+      // nothing; the next epoch seeds the overlay from it
       cascadeInner = Some(grouped)
       snapshot = Some(vis)
       vis.createOrReplaceTempView(viewName)
@@ -883,12 +730,10 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       // from NonFatal, so the repair above never ran) with nothing
       // committed: restore the consumed offsets so the NEXT epoch re-folds
       // this delta instead of permanently losing it (round-12 ADVICE).
-      // After a commit the state is already consistent — the local-tier
-      // branch mutates its map and syncs BEFORE the only post-emit job
-      // (the oversize unlocalize checkpoint), and the distributed branch
-      // merges state before emitting — so the offsets must stand. The
-      // overlay commits BEFORE its emit, so an escape there also re-bases
-      // the next overlay epoch on the unchanged cascadeInner.
+      // After a commit the state is already consistent — both the overlay
+      // and the distributed branch commit state before emitting — so the
+      // offsets must stand. An escape before the emit also re-bases the
+      // next overlay epoch on the unchanged cascadeInner.
       if (!settled && !epochEmitted) {
         restoreOffsets(prevOffsets)
         windowOverlay.invalidate()
@@ -896,11 +741,10 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     }
   }
 
-  /** Over-bound grouped state of the window cascade (round 16) as a
-    * [[CarriedOverlay]] keyed by the partition state key, valued by the
-    * key's current EXPANDED output rows (the local tier's representation,
-    * so the diff reuses [[Changelog.localMultisetDiff]] verbatim); the
-    * render counts them back into the grouped layout. */
+  /** Grouped state of the window cascade as a [[CarriedOverlay]] keyed by
+    * the partition state key, valued by the key's current EXPANDED output
+    * rows (so the diff is [[Changelog.localMultisetDiff]] of the touched
+    * slices); the render counts them back into the grouped layout. */
   private[engine] lazy val windowOverlay = new CarriedOverlay[IndexedSeq[Row]](spark,
     compactEvery, cascadeLocalMax,
     { values =>
@@ -910,28 +754,42 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     },
     df => timed("state-merge")(df.localCheckpoint(true)))
 
-  /** One over-bound overlay epoch. Computes everything up to the commit
-    * PURELY (a refusal returns false with no state mutated; the caller
-    * falls through to the distributed tail), commits the epoch to the
-    * overlay, then emits the driver-side diff. Epoch jobs in steady state:
-    * the touched-slice recompute collect, plus one bounded base probe when
-    * the delta names keys this overlay window has not seen. */
+  /** One overlay epoch, in either tier. A state the overlay did not return
+    * (the backfill, a restore, a repair, the distributed tail) is seeded
+    * whole into its no-base tier while its expanded rows fit
+    * [[cascadeLocalMax]], else it becomes the base. Computes everything up
+    * to the commit without touching the MV (a refusal returns false; the
+    * caller falls through to the distributed tail), commits the epoch to
+    * the overlay, then emits the driver-side diff. Epoch jobs in steady
+    * state: the touched-slice recompute collect, plus, over a base, one
+    * bounded probe when the delta names keys this overlay window has not
+    * seen. With no base the face is a LocalRelation of the overlay's
+    * rows, so reads run no job. */
   private def windowOverlayEpoch(recompute: DataFrame, touchedRows: Array[Row],
       touched: DataFrame): Boolean = {
     import org.apache.spark.sql.functions.col
     val state = cascadeInner.get
     val gSchema = state.schema // output cols + CntCol (groupedCounts layout)
     val outSchema = org.apache.spark.sql.types.StructType(gSchema.fields.dropRight(1))
+    val outCols = outSchema.fieldNames.toIndexedSeq
     val n = outSchema.length
-    if (gSchema.fields.last.name != MaterializedView.CntCol) return false
-    if (!windowOverlay.begin(Some(state), gSchema, touched.schema, windowStateKeys.indices
-      .map(i => windowStateKeyCol(i) <=> col(s"__k_$i")).reduce(_ && _))) return false
-    // 1. recomputed touched slice, state keys evaluated alongside (the
-    // local tier's spelling — ONE job, driver-bounded)
-    val sliceRows = timed("group-recompute")(
-      collectWithStateKeys(recompute, outSchema.fieldNames.toIndexedSeq))
-    if (sliceRows.length > windowLocalStateMax) return false
+    // the driver-side diff reproduces the distributed emission order only
+    // over types with a local ordering
+    if (gSchema.fields.last.name != MaterializedView.CntCol ||
+        outSchema.fields.exists(f => Changelog.localOrdering(f.dataType).isEmpty)) return false
+    // 1. recomputed touched slice, state keys evaluated alongside (ONE job,
+    // driver-bounded)
+    val sliceRows = timed("group-recompute")(collectWithStateKeys(recompute, outCols))
+    if (sliceRows.length > cascadeLocalMax) return false
     val newByKey = groupSliceByKey(sliceRows, n)
+    def seed(s: DataFrame): Option[Iterable[(Row, IndexedSeq[Row])]] = {
+      val rows = collectWithStateKeys(expandCounts(s), outCols)
+      if (rows.length > cascadeLocalMax) None else Some(groupSliceByKey(rows, n))
+    }
+    if (!windowOverlay.begin(Some(state), gSchema, touched.schema, windowStateKeys.indices
+      .map(i => windowStateKeyCol(i) <=> col(s"__k_$i")).reduce(_ && _), seed)) return false
+    // carried partitions before the epoch (the whole state with no base)
+    val carriedKeys = windowOverlay.keyCount
     // 2. the touched keys' OLD rows: the overlay's for keys this window has
     // seen (a vanished key correctly surfaces no rows), one bounded grouped
     // probe against the flat base for the fresh ones
@@ -941,8 +799,8 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       case Some(p) =>
         val probed = timed("state-touched")(collectWithStateKeys(
           p, gSchema.fieldNames.toIndexedSeq))
-        if (probed.length > windowLocalStateMax ||
-            probed.map(_.getLong(n)).sum > windowLocalStateMax) return false
+        if (probed.length > cascadeLocalMax ||
+            probed.map(_.getLong(n)).sum > cascadeLocalMax) return false
         groupSliceByKey(probed, n + 1).map { case (k, grouped) =>
           k -> grouped.flatMap(g => IndexedSeq.fill(g.getLong(n).toInt)(
             Row.fromSeq((0 until n).map(g.get))))
@@ -952,7 +810,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       windowOverlay.current(k, probedOld).getOrElse(IndexedSeq.empty[Row]))
     val newSlice = newByKey.valuesIterator.flatten.toIndexedSeq
     val opsRows = Changelog.localMultisetDiff(Some(oldSlice), newSlice, outSchema)
-      .getOrElse(return false) // unorderable output type: distributed tail
+      .getOrElse(return false)
     // ---- commit sequence. State (overlay + any flat checkpoint, the only
     // post-refusal Spark job) comes BEFORE the emit — the distributed
     // tail's own discipline — so a checkpoint failure reaches the repair
@@ -967,9 +825,17 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     // re-fold a delta the overlay already holds
     epochEmitted = true
     cascadeInner = Some(carried)
-    val vis = expandCounts(carried)
+    val local = windowOverlay.holdsAll(carried)
+    val vis =
+      if (local) localDf(windowOverlay.values.flatten.toIndexedSeq, outSchema)
+      else expandCounts(carried)
     snapshot = Some(vis)
     vis.createOrReplaceTempView(viewName)
+    // degenerate-shape detection (round 13): the no-base tier's key count
+    // makes the touched fraction a free probe
+    if (local && carriedKeys >= 8 && keyRows.length >= 0.9 * carriedKeys)
+      windowDegenerateEpochs += 1
+    else windowDegenerateEpochs = 0
     true
   }
 
@@ -977,14 +843,15 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
     * that every epoch's delta touches wholesale (e.g. a uniform hash of
     * the row id) makes the keyed cascade re-rank every partition every
     * epoch AND pay the per-partition machinery on top. After
-    * [[windowDegenerateAfter]] consecutive local-tier epochs touching
+    * [[windowDegenerateAfter]] consecutive no-base overlay epochs touching
     * ≥90% of ≥8 carried partitions, the statement reroutes to the
     * global-window input fold — same carried grouped output state, plus a
     * one-off prefix scan to seed the input multiset — whose epochs
     * re-evaluate the whole window suffix ONCE over carried ⊕ delta (the
     * cost the statement's semantics demand, with none of the
-    * per-partition overhead). Detection lives in the local tier, where
-    * the partition count is a free map probe. */
+    * per-partition overhead). Detection lives in the no-base overlay
+    * epoch, where the partition count is a free probe
+    * ([[CarriedOverlay.keyCount]]). */
   private var windowDegenerateEpochs = 0
   private[graft] var windowDegenerateAfter = 2
   private var windowRerouteRefused = false
@@ -1036,7 +903,7 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       statementEvals += 1
       val inputG = groupedCounts(GraftColumnBridge.ofRows(spark, cut))
         .localCheckpoint(true)
-      unlocalizeWindowState(disable = false) // grouped state off the local map
+      windowOverlay.invalidate() // the fold carries its own grouped state
       windowInputState = Some(inputG)
       windowMode = false
       cascadeMode = false
@@ -1256,15 +1123,8 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
       val backfillState =
         if (inputIsLocal) expandCounts(inputG).coalesce(1) else expandCounts(inputG)
       val groupedPlan = groupedCounts(evalGlobalSuffix(analyzed, cut, backfillState))
-      val grouped =
-        if (windowStateOversize) groupedPlan.localCheckpoint(true)
-        else {
-          val g = boundedLocal(groupedPlan)
-          if (!g.queryExecution.logical
-              .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-            windowStateOversize = true
-          g
-        }
+      // no output state yet: the plan stands in for it
+      val grouped = mergedState(windowOverlay, groupedPlan, groupedPlan)
       cascadeInner = Some(grouped)
       val vis = expandCounts(grouped)
       snapshot = Some(vis)
@@ -1434,21 +1294,14 @@ private[engine] trait WindowCascadeSupport { self: MaterializedView =>
         throw new IllegalStateException("global-window cut missing at epoch"))
       val foldedIsLocal = folded.queryExecution.logical
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-      def suffixInput: DataFrame =
-        if (foldedIsLocal && !windowStateOversize) expandCounts(folded).coalesce(1)
+      // the output state is OUTPUT-sized: once found past the bound it
+      // carries flat in [[windowOverlay]]'s base and is not probed again
+      val prevG = cascadeInner.get
+      val suffixInput =
+        if (foldedIsLocal && !windowOverlay.overBound(prevG)) expandCounts(folded).coalesce(1)
         else expandCounts(folded)
-      val newG = timed("suffix-eval")(
-        if (windowStateOversize)
-          groupedCounts(evalGlobalSuffix(analyzed, cut, suffixInput))
-            .localCheckpoint(true)
-        else {
-          val g = boundedLocal(groupedCounts(
-            evalGlobalSuffix(analyzed, cut, suffixInput)))
-          if (!g.queryExecution.logical
-              .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-            windowStateOversize = true
-          g
-        })
+      val newG = timed("suffix-eval")(mergedState(windowOverlay, prevG,
+        groupedCounts(evalGlobalSuffix(analyzed, cut, suffixInput))))
       // ops diff: when both grouped states are driver-resident
       // (boundedLocal's LocalRelations — LocalTableScan collect launches
       // no job), the diff runs driver-side like the top-N/window local

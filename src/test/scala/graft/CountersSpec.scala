@@ -40,7 +40,10 @@ class CountersSpec extends SparkSpec {
     * on shared appends (the r15 global_window precedent). */
   private val pinned: Map[String, (Double, Long)] = Map(
     "s_mv_tumble_maintain" -> (1.0, 171094L),
-    "s_mv_cascade_epoch" -> (2.875, 191648L),
+    // re-pinned for the delta-agg fold in CarriedOverlay: the first epoch
+    // seeds the no-base tier from the backfill frame (no distributed merge
+    // and probe), and every epoch diffs the overlay's driver slices
+    "s_mv_cascade_epoch" -> (2.0, 171094L),
     // re-pinned for round 16's single-collect session epoch: while the
     // affected-slice tier is live the delta is collected ONCE (no
     // localCheckpoint, no emptiness probes, no second limit-collect)
@@ -48,21 +51,22 @@ class CountersSpec extends SparkSpec {
     // re-pinned for round 16's fused grouped-top-N epoch: the touched-group
     // recompute plan is no longer materialized before the truncate — the
     // ranked sort-limit evaluates it as part of its single job
-    "s_mv_topn_cascade" -> (4.125, 8286L),
-    "s_mv_pkagg_fold" -> (1.875, 7814L),
+    "s_mv_topn_cascade" -> (3.0, 4096L),
+    "s_mv_pkagg_fold" -> (1.0, 4096L),
     // the delta-join's landed net writes its changelog ops driver-side
     // (no single-task netOps job per epoch)
     "s_mv_left_join_fold" -> (2.0, 4096L),
     "s_mv_window_maintain" -> (3.0, 4096L),
     "s_mv_global_window" -> (2.0, 4096L),
-    "s_mv_histogram_fold" -> (2.625, 25458L),
-    // the pkagg fold with driver tiers forced off — the measured
-    // over-bound fallback shape (the 100 TB path). Re-pinned for round
-    // 16's driver-overlay state: constant-depth base∪overlay plan, one
-    // base probe per NEWLY-touched key set, driver-side point fold and
-    // slice-reused visible diff — steady-state epochs are delta-aux only
-    // (the residual jobs/bytes are the every-8-epochs flat checkpoint)
-    "s_mv_pkagg_fold_overbound" -> (2.25, 15628L),
+    "s_mv_histogram_fold" -> (2.25, 4096L),
+    // the pkagg fold over a state past its driver bound — the measured
+    // over-bound shape (the 100 TB path): constant-depth base∪overlay
+    // plan, one base probe per NEWLY-touched key set, driver-side point
+    // fold and slice-reused visible diff — steady-state epochs are
+    // delta-aux only (the residual jobs are the first epoch's seed collect
+    // and probe, and the every-8-layers flat checkpoint). Re-pinned when
+    // the entry moved onto cascadeLocalMax with 850 preloaded cold groups
+    "s_mv_pkagg_fold_overbound" -> (1.5, 4096L),
     // the streaming tumble aggregate past its keyed-state bound: one flat
     // checkpoint when the state first outgrows it, then base-probe jobs for
     // each epoch's new keys and a checkpoint whenever the touched set

@@ -30,7 +30,7 @@ class DeltaAggSpec extends SparkSpec {
     val evals = mv.statementEvals
     assert(groups(mv) == Map("a" -> ((2L, 30L)), "b" -> ((1L, 5L))))
     assert(mv.auxStateIsLocal,
-      "a small pure-signed state must ride the zero-job driver map tier (round 13)")
+      "a small pure-signed state must ride the overlay's zero-job no-base tier")
 
     // overwrite moves id=2 from a to b: a's sums decrement, b's increment
     t.insert(Seq(Row(2L, "b", 7L)))
@@ -1308,10 +1308,10 @@ class DeltaAggSpec extends SparkSpec {
       "seg_mv")
     val mv = rw.mvByName("seg_mv").get
     assert(mv.isDeltaAggMode)
-    // shrink the driver-map bound below the group count so the FIRST fold
-    // epoch latches oversize, and compact every 2 epochs so one test run
-    // exercises the overlay AND the flat checkpoint
-    mv.auxStateLocalMax = 4
+    // shrink the driver bound below the group count so the FIRST fold
+    // epoch outgrows the no-base tier, and compact every 2 epochs so one
+    // test run exercises the overlay AND the flat checkpoint
+    mv.cascadeLocalMax = 4
     mv.compactEvery = 2
     val t = rw.table("seg_t").get
     def state: Map[String, (Long, Long)] =
@@ -1327,7 +1327,7 @@ class DeltaAggSpec extends SparkSpec {
     val evals = mv.statementEvals
     assert(state == (1L to 6L).map(i => s"g$i" -> ((1L, i * 10))).toMap)
     assert(!mv.auxStateIsLocal,
-      "six state rows over a bound of four must refuse the map tier")
+      "six state rows over a bound of four must leave the no-base tier")
     // epoch 2: the first over-bound epoch carries through the overlay
     t.insert(Seq(Row(7L, "g1", 5L), Row(8L, "g7", 70L)))
     rw.flush()
@@ -1405,6 +1405,6 @@ class DeltaAggSpec extends SparkSpec {
   }
 
   test("BYTEA group keys fold to the batch result past the driver bound") {
-    byteaGroupParity("ob", _.auxStateLocalMax = 0)
+    byteaGroupParity("ob", _.cascadeLocalMax = 0)
   }
 }

@@ -607,11 +607,10 @@ class WindowCascadeMvSpec extends SparkSpec {
       "(PARTITION BY grp ORDER BY v DESC, id) AS BIGINT) AS r FROM wov_t", "wov_mv")
     val mv = rw.mvByName("wov_mv").get
     assert(mv.isWindowCascadeMode)
-    // force the over-bound regime: the local tier refuses (total state
-    // exceeds 5 expanded rows) and the grouped state latches oversize past
-    // 10 rows — exactly the ScaleProbe 1M shape, shrunk to spec scale.
-    // Bounds are set BEFORE the first insert so backfill already refuses.
-    mv.windowLocalStateMax = 5
+    // force the over-bound regime: the grouped state outgrows the overlay's
+    // no-base tier past 10 rows and carries over a base from then on —
+    // exactly the ScaleProbe 1M shape, shrunk to spec scale. The bound is
+    // set BEFORE the first insert.
     mv.cascadeLocalMax = 10
     val t = rw.table("wov_t").get
     def batchParity(tag: String): Unit = {
@@ -623,16 +622,15 @@ class WindowCascadeMvSpec extends SparkSpec {
       assert(got == want, s"$tag: maintained $got != batch $want")
     }
     // 8 epochs of 3 rows in fresh partitions: state grows to 24 rows,
-    // far past both bounds — epochs past the latch must run through the
-    // overlay (constant-depth carried frame), including one compactEvery
-    // flat re-base at epoch 8
+    // far past the bound — epochs past it must run through the overlay
+    // over a base (constant-depth carried frame)
     for (e <- 0L until 8L) {
       t.insert(Seq(Row(e * 10 + 1, s"g$e", 10L + e), Row(e * 10 + 2, s"g$e", 20L + e),
         Row(e * 10 + 3, s"g$e", 5L + e)))
       rw.flush()
       batchParity(s"epoch $e")
     }
-    assert(mv.windowStateOversize, "the grouped state must have latched oversize")
+    assert(mv.windowStateOversize, "the grouped state must carry over a base")
     assert(mv.overlayEpochs >= 4,
       s"the overlay must carry the over-bound epochs, ran ${mv.overlayEpochs}")
     // revisit an OLD partition (keys the overlay window has not seen since

@@ -142,4 +142,22 @@ class LiveTableTailSpec extends graft.SparkSpec {
       spark.conf.unset("graft.table.compactThreshold")
     }
   }
+
+  test("a streaming face attached after a bulk insert over a non-empty tail sees every row") {
+    val rw = GraftEngine.open(ConnOptions(), Some(spark))
+    try {
+      val kv = StructType(Seq(StructField("k", StringType), StructField("v", LongType)))
+      rw.createTable("lt_bulk", kv)
+      val t = rw.table("lt_bulk").get
+      t.insert(Seq(Row("a", 1L), Row("b", 2L)))
+      t.insertDF(spark.createDataFrame(java.util.Arrays.asList(Row("c", 3L)), kv))
+      val sql = "SELECT k, count(*) AS n FROM lt_bulk GROUP BY k"
+      val mv = rw.mv(sql, "lt_bulk_mv")
+      assert(mv.isStreamingMode)
+      rw.flush()
+      def rows(rs: Seq[Row]): Seq[(String, Long)] = rs.map(r => (r.getString(0), r.getLong(1))).sorted
+      assert(rows(rw.fetch(sql)) == Seq(("a", 1L), ("b", 1L), ("c", 1L)))
+      assert(rows(mv.df.collect().toSeq) == rows(rw.fetch(sql)), "the MV must equal batch")
+    } finally rw.close()
+  }
 }
