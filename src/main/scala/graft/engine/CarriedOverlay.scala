@@ -8,8 +8,9 @@ import scala.collection.mutable
 
 /** Keyed carried state at constant plan depth, shared in both tiers by
   * the delta-agg aux state, the window cascade's grouped state, the
-  * streaming update-mode aggregate and the delta-join cascade's grouped
-  * state (output row → multiplicity). The
+  * streaming update-mode aggregate, the delta-join cascade's grouped
+  * state (output row → multiplicity) and the session MV's raw rows and
+  * face (row → multiplicity). The
   * state is `base` (the last flat checkpoint, or a mode's own layer over
   * it, see [[stack]]) plus a driver-resident `key → V` overlay holding the
   * current value of every key touched since; the touched set also keeps
@@ -19,12 +20,12 @@ import scala.collection.mutable
   * }}}
   * one anti join deep however many epochs have passed. The anti join
   * names only the touched keys that may have a base row: a key the last
-  * [[probe]] asked for and the mode's collect did not return is left
-  * out, and with no such key the frame is `base ∪ render(overlay)`. With
-  * no base (a mode starting from no state, or a state seeded whole into
-  * the overlay) the frame is `render(overlay)` as a LocalRelation and
-  * nothing is probed, until it outgrows `limit` and checkpoints flat into
-  * the first base. Each mode keeps its value type, key condition, render
+  * [[probe]] or [[probeRange]] covered and the mode's collect did not
+  * return is left out, and with no such key the frame is
+  * `base ∪ render(overlay)`. With no base (a mode starting from no state,
+  * or a state seeded whole into the overlay) the frame is
+  * `render(overlay)` as a LocalRelation and nothing is probed, until it
+  * outgrows `limit` and checkpoints flat into the first base. Each mode keeps its value type, key condition, render
   * (to state rows), base-probe collect and fold.
   *
   * Invariants:
@@ -64,7 +65,8 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
   private val touched = mutable.LinkedHashSet[Row]()
   /** Touched keys a probe found no base row for: the anti join skips them. */
   private val absent = mutable.HashSet[Row]()
-  private var probed: collection.Set[Row] = Set.empty
+  /** Whether the last probe covered a key: one it did not return is absent. */
+  private var probed: Row => Boolean = _ => false
   private var returned: Option[DataFrame] = None
   private var depth = 0
   private var carried = 0L
@@ -85,6 +87,7 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
     * has no base. */
   def keyCount: Int = overlay.size
   def values: Iterator[V] = overlay.valuesIterator
+  def entries: Iterator[(Row, V)] = overlay.iterator
 
   /** Drop the state; the next epoch re-bases on the frame it is given. */
   def invalidate(): Unit = rebase(None)
@@ -118,13 +121,26 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
     else Some(b.join(broadcast(localDf(fresh, keySchema)), keyCond, "left_semi"))
   }
 
+  /** The base rows inside the ranges `bounds` names (rows of
+    * `boundSchema`, a group key and its bound, matched to state rows by
+    * `cond`), as one broadcast semi join the mode collects; None (no job)
+    * with no base. `inRange` tells the keys inside the ranges: one the
+    * collect does not return has no base row. The rows of touched keys it
+    * returns are stale; [[current]] reads the overlay's. */
+  def probeRange(bounds: IndexedSeq[Row], boundSchema: StructType, cond: Column,
+      inRange: Row => Boolean): Option[DataFrame] = base.map { b =>
+    probed = inRange
+    b.join(broadcast(localDf(bounds, boundSchema)), cond, "left_semi")
+  }
+
   /** Value of `k` before this epoch: the overlay's for a touched key (None
-    * once it vanished), else the mode's collect of the last [[probe]]. */
+    * once it vanished), else the mode's collect of the last [[probe]] or
+    * [[probeRange]]. */
   def current(k: Row, found: collection.Map[Row, V]): Option[V] =
     if (touched.contains(k)) overlay.get(k)
     else {
       val v = found.get(k)
-      if (v.isEmpty && probed.contains(k)) absent += k
+      if (v.isEmpty && probed(k)) absent += k
       v
     }
 
@@ -184,7 +200,7 @@ private[engine] final class CarriedOverlay[V](spark: SparkSession,
     }
 
   private def reset(b: Option[DataFrame]): Unit = {
-    overlay.clear(); touched.clear(); absent.clear(); probed = Set.empty; base = b
+    overlay.clear(); touched.clear(); absent.clear(); probed = _ => false; base = b
   }
 
   private def localDf(rows: IndexedSeq[Row], schema: StructType): DataFrame =

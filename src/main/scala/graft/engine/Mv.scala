@@ -1295,8 +1295,8 @@ final class MaterializedView private[engine](
     * delta-agg mergeParts slice stack. */
   private[graft] var compactEvery = 8
   /** Over-bound overlay epochs of any mode (spec and bench probe). */
-  private[graft] def overlayEpochs: Long =
-    auxOverlay.epochs + windowOverlay.epochs + streamOverlay.epochs + joinOverlay.epochs
+  private[graft] def overlayEpochs: Long = auxOverlay.epochs + windowOverlay.epochs +
+    streamOverlay.epochs + joinOverlay.epochs + sessionRaw.epochs + sessionFace.epochs
 
   /** a ⊞ sign·b on external Row values. NULL is the additive identity
     * (Sum skips NULLs); the result is NULL only when both sides are.
@@ -2556,11 +2556,11 @@ final class MaterializedView private[engine](
         topNMode = false
         sessionMode = false
         innerState = None
-        sessionRawLocal = None
         frozen = None
         topNVisibleRows = None
-        sessionVisibleRows = None
         streamOverlay.invalidate()
+        sessionRaw.invalidate()
+        sessionFace.invalidate()
         engine.releaseStreamReaders(viewName)
         faceStreams.clear() // faces die with streaming mode (engine cascades)
         val df = spark.sql(engine.rewrite(stmt))

@@ -1,9 +1,12 @@
 package graft.engine
 
 import graft.streaming.Changelog
-import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, Row}
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.types.{DataType, StringType, StructType, TimestampNTZType, TimestampType}
+
+import scala.collection.mutable
 
 /** Session-window MV maintenance (session TVF statements), extracted from
   * [[MaterializedView]] (round 13, verdict #7) — pure code motion like
@@ -38,21 +41,56 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
     * has a declared watermark. */
   private[engine] var sessionCascadeWm: Option[(String, Long)] = None
 
-  /** Session-window MV maintenance: stream the source's raw rows (append
-    * mode — stateless, so any live table or append-only MV face binds),
-    * union them into a carried state, and re-evaluate the session
-    * aggregation over that state each epoch; the visible snapshot diffs as
-    * a multiset (session bounds are unstable keys — a merge retracts the
-    * sessions it absorbed, surfacing as Delete + Insert pairs, which is
-    * exactly RisingWave's changelog for merged session windows).
-    *
-    * State note (W9): without a watermark ANY late row may merge two
-    * existing sessions, so full raw history is the honest state bound —
-    * the same always-correctable stance the engine takes for non-windowed
-    * streaming aggregates. With a watermark, sessions whose end precedes
-    * watermark - gap can be frozen out of the carried state (their rows
-    * can never gain a neighbor); that compaction is the 100 TB knob and
-    * composes with the RocksDB state store option. */
+  /** Session gap in micros. A gap spelling Spark's session_window accepts
+    * but intervalMillis rejects ('0.5 seconds', '1 week') must not abort
+    * mode admission: it reads as 0, which keeps the slice epoch off
+    * ([[sessionSliceOut]] requires a gap); the full re-sessionize never
+    * needs the value. */
+  private def sessionGapMicros(): Long = Dialect.sessionTvf(stmt)
+    .flatMap(g => scala.util.Try(Dialect.intervalMillis(g._3) * 1000L).toOption)
+    .getOrElse(0L)
+
+  /** The session grouping keys of the statement over raw columns
+    * `rawCols`: every non-window grouping expression must be a plain raw
+    * column (an expression key can't map frozen sessions back to raw rows —
+    * those statements keep the global chain-scan compaction and the full
+    * re-sessionize). Reads the statement over [[sessionSrcView]]. */
+  private def deriveSessionKeys(rawCols: Set[String]): Option[Seq[String]] =
+    spark.sql(sessionOuterSql).queryExecution.analyzed
+      .collectFirst { case a: Aggregate => a }
+      .flatMap { a =>
+        val cls = a.groupingExpressions.map {
+          case ar: AttributeReference if rawCols.contains(ar.name) => Some(Some(ar.name))
+          case e if e.toString.toLowerCase.replace("_", "")
+            .contains("sessionwindow") => Some(None)
+          case _ => None
+        }
+        if (cls.forall(_.nonEmpty)) Some(cls.flatten.flatten) else None
+      }
+
+  /** The parts of a durable session snapshot under `d`: (raw state,
+    * frozen sessions, cuts, face). None without a face. */
+  private def readSessionSnapshot(d: String):
+      Option[(Option[DataFrame], Option[DataFrame], Option[DataFrame], DataFrame)] = {
+    def part(p: String) =
+      if (new java.io.File(s"$d/$p").isDirectory)
+        Some(spark.read.parquet(s"$d/$p").localCheckpoint(true))
+      else None
+    part("data").map(snap => (part("inner"), part("frozen"), part("cuts"), snap))
+  }
+
+  private def installSessionSnapshot(inner: Option[DataFrame], froz: Option[DataFrame],
+      cuts: Option[DataFrame], snap: DataFrame): Unit = {
+    inner.foreach { i =>
+      innerState = Some(i)
+      i.createOrReplaceTempView(sessionSrcView)
+    }
+    frozen = froz
+    sessionCuts = cuts
+    snapshot = Some(snap)
+    snap.createOrReplaceTempView(viewName)
+  }
+
   /** Admission for the changelog-fold session path ([[sessionCascadeEpoch]]):
     * the statement's session TVF reads exactly one retraction-emitting live
     * table (PK/upsert or DML-mutated) and no upstream MVs. Append-only
@@ -68,13 +106,7 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
     try {
       val t = tbls.head
       sessionTsCol = tsCol.split('.').last
-      // gap spellings Spark's session_window accepts but intervalMillis
-      // rejects ('0.5 seconds', '1 week') must not abort mode admission —
-      // gapUs=0 just keeps the slice tier off (sessionSliceEligible
-      // requires gap > 0); the fold itself never needs the gap value
-      sessionGapUs = Dialect.sessionTvf(stmt)
-        .flatMap(g => scala.util.Try(Dialect.intervalMillis(g._3) * 1000L).toOption)
-        .getOrElse(0L)
+      sessionGapUs = sessionGapMicros()
       sessionOuterSql = ownerEngine.rewrite(Dialect.retargetSessionTvf(stmt, sessionSrcView))
       // pre-validate the retargeted statement against the (empty) table
       // schema before committing to the mode
@@ -83,21 +115,7 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
       spark.sql(sessionOuterSql).schema
       // per-key compaction keys are derived for symmetry, but compaction
       // never fires here (no streaming query → no watermark)
-      sessionKeys = {
-        val rawCols = t.schema.fieldNames.toSet
-        spark.sql(sessionOuterSql).queryExecution.analyzed
-          .collectFirst { case a: Aggregate => a }
-          .flatMap { a =>
-            val cls = a.groupingExpressions.map {
-              case ar: AttributeReference if rawCols.contains(ar.name) =>
-                Some(Some(ar.name))
-              case e if e.toString.toLowerCase.replace("_", "")
-                .contains("sessionwindow") => Some(None)
-              case _ => None
-            }
-            if (cls.forall(_.nonEmpty)) Some(cls.flatten.flatten) else None
-          }
-      }
+      sessionKeys = deriveSessionKeys(t.schema.fieldNames.toSet)
       sessionCuts = None
       frozen = None
       sessionCascadeWm = mvWatermarks.get(t.name).map { case (c, d) =>
@@ -117,35 +135,16 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
       val restored = validSnapshotMeta("sessioncascade").flatMap { case (d, offsets, _) =>
         try {
           if (!new java.io.File(s"$d/inner").isDirectory ||
-              !new java.io.File(s"$d/data").isDirectory ||
               !cascadeUpstreams.forall(u =>
                 offsets.get(u.viewName).exists(_ <= u.log.latestOffset)))
             None
-          else {
-            val froz =
-              if (new java.io.File(s"$d/frozen").isDirectory)
-                Some(spark.read.parquet(s"$d/frozen").localCheckpoint(true))
-              else None
-            val cuts =
-              if (new java.io.File(s"$d/cuts").isDirectory)
-                Some(spark.read.parquet(s"$d/cuts").localCheckpoint(true))
-              else None
-            Some((offsets,
-              spark.read.parquet(s"$d/inner").localCheckpoint(true),
-              froz, cuts,
-              spark.read.parquet(s"$d/data").localCheckpoint(true)))
-          }
+          else readSessionSnapshot(d).map(offsets -> _)
         } catch { case _: Throwable => None }
       }
       restored match {
-        case Some((offsets, inner, froz, cuts, snap)) =>
+        case Some((offsets, (inner, froz, cuts, snap))) =>
           offsets.foreach { case (v, o) => cascadeOffsets(v) = o }
-          innerState = Some(inner)
-          inner.createOrReplaceTempView(sessionSrcView)
-          frozen = froz
-          sessionCuts = cuts
-          snapshot = Some(snap)
-          snap.createOrReplaceTempView(viewName)
+          installSessionSnapshot(inner, froz, cuts, snap)
         case None => sessionCascadeEpoch() // initial backfill
       }
       true
@@ -160,39 +159,33 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
     }
   }
 
+  /** Session-window MV maintenance: stream the source's raw rows (append
+    * mode — stateless, so any live table or append-only MV face binds),
+    * union them into a carried state, and re-evaluate the session
+    * aggregation over that state each epoch; the visible snapshot diffs as
+    * a multiset (session bounds are unstable keys — a merge retracts the
+    * sessions it absorbed, surfacing as Delete + Insert pairs, which is
+    * exactly RisingWave's changelog for merged session windows).
+    *
+    * State note (W9): without a watermark ANY late row may merge two
+    * existing sessions, so full raw history is the honest state bound —
+    * the same always-correctable stance the engine takes for non-windowed
+    * streaming aggregates. With a watermark, sessions whose end precedes
+    * watermark - gap can be frozen out of the carried state (their rows
+    * can never gain a neighbor); that compaction is the 100 TB knob and
+    * composes with the RocksDB state store option. */
   private[engine] def tryStartSession(tbl: String, tsCol: String): Boolean = {
     try {
       sessionTsCol = tsCol.split('.').last // raw state carries bare columns
-      // same Try guard as tryStartSessionCascade: an unparsable gap keeps
-      // the slice tier off instead of demoting the whole mode
-      sessionGapUs = Dialect.sessionTvf(stmt)
-        .flatMap(t => scala.util.Try(Dialect.intervalMillis(t._3) * 1000L).toOption)
-        .getOrElse(0L)
+      sessionGapUs = sessionGapMicros()
       val innerStmt = s"SELECT * FROM $tbl"
       // durable reopen: see tryStartTopN — snapshot parts load BEFORE the
       // faces bind, so a partial/unreadable snapshot falls back to replay
       // instead of gating the faces past rows no restored state covers
       val restored = streamRestoreSeqs("session").flatMap { seqs =>
         ownerEngine.mvSnapshotDirFor(viewName).flatMap { d =>
-          try {
-            if (!new java.io.File(s"$d/data").isDirectory) None
-            else {
-              val inner =
-                if (new java.io.File(s"$d/inner").isDirectory)
-                  Some(spark.read.parquet(s"$d/inner").localCheckpoint(true))
-                else None
-              val froz =
-                if (new java.io.File(s"$d/frozen").isDirectory)
-                  Some(spark.read.parquet(s"$d/frozen").localCheckpoint(true))
-                else None
-              val cuts =
-                if (new java.io.File(s"$d/cuts").isDirectory)
-                  Some(spark.read.parquet(s"$d/cuts").localCheckpoint(true))
-                else None
-              val snap = spark.read.parquet(s"$d/data").localCheckpoint(true)
-              Some((seqs, inner, froz, cuts, snap))
-            }
-          } catch { case _: Throwable => None }
+          try readSessionSnapshot(d).map(seqs -> _)
+          catch { case _: Throwable => None }
         }
       }
       val sdf = ownerEngine.withStreamingViews(mvWatermarks, innerStmt, viewName,
@@ -213,35 +206,10 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
         spark.catalog.dropTempView(sessionSrcView)
         return false
       }
-      // derive the session grouping keys for per-key compaction: every
-      // non-window grouping expression must be a plain column of the raw
-      // state (an expression key can't map frozen sessions back to raw
-      // rows — those statements keep the global chain-scan compaction)
-      sessionKeys = {
-        val rawCols = sdf.columns.toSet
-        spark.sql(sessionOuterSql).queryExecution.analyzed
-          .collectFirst { case a: Aggregate => a }
-          .flatMap { a =>
-            val cls = a.groupingExpressions.map {
-              case ar: AttributeReference if rawCols.contains(ar.name) =>
-                Some(Some(ar.name))
-              case e if e.toString.toLowerCase.replace("_", "")
-                .contains("sessionwindow") => Some(None)
-              case _ => None
-            }
-            if (cls.forall(_.nonEmpty)) Some(cls.flatten.flatten) else None
-          }
-      }
+      sessionKeys = deriveSessionKeys(sdf.columns.toSet)
       sessionCuts = None
-      restored.foreach { case (_, inner, froz, cuts, snap) =>
-        inner.foreach { i =>
-          innerState = Some(i)
-          i.createOrReplaceTempView(sessionSrcView)
-        }
-        frozen = froz
-        sessionCuts = cuts
-        snapshot = Some(snap)
-        snap.createOrReplaceTempView(viewName)
+      restored.foreach { case (_, (inner, froz, cuts, snap)) =>
+        installSessionSnapshot(inner, froz, cuts, snap)
       }
 
       isAggMode = true
@@ -266,31 +234,25 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
     }
   }
 
-  /** Session micro-batch: append the delta to the carried raw state,
-    * re-sessionize, union with the frozen sessions, diff the visible
-    * snapshot as a multiset, then compact. Under EMIT ON WINDOW CLOSE the
-    * visible snapshot is the frozen set ONLY (compaction runs first):
+  /** Session micro-batch. In the slice regime the delta lands on the
+    * driver once and [[sessionSliceEpoch]] takes the epoch. Otherwise (or
+    * on its refusal) the delta joins the carried raw state, the whole
+    * state re-sessionizes, the visible snapshot (frozen ∪ live sessions)
+    * diffs as a multiset, then compaction runs. Under EMIT ON WINDOW CLOSE
+    * the visible snapshot is the frozen set ONLY (compaction runs first):
     * frozen only grows, so the multiset diff degenerates to exactly one
     * Insert per closed session — final-only emission. */
   private[engine] def handleSessionDelta(delta: DataFrame): Unit = synchronized {
-    // single-collect epoch (round 16): while the affected-slice tier is
-    // live — which only happens in the no-watermark/no-cuts regime, where
-    // applyCuts is the identity — the epoch needs the delta ONLY as
-    // driver rows, so collect it once and skip the localCheckpoint, the
-    // two emptiness probes and the separate limit-collect: 4 untagged
-    // jobs per epoch at the bench, 83% of the session entry's job count
-    // (ShuffleProfile r16 attribution).
-    if (sessionRawLocal.nonEmpty && sessionCuts.isEmpty) {
-      val deltaRows = timed("delta-collect")(
-        delta.limit(sessionRawLocalMax + 1).collect())
-      if (deltaRows.isEmpty) return
-      if (deltaRows.length <= sessionRawLocalMax &&
-          sessionSliceEpoch(deltaRows.toIndexedSeq)) return
-      // slice refused (oversized delta, NULL event time, unorderable
-      // value): drop the tier and run THIS epoch through the distributed
-      // body below — the limit may have truncated the oversized delta, so
-      // the body re-materializes from the source batch.
-      sessionRawLocal = None
+    // single-collect epoch (round 16): the slice epoch needs the delta ONLY
+    // as driver rows, so it skips the localCheckpoint, the emptiness probes
+    // and the late-row gate below (no cuts in the regime: the identity)
+    if (sessionSliceRegime) {
+      val rows = timed("delta-collect")(delta.limit(cascadeLocalMax + 1).collect())
+      if (rows.isEmpty) return
+      // refusal, a delta past cascadeLocalMax: the limit truncated it, so
+      // the body below re-materializes it from the source batch
+      if (rows.length <= cascadeLocalMax &&
+          sessionSliceEpoch(signedRows(rows, Nil), delta.schema)) return
     }
     val clone = delta.localCheckpoint(true)
     val d0 = spark.createDataFrame(clone.rdd, clone.schema)
@@ -302,88 +264,43 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
     // drop it, mirroring the reference's late-row semantics
     val d = applyCuts(d0)
     if (d.isEmpty) return
-    // affected-slice tier: land the delta driver-side and run the epoch
-    // restricted to the touched sessions' raw rows
-    if (sessionRawLocal.nonEmpty) {
-      val deltaRows = d.limit(sessionRawLocalMax + 1).collect()
-      if (deltaRows.length <= sessionRawLocalMax &&
-          sessionSliceEpoch(deltaRows.toIndexedSeq)) return
-      // (cuts-active tier refusal) — the buffer no longer reflects the
-      // post-epoch state, so drop it; the full path re-seeds when the
-      // state still fits. innerState is the tier's own (pre-delta)
-      // LocalRelation, so the union stays correct.
-      sessionRawLocal = None
-    }
     innerState = Some(innerState.map(_.union(d)).getOrElse(d).localCheckpoint(true))
     sessionRecomputeAndEmit()
   }
 
-  /** Shared tail of a session epoch: re-sessionize the carried raw state,
-    * derive the visible snapshot (frozen ∪ live sessions; frozen-only
-    * under EMIT ON WINDOW CLOSE), emit the multiset diff, and compact. */
+  /** Shared tail of a full session epoch: re-sessionize the carried raw
+    * state, derive the visible snapshot (frozen ∪ live sessions;
+    * frozen-only under EMIT ON WINDOW CLOSE), emit the multiset diff, and
+    * compact. */
   private[engine] def sessionRecomputeAndEmit(): Unit = {
     innerState.get.createOrReplaceTempView(sessionSrcView)
-    // Driver-resident epoch tail (round 9, same discipline as
-    // [[publishTopNVisible]]): with no compaction state in play (no
-    // watermark → frozen/cuts empty) the visible snapshot IS the
-    // re-sessionized output, and while it stays under
-    // [[sessionLocalDiffMax]] rows the epoch's changelog delta is the
-    // driver-side multiset diff — the distributed diff spent several
-    // Spark jobs (two groupBys, a full-outer join, explode, sort) on a
-    // few thousand rows every epoch. Once the output outgrows the bound
-    // the tail disables itself permanently (session sets only grow
-    // without compaction — [[sessionLocalDisabled]] is monotone), and
-    // compaction-active statements never enter. The heavy lifting — the
-    // re-sessionize over the carried raw state — stays distributed.
-    // only watermark-free statements qualify: with a declared watermark
-    // compaction may begin at ANY epoch (frozen/cuts are empty until the
-    // first session closes), and skipping compactSessions would mean
-    // nothing ever freezes
-    if (!emitOnClose && mvWatermarks.isEmpty && sessionCascadeWm.isEmpty &&
-        frozen.isEmpty && sessionCuts.isEmpty && !sessionLocalDisabled) {
+    statementEvals += 1
+    // Driver-side diff (round 9): with no compaction state in play the
+    // visible snapshot IS the re-sessionized output. While the previous
+    // face is a LocalRelation (the face overlay's no-base frame, or this
+    // path's own) and the new output fits cascadeLocalMax rows, the diff
+    // runs on the driver, as Changelog.diffPreferLocal does for keyed
+    // diffs — the distributed diff spends several jobs (two groupBys, a
+    // full-outer join, explode, sort) on a few thousand rows. A face past
+    // the bound is no LocalRelation, so no epoch re-collects an output
+    // already known to be over it. The re-sessionize itself stays on
+    // Spark.
+    if (sessionCompactionOff && snapshot.forall(isLocalRelation)) {
       val cdf = spark.sql(sessionOuterSql)
       val rows = timed("session-collect")(
-        cdf.limit(sessionLocalDiffMax + 1).collect().toIndexedSeq)
-      if (rows.length <= sessionLocalDiffMax) {
+        cdf.limit(cascadeLocalMax + 1).collect().toIndexedSeq)
+      if (rows.length <= cascadeLocalMax) {
         val schema = cdf.schema
-        val localOps =
-          if (snapshot.nonEmpty && sessionVisibleRows.isEmpty) None
-          else Changelog.localMultisetDiff(
-            if (snapshot.isEmpty) None else sessionVisibleRows.map(_.toSeq),
-            rows, schema)
         val nextVisible = localDf(rows, schema)
-        localOps match {
+        Changelog.localMultisetDiff(snapshot.map(_.collect().toSeq), rows, schema) match {
           case Some(ops) =>
-            if (ops.nonEmpty) timed("emitOps")(emitOps(localDf(ops.toIndexedSeq,
-              schema.add("op", org.apache.spark.sql.types.StringType))))
+            if (ops.nonEmpty) emitOps(localDf(ops.toIndexedSeq, schema.add("op", StringType)))
           case None => emitOps(Changelog.multisetDiff(snapshot, nextVisible))
         }
         snapshot = Some(nextVisible)
-        sessionVisibleRows = Some(rows)
         nextVisible.createOrReplaceTempView(viewName)
-        // seed the affected-slice tier (round 14): raw rows driver-side,
-        // so subsequent epochs re-sessionize only the touched sessions'
-        // slice. Both session paths route their folds through the tier —
-        // the streaming path appends, the cascade path appends AND
-        // removes (its keyed changelog retractions). The raw schema must
-        // be value-hashable throughout: removals and the slice scan key
-        // whole raw rows.
-        if ((streamingMode || cascadeMode) && !sessionSliceDisabled &&
-            sessionRawLocal.isEmpty && sessionSliceEligible &&
-            innerState.get.schema.fields.forall(f =>
-              Changelog.localOrdering(f.dataType).nonEmpty)) {
-          val raw = innerState.get.limit(sessionRawLocalMax + 1).collect()
-          if (raw.length <= sessionRawLocalMax) {
-            sessionRawSchema = Some(innerState.get.schema)
-            sessionOutSchema = Some(schema)
-            sessionRawLocal =
-              Some(scala.collection.mutable.ArrayBuffer(raw.toIndexedSeq: _*))
-          } else sessionSliceDisabled = true
-        }
         return
       }
-      sessionLocalDisabled = true
-      sessionVisibleRows = None
     }
     val computed = spark.sql(sessionOuterSql).localCheckpoint(true)
     val wide = snapshot.isEmpty // first epoch = whole-history session set
@@ -402,55 +319,84 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
     snapshot.get.createOrReplaceTempView(viewName)
   }
 
-  /** Previous epoch's visible session rows, driver-resident for the local
-    * diff tail of [[sessionRecomputeAndEmit]]. None exactly when the
-    * snapshot came from elsewhere (durable restore, fallback epoch) —
-    * which forces one distributed diff before the tail takes over. */
-  private[engine] var sessionVisibleRows: Option[IndexedSeq[Row]] = None
-  /** Latched once the session output exceeds [[sessionLocalDiffMax]] —
-    * session sets only grow while compaction is off, so re-probing every
-    * epoch would pay the limit-collect for nothing. */
-  private[engine] var sessionLocalDisabled = false
-  // private[graft]: specs shrink it to force the distributed fallback.
-  // 200k (round 14, was 20k): aligned with the other driver tiers'
-  // bounds — sparse data makes most rows their own session, and a visible
-  // set in the tens of thousands is exactly where the affected-slice tier
-  // below pays off most (the full re-sessionize it replaces is O(visible))
-  private[graft] var sessionLocalDiffMax = 200000
+  private def isLocalRelation(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
 
-  // ---- affected-slice session tier (round 14) -------------------------
+  // ---- the slice epoch -------------------------------------------------
   //
-  // The full-recompute epoch re-sessionizes the WHOLE carried raw state —
-  // an O(total rows) session_window exchange per epoch (12.1 MB/epoch at
-  // the sf0.1 bench, the largest in the streaming set, 100% of the
-  // entry's shuffle per ShuffleProfile). But appended rows can only merge
-  // sessions FORWARD: a session Z with end < min(delta ts) − gap is
-  // untouchable (any session affected by a delta row at t has end ≥ t,
-  // and all such sessions sit strictly after Z, so the slice boundary
-  // S = min start of affected sessions satisfies Z's rows < S). So each
-  // epoch re-sessionizes ONLY raw rows at/after S per touched key, diffs
-  // the affected outputs driver-side, and keeps every untouched session
-  // row verbatim — delta-proportional work, zero full-state exchange.
+  // The full epoch re-sessionizes the WHOLE carried raw state: an
+  // O(history) session_window exchange per epoch. But a delta row at t
+  // can only touch a session Z of its key whose end ≥ t − gap: with
+  // C = min delta ts − gap per touched key, a session ending before C is
+  // untouchable (any session a delta row at t affects has end ≥ t, and
+  // all such sessions sit strictly after Z). Sessions of one key are
+  // disjoint and ordered, so the affected ones are a suffix: with
+  // S = the smallest start among them, the raw rows at/after
+  // min(S, min delta ts) are exactly the affected sessions' rows, every
+  // delta row included. Removals (the cascade's retractions) are covered
+  // by the same proof — a removed row's own session has end ≥ its ts —
+  // including session SPLITS, whose fragments stay inside the slice. So
+  // each epoch re-sessionizes ONLY that slice, diffs the old and new
+  // affected sessions driver-side, and keeps every other session row
+  // verbatim: delta-proportional work, no full-state exchange.
   //
-  // Engages only where the local diff tail already runs (streaming path,
-  // no watermark/EOWC/frozen/cuts) AND the statement's shape lets the
-  // carried output name its sessions: plain-column grouping keys and the
-  // session bounds (window_start/window_end) present in the output by
-  // name. Bounds/latch discipline mirrors the other driver tiers; any
-  // in-epoch refusal (NULL event time, oversized delta or slice) falls
-  // back to the distributed spelling for that epoch and re-seeds.
-  private[engine] var sessionRawLocal:
-    Option[scala.collection.mutable.ArrayBuffer[Row]] = None
-  private var sessionRawSchema: Option[org.apache.spark.sql.types.StructType] = None
-  private var sessionOutSchema: Option[org.apache.spark.sql.types.StructType] = None
-  private var sessionSliceDisabled = false
-  private[graft] var sessionRawLocalMax = 200000
-  private[engine] var sessionGapUs = 0L
-  /** True while the raw session state is driver-resident (probe). */
-  private[graft] def sessionSliceActive: Boolean = sessionRawLocal.nonEmpty
+  // The raw rows and the face are each a CarriedOverlay keyed by the
+  // whole row (row → multiplicity). While a state fits cascadeLocalMax
+  // rows its overlay holds it whole with no base, the reads below scan
+  // the overlay on the driver, and the face is a LocalRelation (reads run
+  // no job). Past the bound each read is one range probe of the flat base
+  // plus the overlay's rows, and the frame is `base ∪ overlay` at
+  // constant depth. A frame the overlays did not return (the backfill, a
+  // restore, a full epoch) is seeded whole while it fits, else it becomes
+  // the base.
+  //
+  // The regime: no compaction state in play (no watermark, EOWC, frozen
+  // sessions or cuts) and a statement whose output names its sessions
+  // (plain-column keys, window_start/window_end by name). Everything else
+  // — and every refusal named in the epoch — takes the full epoch.
+
+  private var sessionGapUs = 0L
+
+  private def sessionOverlay = new CarriedOverlay[Long](spark,
+    compactEvery, cascadeLocalMax,
+    _.flatMap { case (r, c) => Iterator.fill(c.toInt)(r) }.toIndexedSeq,
+    df => timed("state-merge")(df.localCheckpoint(true)))
+  /** The carried raw rows ([[innerState]]) and the face ([[snapshot]]) of
+    * the slice epoch. */
+  private[engine] lazy val sessionRaw = sessionOverlay
+  private[engine] lazy val sessionFace = sessionOverlay
+  /** True while the whole raw session state is the overlay's, with no
+    * base (probe). */
+  private[graft] def sessionSliceActive: Boolean = innerState.exists(sessionRaw.holdsAll)
+
+  private def sessionCompactionOff: Boolean = !emitOnClose && mvWatermarks.isEmpty &&
+    sessionCascadeWm.isEmpty && frozen.isEmpty && sessionCuts.isEmpty
+  /** Whether an epoch may take [[sessionSliceEpoch]]. */
+  private def sessionSliceRegime: Boolean = sessionCompactionOff && sessionSliceOut.nonEmpty
+
+  /** The statement's output schema when its shape admits the slice epoch,
+    * decided once per MV: plain-column session keys and the session bounds
+    * in the output by name, a parsed gap, and output types with a local
+    * ordering and a value hash (the affected split, the overlay and the
+    * local diff read them on the driver). */
+  private lazy val sessionSliceOut: Option[StructType] = try {
+    sessionKeys.flatMap { keys =>
+      val outS = spark.sql(sessionOuterSql).schema
+      val names = outS.fieldNames.toSet
+      Some(outS).filter(_ => sessionGapUs > 0 &&
+        names("window_start") && names("window_end") && keys.forall(names) &&
+        temporal(outS("window_start").dataType) && temporal(outS("window_end").dataType) &&
+        sliceTypesOk(outS))
+    }
+  } catch { case _: Throwable => None }
+
+  private def temporal(dt: DataType): Boolean = dt == TimestampType || dt == TimestampNTZType
+
+  private def sliceTypesOk(s: StructType): Boolean = CarriedOverlay.valueHashable(s) &&
+    s.fields.forall(f => Changelog.localOrdering(f.dataType).nonEmpty)
 
   /** Exact event-time micros of a driver-side temporal value; None for
-    * NULL or a non-temporal type (callers refuse the slice epoch). */
+    * NULL or a non-temporal type. */
   private def tsMicros(v: Any): Option[Long] = v match {
     case t: java.sql.Timestamp =>
       val i = t.toInstant; Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
@@ -462,146 +408,175 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
     case _ => None
   }
 
-  /** Shape admission for the slice tier, decided once per MV. */
-  private lazy val sessionSliceEligible: Boolean = try {
-    import graft.streaming.Changelog
-    sessionKeys.exists { keys =>
-      val outS = spark.sql(sessionOuterSql).schema
-      val names = outS.fieldNames.toSet
-      sessionGapUs > 0 &&
-        names.contains("window_start") && names.contains("window_end") &&
-        keys.forall(names.contains) &&
-        // the affected/untouched split and the local diff need orderable,
-        // value-hashable driver types throughout the output
-        outS.fields.forall(f => Changelog.localOrdering(f.dataType).nonEmpty)
-    }
-  } catch { case _: Throwable => false }
+  /** The driver value of `us` micros in a column of type `dt`. */
+  private def fromMicros(us: Long, dt: DataType): Any = {
+    val i = java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)
+    if (dt == TimestampNTZType) java.time.LocalDateTime.ofInstant(i, java.time.ZoneOffset.UTC)
+    else java.sql.Timestamp.from(i)
+  }
 
-  /** One affected-slice epoch over an appended delta (`addRows`) and —
-    * the session CASCADE's retraction fold, round 14 — a removed multiset
-    * (`delRows`; a deleted row's own session has end ≥ its ts, so the
-    * same affected-region proof covers removals, including session
-    * SPLITS, whose fragments stay inside the slice). Returns false — with
-    * NO side effects — when the epoch cannot run restricted (NULL event
-    * time, an unorderable value, a removal naming a row the carried state
-    * does not hold, the recomputed slice outgrowing
-    * [[sessionLocalDiffMax]]); the caller then takes the distributed
-    * spelling for this epoch. */
-  private def sessionSliceEpoch(addRows: IndexedSeq[Row],
-      delRows: IndexedSeq[Row] = IndexedSeq.empty): Boolean = {
-    import graft.streaming.Changelog
-    val buf = sessionRawLocal.get
-    val rawSchema = sessionRawSchema.get
-    val outS = sessionOutSchema.get
-    val prevVis = sessionVisibleRows.getOrElse(return false)
-    if (snapshot.isEmpty) return false
+  /** Net multiplicity per distinct row of added and removed rows: a row
+    * inserted AND deleted within the consumed window is in neither state. */
+  private def signedRows(adds: Iterable[Row], dels: Iterable[Row]): mutable.LinkedHashMap[Row, Long] = {
+    val net = mutable.LinkedHashMap[Row, Long]()
+    adds.foreach(r => net.update(r, net.getOrElse(r, 0L) + 1L))
+    dels.foreach(r => net.update(r, net.getOrElse(r, 0L) - 1L))
+    net.filterInPlace((_, c) => c != 0L)
+  }
+
+  private def rowCounts(rows: Iterable[Row]): mutable.LinkedHashMap[Row, Long] =
+    signedRows(rows, Nil)
+
+  /** Open both overlays' epoch over the raw state and the face; a frame
+    * they did not return seeds the no-base tier while it fits. */
+  private def beginSessionOverlays(rawSchema: StructType, outS: StructType): Boolean = {
+    import org.apache.spark.sql.functions.col
+    def begin(o: CarriedOverlay[Long], state: Option[DataFrame], s: StructType) =
+      o.begin(state, s,
+        StructType(s.fields.map(f => f.copy(name = s"__k_${f.name}", nullable = true))),
+        s.fieldNames.map(n => col(n) <=> col(s"__k_$n")).reduce(_ && _),
+        st => {
+          // one single-task job for a distributed frame, none for a local one
+          val rows = (if (isLocalRelation(st)) st else st.coalesce(1))
+            .limit(cascadeLocalMax + 1).collect()
+          if (rows.length > cascadeLocalMax) None else Some(rowCounts(rows))
+        })
+    begin(sessionRaw, innerState, rawSchema) && begin(sessionFace, snapshot, outS)
+  }
+
+  /** The rows of `o`'s state (of schema `s`) whose session key (`key`,
+    * columns `keys`) has a bound in `bounds` and whose temporal column
+    * `tsName` is at or past it, with their multiplicities: the overlay's
+    * rows, plus one range probe of its base. Also notes, through
+    * [[CarriedOverlay.current]], which `extra` rows (in range by
+    * construction) the base lacks. None = refused (a probe past
+    * cascadeLocalMax rows). */
+  private def readRange(o: CarriedOverlay[Long], s: StructType, key: Row => Row,
+      tsName: String, bounds: collection.Map[Row, Long], keys: Seq[String],
+      extra: Iterable[Row]): Option[mutable.LinkedHashMap[Row, Long]] = {
+    import org.apache.spark.sql.functions.col
+    val tsIdx = s.fieldIndex(tsName)
+    val tsType = s(tsIdx).dataType
+    def inRange(r: Row): Boolean =
+      bounds.get(key(r)).exists(b => tsMicros(r.get(tsIdx)).exists(_ >= b))
+    val boundSchema = StructType(keys.map(k => s(k).copy(name = s"__k_$k", nullable = true)))
+      .add("__b", tsType)
+    val probed = o.probeRange(
+      bounds.iterator.map { case (k, b) => Row.fromSeq(k.toSeq :+ fromMicros(b, tsType)) }
+        .toIndexedSeq,
+      boundSchema,
+      (keys.map(k => col(k) <=> col(s"__k_$k")) :+ (col(tsName) >= col("__b"))).reduce(_ && _),
+      inRange) match {
+      case None => mutable.LinkedHashMap.empty[Row, Long]
+      case Some(p) =>
+        // one single-task job: a limit over the base's partitions would
+        // take several rounds of partitions
+        val rows = timed("state-touched")(p.coalesce(1).limit(cascadeLocalMax + 1).collect())
+        if (rows.length > cascadeLocalMax) return None
+        rowCounts(rows)
+    }
+    val out = mutable.LinkedHashMap[Row, Long]()
+    (o.entries.collect { case (r, _) if inRange(r) => r } ++ probed.keysIterator ++ extra)
+      .foreach { r =>
+        if (!out.contains(r)) o.current(r, probed).foreach(c => out.update(r, c))
+      }
+    Some(out)
+  }
+
+  /** One slice epoch (see the section note) over a delta's net raw rows
+    * (`delta`: row → signed multiplicity; the streaming path only adds),
+    * in either tier of the two overlays. Computes everything up to the
+    * commit without touching the MV, commits both overlays, and only then
+    * emits. Returns false — with nothing emitted and the MV untouched —
+    * when the epoch cannot run restricted; the caller takes the full
+    * epoch. */
+  private def sessionSliceEpoch(delta: collection.Map[Row, Long],
+      rawSchema: StructType): Boolean = {
+    val outS = sessionSliceOut.getOrElse(return false)
+    // refusal, an unorderable or unhashable raw value (the raw rows key
+    // the overlay and order the slice) or a non-timestamp event time
+    if (!sliceTypesOk(rawSchema) || !temporal(rawSchema(sessionTsCol).dataType)) return false
     val keys = sessionKeys.get
-    val tsIdx = rawSchema.fieldIndex(sessionTsCol)
     val rawKeyIdx = keys.map(rawSchema.fieldIndex)
     val outKeyIdx = keys.map(outS.fieldIndex)
+    def rawKey(r: Row): Row = Row.fromSeq(rawKeyIdx.map(r.get))
+    def outKey(r: Row): Row = Row.fromSeq(outKeyIdx.map(r.get))
+    val tsIdx = rawSchema.fieldIndex(sessionTsCol)
     val wsIdx = outS.fieldIndex("window_start")
-    val weIdx = outS.fieldIndex("window_end")
-    // per touched key: the earliest delta event time (adds AND removals)
-    val minTs = scala.collection.mutable.HashMap[List[Any], Long]()
-    (addRows.iterator ++ delRows.iterator).foreach { r =>
+    // 1-2. per touched key, the earliest delta event time; refusal, a NULL
+    // (or non-temporal) event time in the delta
+    val minTs = mutable.LinkedHashMap[Row, Long]()
+    delta.keysIterator.foreach { r =>
       val m = tsMicros(r.get(tsIdx)).getOrElse(return false)
-      val k = rawKeyIdx.map(r.get).toList
+      val k = rawKey(r)
       minTs.update(k, math.min(m, minTs.getOrElse(k, Long.MaxValue)))
     }
-    // apply removals to a post-removal view of the raw state; a removal
-    // the state cannot satisfy is an inconsistency — refuse, recompute
-    val postBuf: scala.collection.mutable.ArrayBuffer[Row] =
-      if (delRows.isEmpty) buf
-      else {
-        val rm = scala.collection.mutable.HashMap[Row, Int]()
-        delRows.foreach(r => rm.update(r, rm.getOrElse(r, 0) + 1))
-        val nb = new scala.collection.mutable.ArrayBuffer[Row](buf.length)
-        buf.foreach { r =>
-          rm.get(r) match {
-            case Some(c) => if (c == 1) rm.remove(r) else rm.update(r, c - 1)
-            case None => nb += r
-          }
+    // everything up to the commit is refusable: a failed probe or
+    // re-sessionize takes the full epoch, whose frames re-base both
+    // overlays
+    val (raw, face, ops) = try {
+      if (!beginSessionOverlays(rawSchema, outS)) return false
+      // 3. the old affected sessions: face rows of the touched keys with
+      // window_end ≥ C (inclusive: sound over-touching); S per key is their
+      // smallest start
+      val cut = minTs.map { case (k, m) => k -> (m - sessionGapUs) }
+      val oldCounts = readRange(sessionFace, outS, outKey, "window_end", cut, keys, Nil)
+        .getOrElse(return false)
+      val sliceStart = mutable.HashMap[Row, Long]()
+      oldCounts.keysIterator.foreach { r =>
+        val ws = tsMicros(r.get(wsIdx)).getOrElse(return false)
+        val k = outKey(r)
+        sliceStart.update(k, math.min(ws, sliceStart.getOrElse(k, Long.MaxValue)))
+      }
+      // 4. the raw slice: touched keys' rows at/after min(S, min delta ts);
+      // NULL event times sit in no session and so in no slice
+      val lo = minTs.map { case (k, m) => k -> math.min(m, sliceStart.getOrElse(k, m)) }
+      val slice = readRange(sessionRaw, rawSchema, rawKey, sessionTsCol, lo, keys,
+        delta.keys).getOrElse(return false)
+      val rawChanges = delta.iterator.map { case (r, d) =>
+        val c = slice.getOrElse(r, 0L) + d
+        // refusal, a removal the carried state does not hold
+        if (c < 0L) return false
+        slice.update(r, c)
+        r -> Some(c).filter(_ > 0L)
+      }.toIndexedSeq
+      val sliceRows = slice.iterator.flatMap { case (r, c) => Iterator.fill(c.toInt)(r) }
+        .toIndexedSeq
+      // refusal, a slice past cascadeLocalMax
+      if (sliceRows.length > cascadeLocalMax) return false
+      // 5. re-sessionize ONLY the slice: the statement over a LocalRelation
+      // pinned to ONE partition (round 15) — SinglePartition satisfies the
+      // session aggregation's required distribution, so the slice re-run
+      // plans with zero exchanges and the bounded collect is one
+      // single-task job
+      localDf(sliceRows, rawSchema).coalesce(1).createOrReplaceTempView(sessionSrcView)
+      val newAffected = timed("session-slice")(
+        spark.sql(sessionOuterSql).limit(cascadeLocalMax + 1).collect()).toIndexedSeq
+      if (newAffected.length > cascadeLocalMax) return false
+      // 6. untouched session rows are identical on both sides of the full
+      // diff and cancel; diffing the affected subsets emits the same ops in
+      // the same deterministic order
+      val oldAffected = oldCounts.iterator.flatMap { case (r, c) => Iterator.fill(c.toInt)(r) }
+        .toIndexedSeq
+      val ops = Changelog.localMultisetDiff(Some(oldAffected), newAffected, outS)
+        .getOrElse(return false)
+      val newCounts = rowCounts(newAffected)
+      val weIdx = outS.fieldIndex("window_end")
+      val faceChanges = oldCounts.keysIterator.map(r => r -> newCounts.get(r)).toIndexedSeq ++
+        newCounts.iterator.filterNot(e => oldCounts.contains(e._1)).map { case (r, c) =>
+          // a new session ends past its key's C (it holds a delta row, or
+          // the rows of an affected session); the face read covered it
+          if (!cut.get(outKey(r)).exists(b => tsMicros(r.get(weIdx)).exists(_ >= b)))
+            return false
+          r -> Some(sessionFace.current(r, Map.empty).getOrElse(0L) + c)
         }
-        if (rm.nonEmpty) return false
-        nb
-      }
-    // split the carried visible rows: a session with end ≥ C = minTs − gap
-    // may merge with the delta (inclusive compare = sound over-touching);
-    // everything else is untouchable this epoch
-    val untouched = scala.collection.mutable.ArrayBuffer[Row]()
-    val oldAffected = scala.collection.mutable.ArrayBuffer[Row]()
-    val sliceStart = scala.collection.mutable.HashMap[List[Any], Long]()
-    prevVis.foreach { r =>
-      val k = outKeyIdx.map(r.get).toList
-      minTs.get(k) match {
-        case Some(mt) =>
-          val we = tsMicros(r.get(weIdx)).getOrElse(return false)
-          if (we >= mt - sessionGapUs) {
-            oldAffected += r
-            val ws = tsMicros(r.get(wsIdx)).getOrElse(return false)
-            sliceStart.update(k, math.min(ws, sliceStart.getOrElse(k, Long.MaxValue)))
-          } else untouched += r
-        case None => untouched += r
-      }
-    }
-    // raw slice: touched keys' rows at/after the earliest affected
-    // session's start (no affected session → no raw row can sit past C,
-    // see the tier note — the slice is the delta alone)
-    val slice = scala.collection.mutable.ArrayBuffer[Row]()
-    var sliceOk = true
-    postBuf.foreach { r =>
-      val k = rawKeyIdx.map(r.get).toList
-      sliceStart.get(k).foreach { s =>
-        tsMicros(r.get(tsIdx)) match {
-          case Some(m) => if (m >= s) slice += r
-          case None => sliceOk = false
-        }
-      }
-    }
-    if (!sliceOk) return false
-    // re-sessionize ONLY the slice: the statement over a LocalRelation
-    // pinned to ONE partition (round 15) — SinglePartition satisfies the
-    // session aggregation's required distribution, so the slice re-run
-    // plans with zero exchanges (the slice∪delta co-location shuffle was
-    // 88% of s_mv_session_maintain's bytes) and the bounded collect is
-    // one single-task job
-    val newAffected = try {
-      localDf((slice ++ addRows).toIndexedSeq, rawSchema).coalesce(1)
-        .createOrReplaceTempView(sessionSrcView)
-      val rows = timed("session-slice")(
-        spark.sql(sessionOuterSql).limit(sessionLocalDiffMax + 1).collect())
-      if (rows.length > sessionLocalDiffMax) return false
-      rows.toIndexedSeq
+      // 7. commit both overlays, then emit
+      (sessionRaw.carry(rawChanges), sessionFace.carry(faceChanges), ops)
     } catch { case scala.util.control.NonFatal(_) => return false }
-    // untouched rows are identical on both sides of the full diff and
-    // cancel; diffing the affected subsets emits the same ops in the same
-    // deterministic order
-    val ops = Changelog.localMultisetDiff(
-      Some(oldAffected.toSeq), newAffected, outS).getOrElse(return false)
-    // ---- commit ----
-    if (ops.nonEmpty) timed("emitOps")(emitOps(localDf(ops.toIndexedSeq,
-      outS.add("op", org.apache.spark.sql.types.StringType))))
-    val committed = postBuf
-    committed ++= addRows
-    if (!(committed eq buf)) sessionRawLocal = Some(committed)
-    val nextVisible = (untouched ++ newAffected).toIndexedSeq
-    sessionVisibleRows = Some(nextVisible)
-    val nv = localDf(nextVisible, outS)
-    snapshot = Some(nv)
-    nv.createOrReplaceTempView(viewName)
-    innerState = Some(localDf(committed.toIndexedSeq, rawSchema))
-    // bounds: a grown raw state or visible set hands off to the
-    // distributed tiers for good (monotone, like every driver tier)
-    if (committed.length > sessionRawLocalMax) {
-      sessionRawLocal = None
-      sessionSliceDisabled = true
-    }
-    if (nextVisible.length > sessionLocalDiffMax) {
-      sessionRawLocal = None
-      sessionSliceDisabled = true
-      sessionLocalDisabled = true
-      sessionVisibleRows = None
-    }
+    if (ops.nonEmpty) emitOps(localDf(ops.toIndexedSeq, outS.add("op", StringType)))
+    innerState = Some(raw)
+    snapshot = Some(face)
+    face.createOrReplaceTempView(viewName)
     true
   }
 
@@ -634,52 +609,12 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
       if (latest <= after) return
       val ops = u.log.dfAfter(after)
       cascadeOffsets(u.viewName) = latest
-      // affected-slice tier (round 14): land the delta ops driver-side,
-      // net the window per distinct row, and fold adds AND removals by
-      // the restricted epoch — no full-state exceptAll/union, no
-      // full-state re-sessionize
-      if (sessionRawLocal.nonEmpty && sessionCuts.isEmpty && frozen.isEmpty &&
-          sessionCascadeWm.isEmpty) {
-        val payload = ops.drop("rw_timestamp")
-        // NonFatal guard: offsets are already advanced above, so a throw
-        // escaping here would lose the epoch's delta for good — a refusal
-        // must instead fall through to the distributed fold below (the
-        // same failure semantics as sessionSliceEpoch's own try)
-        val handled = try {
-        val collected = payload.limit(sessionRawLocalMax + 1).collect()
-        collected.length <= sessionRawLocalMax && {
-          val opIdx = payload.schema.fieldIndex("op")
-          val rawSchema = sessionRawSchema.get
-          val colIdx = rawSchema.fieldNames.map(payload.schema.fieldIndex(_))
-          def strip(r: Row) = Row.fromSeq(colIdx.toIndexedSeq.map(r.get))
-          val adds = scala.collection.mutable.ArrayBuffer[Row]()
-          val dels = scala.collection.mutable.ArrayBuffer[Row]()
-          collected.foreach { r =>
-            r.getString(opIdx) match {
-              case Changelog.OpInsert | Changelog.OpUpdateInsert => adds += strip(r)
-              case _ => dels += strip(r)
-            }
-          }
-          // net per distinct row: a row inserted AND deleted within the
-          // consumed window is not in the pre-window state — a phantom on
-          // both sides, cancel it
-          val cnt = scala.collection.mutable.HashMap[Row, Int]()
-          adds.foreach(r => cnt.update(r, cnt.getOrElse(r, 0) + 1))
-          dels.foreach(r => cnt.update(r, cnt.getOrElse(r, 0) - 1))
-          val addsNet = scala.collection.mutable.ArrayBuffer[Row]()
-          val delsNet = scala.collection.mutable.ArrayBuffer[Row]()
-          cnt.foreach { case (r, c) =>
-            if (c > 0) (1 to c).foreach(_ => addsNet += r)
-            else if (c < 0) (1 to -c).foreach(_ => delsNet += r)
-          }
-          sessionSliceEpoch(addsNet.toIndexedSeq, delsNet.toIndexedSeq)
-        }
-        } catch { case scala.util.control.NonFatal(_) => false }
-        if (handled) return
-        // refused: this epoch folds distributed below; drop the (now
-        // stale-prone) buffer — the full path re-seeds when it still fits
-        sessionRawLocal = None
-      }
+      // NonFatal guard: offsets are already advanced above, so a throw
+      // escaping here would lose the epoch's delta for good — a refusal
+      // must instead fall through to the full fold below
+      if (sessionSliceRegime &&
+          (try sessionSliceFold(ops) catch { case scala.util.control.NonFatal(_) => false }))
+        return
       val adds = applyCuts(ops.filter(col("op").isin(
         Changelog.OpInsert, Changelog.OpUpdateInsert)).drop("op", "rw_timestamp"))
       val dels = applyCuts(ops.filter(col("op").isin(
@@ -696,6 +631,24 @@ private[engine] trait SessionMvSupport { self: MaterializedView =>
       sessionRecomputeAndEmit()
     }
   }
+
+  /** The cascade's slice epoch: land the epoch's ops on the driver, net
+    * them per distinct raw row and fold adds AND removals through
+    * [[sessionSliceEpoch]]. */
+  private def sessionSliceFold(ops: DataFrame): Boolean = {
+    val payload = ops.drop("rw_timestamp")
+    val rows = payload.limit(cascadeLocalMax + 1).collect()
+    // refusal, a delta past cascadeLocalMax
+    if (rows.length > cascadeLocalMax) return false
+    val rawSchema = innerState.get.schema
+    val opIdx = payload.schema.fieldIndex("op")
+    val colIdx = rawSchema.fieldNames.toIndexedSeq.map(payload.schema.fieldIndex)
+    def strip(r: Row) = Row.fromSeq(colIdx.map(r.get))
+    val (adds, dels) = rows.partition(r =>
+      r.getString(opIdx) == Changelog.OpInsert || r.getString(opIdx) == Changelog.OpUpdateInsert)
+    sessionSliceEpoch(signedRows(adds.map(strip), dels.map(strip)), rawSchema)
+  }
+
 
   /** Advance the fold-side watermark from an epoch's inserted rows (max
     * event time − declared delay). No-op without a declared watermark. */

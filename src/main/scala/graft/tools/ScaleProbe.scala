@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * 1M rows), so epoch latency isolates state growth from delta size.
   * Spill (100k tail bound) and compaction engage repeatedly on the way
   * up, so the curve covers the paths a 100 TB deployment lives on.
-  * Prints one line per 8-epoch window: wall, jobs, shuffle bytes.
+  * Prints one line per 8-epoch window: wall, jobs, shuffle bytes, then
+  * the window's jobs per epoch by `graft.phase` tag.
   *
   * Modes (round-16 verdict #5 — different carried-state shapes):
   *  - pkagg:   keyed COUNT/SUM fold (aux state; the r15 curve)
@@ -43,9 +44,15 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val shuffle = new java.util.concurrent.atomic.AtomicLong
+    // jobs per `graft.phase` tag (the phase part of `view:phase`)
+    val phaseJobs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        val tag = Option(j.properties).flatMap(p => Option(p.getProperty("graft.phase")))
+          .map(_.split(':').last).getOrElse("untagged")
+        phaseJobs.merge(tag, 1L, (a: java.lang.Long, b: java.lang.Long) => a + b)
+      }
       override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         shuffle.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     })
@@ -102,6 +109,10 @@ object ScaleProbe {
         println(f"WINDOW epochs ${e - 7}%3d-$e%3d: wall=$dt%7.2f s  " +
           f"latency=${dt / 8}%6.3f s/epoch  jobs/epoch=${dj / 8.0}%6.3f  " +
           f"shuffleBytes=$ds%10d  history=${t.historyRows}%8d  mode-ok=${probe(mv)}")
+        import scala.jdk.CollectionConverters._
+        println("  jobs/epoch by phase: " + phaseJobs.asScala.toSeq.sortBy(_._1)
+          .map { case (p, n) => f"$p=${n / 8.0}%.3f" }.mkString(" "))
+        phaseJobs.clear()
         winT0 = System.nanoTime(); winJ0 = jobs.get; winS0 = shuffle.get
       }
     }

@@ -44,10 +44,10 @@ class CountersSpec extends SparkSpec {
     // seeds the no-base tier from the backfill frame (no distributed merge
     // and probe), and every epoch diffs the overlay's driver slices
     "s_mv_cascade_epoch" -> (2.0, 171094L),
-    // re-pinned for round 16's single-collect session epoch: while the
-    // affected-slice tier is live the delta is collected ONCE (no
-    // localCheckpoint, no emptiness probes, no second limit-collect)
-    "s_mv_session_maintain" -> (2.625, 35502L),
+    // re-pinned for the session MV in CarriedOverlay: the first epoch
+    // takes the slice epoch too (no full re-sessionize to seed a tier), so
+    // every epoch is the delta collect and the slice re-sessionize
+    "s_mv_session_maintain" -> (2.0, 4096L),
     // re-pinned for round 16's fused grouped-top-N epoch: the touched-group
     // recompute plan is no longer materialized before the truncate — the
     // ranked sort-limit evaluates it as part of its single job
@@ -77,6 +77,11 @@ class CountersSpec extends SparkSpec {
     // new rows and a flat checkpoint whenever the touched set outgrows the
     // bound; no state shuffle; ops are written driver-side
     "s_mv_left_join_fold_overbound" -> (3.5, 4096L),
+    // the session MV past its driver tier: both overlays checkpoint flat
+    // once they outgrow the bound, then each epoch reads the base through
+    // two range probes (a broadcast and a collect each) beside its delta
+    // collect and slice re-sessionize; no state shuffle
+    "s_mv_session_maintain_overbound" -> (5.125, 4096L),
   )
 
   for (d <- Bench.streamDefs) {

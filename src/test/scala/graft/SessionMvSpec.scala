@@ -474,17 +474,21 @@ class SessionMvSpec extends SparkSpec {
     t.insert(Seq(Row("b", ts(1) /* before b's [5,15) start */, 6.0)))
     rw.flush()
     parity()
-    // over-bound: the raw state outgrows the shrunken bound mid-epoch —
-    // the tier must hand off monotonically and stay correct
-    m.sessionRawLocalMax = 8
+    // past the bound: the raw state (11 rows) and the face (8 sessions)
+    // outgrow a shrunken cascadeLocalMax and carry on as base plus
+    // overlay — no latch, and no epoch re-sessionizes the whole state
+    m.cascadeLocalMax = 6
+    val evals = m.statementEvals
     t.insert((100 to 104).map(i => Row("c", ts(i.toLong * 60), i.toDouble)))
     rw.flush()
-    assert(!m.sessionSliceActive, "outgrowing the bound must drop the tier")
+    assert(!m.sessionSliceActive, "outgrowing the bound must leave the no-base tier")
     parity()
-    t.insert(Seq(Row("c", ts(100L * 60 + 5), 9.0))) // post-latch epochs stay correct
+    val carried = m.overlayEpochs
+    t.insert(Seq(Row("c", ts(100L * 60 + 5), 9.0)))
     rw.flush()
-    assert(!m.sessionSliceActive, "the latch is monotone")
+    assert(m.overlayEpochs > carried, "the epoch past the bound must carry over the base")
     parity()
+    assert(m.statementEvals == evals, "no epoch may re-sessionize the whole state")
     assert(m.isSessionMode, "no demotion through the hand-off")
     rw.close()
   }
